@@ -1,6 +1,10 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.types.StructType
 
 /**
  * Materialization policy — SURVEY §2.1 S6/S8.
@@ -135,8 +139,7 @@ object Materialize {
     spark.sql(s"ALTER TABLE `$stage` RENAME TO `$name`")
     dropWithLocation(spark, old)
     spark.catalog.refreshTable(name)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.conf.warehousePath, name.toLowerCase)
+    val loc = new Path(spark.sessionState.conf.warehousePath, name.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(loc).count(_.getPath.getName.endsWith(".parquet")).toLong
   }
@@ -170,12 +173,11 @@ object Materialize {
    * table, and `sortCol` optionally re-sorts so min/max row-group stats
    * stay selective after the rewrite.
    */
-  def compact(spark: SparkSession, path: String, targetFileMB: Int = 128,
+  def compact(spark: SparkSession, path: String, targetFileMB: Int = TargetFileMB,
               sortCol: Option[String] = None): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val nFiles = math.max(1L, bytes / (targetFileMB.toLong << 20)).toInt
+    val nFiles = filesFor(fs.getContentSummary(p).getLength, targetFileMB)
     val df = spark.read.parquet(path)
     val arranged = sortCol match {
       case Some(c) => df.repartitionByRange(nFiles, org.apache.spark.sql.functions.col(c))
@@ -191,8 +193,15 @@ object Materialize {
     fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")).toLong
   }
 
+  /** Target file size of a table rewrite ([[compact]], [[replaceTable]]). */
+  private val TargetFileMB = 128
+
+  /** Files for `bytes` of table data at ~`targetFileMB` each (at least one). */
+  private def filesFor(bytes: Long, targetFileMB: Int): Int =
+    math.min(Int.MaxValue, math.max(1L, bytes / (targetFileMB.toLong << 20))).toInt
+
   /** Best-effort recursive delete of a local scratch directory. */
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     if (Files.exists(p)) {
       val stream = Files.walk(p)
@@ -202,14 +211,46 @@ object Materialize {
     }
   }
 
-  /** Drop a managed table AND its warehouse location (a location can
-    * survive from a previous session whose in-memory catalog is gone). */
+  /** The warehouse's filesystem and qualified root. */
+  private def warehouseOf(spark: SparkSession): (FileSystem, Path) = {
+    val wh = new Path(spark.sessionState.conf.warehousePath)
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(wh))
+  }
+
+  /** A catalog table's metadata (None for a missing table or a temp view). */
+  private def tableMeta(spark: SparkSession, name: String): Option[CatalogTable] = {
+    val id = TableIdentifier(name)
+    val cat = spark.sessionState.catalog
+    if (cat.tableExists(id)) Some(cat.getTableMetadata(id)) else None
+  }
+
+  private def locationOf(spark: SparkSession, name: String): Option[Path] =
+    tableMeta(spark, name).map(m => new Path(m.location))
+
+  private def isUnder(fs: FileSystem, root: Path)(p: Path): Boolean =
+    fs.makeQualified(p).toUri.getPath.startsWith(root.toUri.getPath + "/")
+
+  /** The [[replaceTable]] version directories of `name` in the warehouse
+    * (`<name>__v<32 hex>`), live or orphaned. */
+  private[graft] def versionDirs(spark: SparkSession, name: String): Seq[Path] = {
+    val (fs, wh) = warehouseOf(spark)
+    val version = (java.util.regex.Pattern.quote(name.toLowerCase) + "__v[0-9a-f]{32}").r
+    if (!fs.exists(wh)) Nil
+    else fs.listStatus(wh).toSeq.map(_.getPath).filter(p => version.matches(p.getName))
+  }
+
+  /** Drop a table AND its data: the registered location when it lies
+    * under the warehouse (an external location elsewhere is not ours to
+    * delete), every [[replaceTable]] version directory of the name, and
+    * the default managed location (which can survive from a previous
+    * session whose in-memory catalog is gone). */
   def dropWithLocation(spark: SparkSession, name: String): Unit = {
+    val (fs, wh) = warehouseOf(spark)
+    val registered = locationOf(spark, name).filter(isUnder(fs, wh))
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.conf.warehousePath, name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    (registered.toSeq ++ versionDirs(spark, name) :+ new Path(wh, name.toLowerCase))
+      .foreach(fs.delete(_, true))
   }
 
   /**
@@ -384,31 +425,70 @@ object Materialize {
   /**
    * Atomically replace a table's full contents with `df` — which MAY
    * read from the table itself (the delete+insert merge and the
-   * streaming-upsert fold both do). The replacement is written ONCE to
-   * a staging dir on the warehouse filesystem, then swapped in with a
-   * rename and registered over the moved files — a cache barrier is not
-   * enough (DROP TABLE uncaches every plan reading the table, which
-   * would force the rewrite to recompute from deleted files), and
-   * re-writing the staged data through saveAsTable would pay the
-   * full-table write twice. A caller that has already folded old and
-   * new state into one frame calls this directly instead of paying
-   * [[AsIncremental]]'s additional keep-rows anti-join over the table.
+   * streaming-upsert fold both do). A location swap:
+   *
+   *  1. `df` is written ONCE to a fresh version directory
+   *     `<warehouse>/<name>__v<uuid>`, as ~128 MB files sized by the
+   *     bytes of the version it replaces (the [[compact]] rule; a first
+   *     version is sized by Catalyst's estimate of `df`).
+   *  2. The catalog is pointed at it: `ALTER TABLE … SET LOCATION`, or
+   *     on first creation `catalog.createTable` with the frame's schema
+   *     (all columns nullable, as parquet stores them), so no job infers
+   *     the schema from file footers.
+   *  3. The replaced version — and any version orphaned by an earlier
+   *     crash — is deleted.
+   *
+   * Failure positions: a failure in 1 or 2 deletes the new version and
+   * leaves the previous one registered and readable — nothing was
+   * dropped, so no earlier fold is lost. A failure in 3 leaves the new
+   * version live and the old directory orphaned; the next replace or
+   * [[dropWithLocation]] sweeps it. A previous location outside the
+   * warehouse (an external table) is swapped away from but never
+   * deleted. A replacement that changes the table's shape (schema,
+   * partitioning, bucketing or format) cannot reuse the catalog entry:
+   * it is dropped and re-created over the new version, which is not
+   * atomic.
+   *
+   * A caller that has already folded old and new state into one frame
+   * calls this directly instead of paying [[AsIncremental]]'s additional
+   * keep-rows anti-join over the table.
    */
   def replaceTable(spark: SparkSession, name: String, df: DataFrame): DataFrame = {
-    val warehouse = new org.apache.hadoop.fs.Path(
-      spark.sessionState.conf.warehousePath)
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(warehouse, s"_graft_stage_${name.toLowerCase}")
-    fs.delete(stage, true)
+    val (fs, wh) = warehouseOf(spark)
+    val schema = StructType(df.schema.map(_.copy(nullable = true)))
+    val meta = tableMeta(spark, name)
+    val prev = meta.map(m => fs.makeQualified(new Path(m.location)))
+    val version = new Path(wh,
+      s"${name.toLowerCase}__v${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    // a first version has no bytes to size by: Catalyst's size estimate
+    // of the frame stands in (no job; unknown means keep the partitioning)
+    val bytes = prev.fold(df.queryExecution.optimizedPlan.stats.sizeInBytes)(p =>
+      BigInt(fs.getContentSummary(p).getLength))
+    val sized =
+      if (bytes < spark.sessionState.conf.defaultSizeInBytes)
+        df.coalesce(filesFor(bytes.toLong, TargetFileMB))
+      else df
     try {
-      df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      dropWithLocation(spark, name)
-      val dest = new org.apache.hadoop.fs.Path(
-        fs.makeQualified(warehouse), name.toLowerCase)
-      if (!fs.rename(stage, dest))
-        throw new java.io.IOException(s"rename $stage -> $dest failed")
-      spark.sql(s"CREATE TABLE `$name` USING parquet LOCATION '${dest.toString}'")
-    } finally fs.delete(stage, true)
+      sized.write.parquet(version.toString)
+      meta match {
+        case Some(m) if m.provider.exists(_.equalsIgnoreCase("parquet")) &&
+            m.partitionColumnNames.isEmpty &&
+            m.bucketSpec.isEmpty && m.schema.catalogString == schema.catalogString =>
+          spark.sql(s"ALTER TABLE `$name` SET LOCATION '$version'")
+        case _ =>
+          meta.foreach(_ => spark.sql(s"DROP TABLE `$name`"))
+          spark.catalog.createTable(name, "parquet", schema, Map("path" -> version.toString))
+      }
+    } catch {
+      case e: Throwable =>
+        // unless the catalog already moved off the previous version,
+        // nothing references the new one
+        if (locationOf(spark, name).map(fs.makeQualified) == prev) fs.delete(version, true)
+        throw e
+    }
+    (prev.filter(isUnder(fs, wh)) ++ versionDirs(spark, name))
+      .filter(fs.makeQualified(_) != version)
+      .foreach(fs.delete(_, true))
     spark.table(name)
   }
 }

@@ -900,27 +900,21 @@ object StreamingQueries {
     // commutative, so batch order cannot matter). Drained-to-completion
     // table == the one-shot batch aggregate.
     QueryDef("st_incremental_upsert", (s, dir) => withStatePartitions(s, 8) {
-      val debug = sys.env.contains("GRAFT_INGEST_DEBUG")
-      var t0 = System.nanoTime()
-      def lap(p: String): Unit = if (debug) {
-        val now = System.nanoTime()
-        println(f"[upsert-phase] $p%-12s ${(now - t0) / 1e9}%.3f s"); t0 = now
-      }
       val table = "graft_stream_user_stats"
       graft.core.Materialize.dropWithLocation(s, table)
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val stage = java.nio.file.Files.createTempDirectory("graft_st_ups").toString
-      // plain read (no imposed schema): works against either fixture
-      // ts encoding; the staged files inherit it and readEvents' probe
-      // picks the matching conversion
-      s.read.parquet(s"$dir/events.parquet")
-        .repartition(4).write.mode("overwrite").parquet(stage)
-      lap("stage-write")
-      val q = EventStream.upsertUserStats(
-        EventStream.readEvents(s, stage, globFilter = "*.parquet",
-          maxFilesPerTrigger = 1), table)
-      try q.processAllAvailable() finally q.stop()
-      lap("drain")
+      val stage = java.nio.file.Files.createTempDirectory("graft_st_ups")
+      try {
+        // plain read (no imposed schema): works against either fixture
+        // ts encoding; the staged files inherit it and readEvents' probe
+        // picks the matching conversion
+        s.read.parquet(s"$dir/events.parquet")
+          .repartition(4).write.mode("overwrite").parquet(stage.toString)
+        val q = EventStream.upsertUserStats(
+          EventStream.readEvents(s, stage.toString, globFilter = "*.parquet",
+            maxFilesPerTrigger = 1), table)
+        try q.processAllAvailable() finally q.stop()
+      } finally graft.core.Materialize.deleteRecursively(stage)
       s.table(table).drop("__last_batch")
     }, Some("""SELECT user_id, count(*) AS n_events, max(ts) AS last_ts
       FROM events GROUP BY user_id""")),

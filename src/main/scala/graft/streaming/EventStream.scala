@@ -288,68 +288,52 @@ object EventStream {
 
   /**
    * Streaming upsert into a warehouse table (foreachBatch → incremental
-   * merge): each micro-batch aggregates per user, COMBINES with the
-   * table's current row (sum counts, max timestamps — the fold must be
-   * commutative across batches because micro-batch order is not a
-   * contract), and merges by key through
-   * [[graft.core.Materialize.AsIncremental]] — the streaming twin of the
-   * dbt incremental mart. On a transactional table format the
-   * combine+merge collapses into one MERGE INTO; the per-batch shape is
-   * identical.
+   * merge): each micro-batch is folded into the table's per-user rows
+   * by [[foldUserStats]] and the fold — already the next table state —
+   * commits through [[graft.core.Materialize.replaceTable]]'s location
+   * swap: the streaming twin of the dbt incremental mart. On a
+   * transactional table format the fold+swap collapses into one MERGE
+   * INTO; the per-batch shape is identical.
+   *
+   * foreachBatch is at-least-once: a batch can REPLAY after a crash
+   * (the table commit landed, the offset commit did not), and the fold
+   * is not idempotent — so every row carries the id of the last batch
+   * folded in (`__last_batch`), and an already-applied id skips. The
+   * watermark is read from the table ONCE per stream start and then
+   * held in memory ([[CorpusIngest.guardedIngest]]): within a run batch
+   * ids only grow, so no trigger pays a guard job, and a restart
+   * re-seeds from the table, which skips exactly the committed prefix.
+   * With the checkpointed offsets this makes the upsert effectively
+   * exactly-once (the guard a MERGE-by-batch-id gives on a
+   * transactional format).
    */
   def upsertUserStats(events: DataFrame, table: String,
                       checkpoint: Option[String] = None): StreamingQuery = {
     val spark = events.sparkSession
-    val step: (Dataset[org.apache.spark.sql.Row], Long) => Unit = { (batch, batchId) =>
-      val debug = sys.env.contains("GRAFT_INGEST_DEBUG")
-      var tPrev = System.nanoTime()
-      def lap(phase: String): Unit = if (debug) {
-        val now = System.nanoTime()
-        println(f"[ingest-phase] batch=$batchId $phase%-14s ${(now - tPrev) / 1e9}%.3f s")
-        tPrev = now
-      }
-      // foreachBatch is at-least-once: a batch can REPLAY after a crash,
-      // and this fold is not idempotent — so every row carries the id of
-      // the last batch folded in, and an already-applied id skips. With
-      // the checkpointed offsets this makes the upsert effectively
-      // exactly-once (the same guard a MERGE-by-batch-id gives on a
-      // transactional format).
-      val lastApplied =
-        if (!spark.catalog.tableExists(table)) -1L
-        else spark.table(table)
-          .agg(coalesce(max(col("__last_batch")), lit(-1L))).head().getLong(0)
-      lap("replay-guard")
-      if (batchId > lastApplied) {
-        val bagg = batch.groupBy("user_id")
-          .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts"))
-        // ONE full_outer join folds old and new state for every user —
-        // batch-only users enter, carried users pass through, shared
-        // users combine (sum / max). The fold already IS the next table
-        // state, so it commits via replaceTable directly instead of
-        // AsIncremental, whose keep-rows anti-join would re-read the
-        // table to rediscover what this join already knows (measured
-        // ~0.2 s/trigger of pure rework at micro-batch size).
-        val merged =
-          if (!spark.catalog.tableExists(table)) bagg
-          else {
-            val prev = spark.table(table).select(col("user_id"),
-              col("n_events").as("__pn"), col("last_ts").as("__pt"))
-            bagg.join(prev, Seq("user_id"), "full_outer")
-              .select(col("user_id"),
-                (coalesce(col("n_events"), lit(0L))
-                  + coalesce(col("__pn"), lit(0L))).as("n_events"),
-                greatest(coalesce(col("last_ts"), col("__pt")),
-                  coalesce(col("__pt"), col("last_ts"))).as("last_ts"))
-          }
+    CorpusIngest.guardedIngest(events, checkpoint) { (batch, batchId, known) =>
+      val lastApplied = known.getOrElse(CorpusIngest.lastAppliedIn(spark, table))
+      if (batchId <= lastApplied) lastApplied
+      else {
+        val prev = if (spark.catalog.tableExists(table)) Some(spark.table(table)) else None
         graft.core.Materialize.replaceTable(spark, table,
-          merged.withColumn("__last_batch", lit(batchId)))
-        lap("merge-commit")
+          foldUserStats(batch, prev).withColumn("__last_batch", lit(batchId)))
+        batchId
       }
-      ()
     }
-    val w = events.writeStream
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c))
-      .foreachBatch(step).start()
+  }
+
+  /** One upsert fold, exposed for plan-shape pinning: the batch's rows
+    * enter as `(user_id, 1, ts)` partial states beside the table's
+    * `(user_id, n_events, last_ts)` rows, and ONE `groupBy(user_id)`
+    * combines them (sum counts, max timestamps — commutative, so
+    * micro-batch order, which is not a contract, cannot matter). One
+    * exchange and no join; a NULL user_id folds into a single group,
+    * exactly as the batch `GROUP BY` does. */
+  def foldUserStats(batch: DataFrame, prev: Option[DataFrame]): DataFrame = {
+    val fresh = batch.select(col("user_id"), lit(1L).as("n_events"), col("ts").as("last_ts"))
+    prev.fold(fresh)(t => fresh.unionByName(t.select("user_id", "n_events", "last_ts")))
+      .groupBy("user_id")
+      .agg(sum(col("n_events")).as("n_events"), max(col("last_ts")).as("last_ts"))
   }
 
   /** Start a parquet sink with checkpointing (the streaming S4). */

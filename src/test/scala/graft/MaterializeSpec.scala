@@ -158,6 +158,60 @@ class MaterializeSpec extends SparkSpec {
     Materialize.dropWithLocation(spark, name)
   }
 
+  test("replaceTable: a failed write leaves the previous version registered and no partial version") {
+    val name = "graft_test_replace_fail"
+    Materialize.dropWithLocation(spark, name)
+    try {
+      Materialize.replaceTable(spark, name,
+        spark.range(0, 10).select(col("id").as("k"), lit("a").as("v")))
+      val live = Materialize.versionDirs(spark, name)
+      assert(live.size == 1)
+      val bad = spark.range(0, 100, 1, 4).select(col("id").as("k"),
+        when(col("id") === 99L, raise_error(lit("boom"))).otherwise(lit("b")).as("v"))
+      intercept[Exception](Materialize.replaceTable(spark, name, bad))
+      assert(spark.table(name).as[(Long, String)].collect().toSet ==
+        (0L until 10L).map(_ -> "a").toSet, "previous rows must stay readable")
+      assert(Materialize.versionDirs(spark, name) == live,
+        "the failed write must not leave a partial version dir")
+    } finally Materialize.dropWithLocation(spark, name)
+  }
+
+  test("replaceTable keeps one version dir per table; dropWithLocation removes it") {
+    val name = "graft_test_replace_versions"
+    Materialize.dropWithLocation(spark, name)
+    Materialize.replaceTable(spark, name, spark.range(0, 10).toDF("k"))
+    for (i <- 1 to 3) {
+      // each replace reads the version it replaces, as the upsert fold does
+      Materialize.replaceTable(spark, name,
+        spark.table(name).unionByName(spark.range(10 * i, 10 * (i + 1)).toDF("k")))
+      assert(spark.table(name).as[Long].collect().toSet == (0L until 10L * (i + 1)).toSet)
+      val dirs = Materialize.versionDirs(spark, name)
+      assert(dirs.size == 1, s"exactly one version dir expected, saw $dirs")
+      val loc = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(name)).location
+      assert(new org.apache.hadoop.fs.Path(loc).toUri.getPath == dirs.head.toUri.getPath,
+        "the catalog must point at the live version")
+    }
+    Materialize.dropWithLocation(spark, name)
+    assert(!spark.catalog.tableExists(name))
+    assert(Materialize.versionDirs(spark, name).isEmpty)
+  }
+
+  test("replaceTable re-registers the schema when a replace widens a column") {
+    val name = "graft_test_replace_widen"
+    Materialize.dropWithLocation(spark, name)
+    try {
+      Materialize.replaceTable(spark, name, Seq((1L, 1)).toDF("k", "v"))
+      // the delete+insert merge widens v to BIGINT through its union
+      materialize(spark, name, Seq((2L, 5000000000L)).toDF("k", "v"),
+        AsIncremental(uniqueKey = Seq("k")))
+      assert(spark.table(name).schema("v").dataType == org.apache.spark.sql.types.LongType)
+      assert(spark.table(name).as[(Long, Long)].collect().toSet ==
+        Set((1L, 1L), (2L, 5000000000L)))
+      assert(Materialize.versionDirs(spark, name).size == 1)
+    } finally Materialize.dropWithLocation(spark, name)
+  }
+
   test("incremental without key or partitions is rejected") {
     val name = "graft_test_inc_bad"
     Materialize.dropWithLocation(spark, name)

@@ -581,6 +581,26 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("upsert fold: one exchange against the table, no join and no sort") {
+    import org.apache.spark.sql.execution.{SortExec, joins}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.streaming.EventStream.foldUserStats
+    val table = "graft_test_fold_plan"
+    graft.core.Materialize.dropWithLocation(spark, table)
+    try {
+      val events = graft.core.Tables.events(spark, sfDir)
+      graft.core.Materialize.replaceTable(spark, table, foldUserStats(events, None))
+      val p = foldUserStats(events, Some(spark.table(table))).queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      assert(helper.collect(p) { case e: ShuffleExchangeLike => e }.size == 1,
+        s"the fold must shuffle exactly once:\n$p")
+      assert(helper.collect(p) { case j: joins.SortMergeJoinExec => j }.isEmpty,
+        s"the fold must not join the table:\n$p")
+      assert(helper.collect(p) { case s: SortExec => s }.isEmpty, s"no sort:\n$p")
+    } finally graft.core.Materialize.dropWithLocation(spark, table)
+  }
+
   test("j16: interval-overlap join plans as an equi-join on tile, not a nested loop") {
     val p = plan("j16_interval_overlap")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

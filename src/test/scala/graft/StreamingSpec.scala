@@ -152,6 +152,76 @@ class StreamingSpec extends SparkSpec {
     graft.core.Materialize.dropWithLocation(spark, table)
   }
 
+  test("upsert folds NULL user_ids into one row across triggers, as the batch GROUP BY does") {
+    val table = "graft_test_upsert_nulls"
+    graft.core.Materialize.dropWithLocation(spark, table)
+    val stage = java.nio.file.Files.createTempDirectory("graft_upsert_nulls").toString
+    def withNulls(df: org.apache.spark.sql.DataFrame) = df.withColumn("user_id",
+      when(col("event_id") % 5 === 0, lit(null).cast("long")).otherwise(col("user_id")))
+    val src = withNulls(spark.read.parquet(s"$sfDir/events.parquet"))
+    // two files, each holding NULL-user rows, drained one per trigger
+    for (half <- 0 to 1)
+      src.filter(col("event_id") % 2 === half).coalesce(1)
+        .write.mode("append").parquet(stage)
+    try {
+      val q = EventStream.upsertUserStats(
+        EventStream.readEvents(spark, stage, globFilter = "*.parquet",
+          maxFilesPerTrigger = 1), table)
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
+        "the feed must fold in over at least two triggers")
+      val streamed = spark.table(table).drop("__last_batch")
+      val batch = withNulls(graft.core.Tables.events(spark, sfDir))
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts"))
+      assert(streamed.filter(col("user_id").isNull).count() == 1,
+        "NULL users must fold into one group")
+      assert(streamed.count() == batch.count())
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+        "drained upsert must equal the one-shot GROUP BY user_id")
+    } finally graft.core.Materialize.dropWithLocation(spark, table)
+  }
+
+  test("upsert replay at the commit boundary is skipped by the re-seeded watermark") {
+    val table = "graft_test_upsert_replay"
+    graft.core.Materialize.dropWithLocation(spark, table)
+    val stage = java.nio.file.Files.createTempDirectory("graft_replay_stage").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay_ckpt").toString
+    val src = spark.read.parquet(s"$sfDir/events.parquet")
+    for (part <- 0 to 2)
+      src.filter(col("event_id") % 3 === part).coalesce(1)
+        .write.mode("append").parquet(stage)
+    def drain() = {
+      val q = EventStream.upsertUserStats(
+        EventStream.readEvents(spark, stage, globFilter = "*.parquet",
+          maxFilesPerTrigger = 1), table, checkpoint = Some(ckpt))
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    try {
+      drain()
+      // crash between the last batch's table commit and its offset
+      // commit: the table holds the fold, the checkpoint lacks commits/<n>
+      val commits = new java.io.File(ckpt, "commits")
+      val last = commits.list().filter(_.matches("\\d+")).map(_.toLong).max
+      assert(last >= 2, s"three files must drain as three batches, last = $last")
+      for (f <- Seq(s"$last", s".$last.crc")) new java.io.File(commits, f).delete()
+      val q2 = drain()
+      // (a skipped batch reads no rows, so its progress reports none)
+      assert(q2.recentProgress.map(_.batchId).contains(last) &&
+        new java.io.File(commits, s"$last").exists,
+        "the restart must re-run and commit the uncommitted batch")
+      assert(spark.table(table).agg(max(col("__last_batch"))).head().getLong(0) == last)
+      val streamed = spark.table(table).drop("__last_batch")
+      val batch = graft.core.Tables.events(spark, sfDir)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts"))
+      assert(streamed.count() == batch.count())
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+        "a replayed batch must not fold in twice")
+    } finally graft.core.Materialize.dropWithLocation(spark, table)
+  }
+
   test("flatMapGroupsWithState emits only closed sessions, in append mode") {
     val sessions = EventStream.sessionizeClosed(
       EventStream.readEvents(spark, sfDir), gapMinutes = 30)
