@@ -840,15 +840,17 @@ object ScaleProbe {
     }
 
     // ---- sketch monitors: per-trigger wall across trigger count ---------
-    // the claim under test (SCALE.md, argued r9 from the partition
-    // layout, measured here): the per-trigger cost of the HLL/Bloom/CMS
-    // monitors is FLAT in monitor age — the replay guard reads one
-    // `__pb` partition, the bounded standing tables list O(triggers)
-    // single-file partitions, and the compaction cadence
-    // (compactEvery=8, the wired default posture) collapses even that
+    // the claim under test (SCALE.md, measured here): the per-trigger
+    // cost of the HLL/Bloom/CMS monitors is FLAT in monitor age — the
+    // replay guard is an in-memory watermark on the streaming path, the
+    // bounded standing tables grow by one file per trigger, and the
+    // compaction cadence (compactEvery=8, the wired default posture,
+    // each compaction a replaceTable location swap) collapses even that
     // growth. Each trigger folds a constant-size batch of FRESH keys
     // (per-batch prefix) through the same apply* path the streaming
-    // ingest uses; first-4 vs last-4 trigger means expose any growth.
+    // ingest uses — called directly, so without a watermark each apply
+    // also runs the guard-table probe; first-4 vs last-8 trigger means
+    // expose any growth.
     if (section("sketchtriggers")) {
       val trigSteps = sys.env.get("SPARK_GRAFT_TRIGS")
         .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(4, 32, 128))

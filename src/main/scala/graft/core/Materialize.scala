@@ -3,7 +3,10 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.GraftPlanBridge
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -84,37 +87,31 @@ object Materialize {
    * family appends per micro-batch — accretes one file per touched
    * bucket per append, and scans eventually drown in per-file
    * open/footer cost; this is the periodic maintenance step that lets
-   * an append-forever index stay scannable. The pre-write
-   * `repartition(buckets, cols)` uses the same hash as the bucket spec,
-   * so each task holds exactly one bucket and writes exactly one file.
-   *
-   * Crash-safe via rename-swap: the compacted copy is fully written to
-   * a stage table first, then the catalog swaps names (original →
-   * `__compact_old` → dropped). A crash between the renames leaves the
-   * data intact under `<name>__compact_old`, never lost.
-   * Returns the parquet file count after the rewrite.
+   * an append-forever index stay scannable. A [[bucketRewrite]] with
+   * `xform = identity`: the same location swap and the same obligation
+   * to run quiesced relative to appends. Returns the parquet file count
+   * after the rewrite.
    */
   def bucketCompact(spark: SparkSession, name: String,
                     buckets: Int, bucketCols: Seq[String]): Long =
     bucketRewrite(spark, name, buckets, bucketCols)(identity)
 
   /**
-   * Staged rename-swap rewrite of a bucketed table through `xform`,
-   * preserving the bucket spec (and so every exchange-free join the
-   * layout pre-paid). [[bucketCompact]] is `xform = identity`;
-   * [[bucketForget]] is an anti-join. Same crash-safety as before: the
-   * rewritten copy is fully written to a stage table, then the catalog
-   * swaps names — a crash between the renames leaves the data intact
-   * under `<name>__compact_old`, never lost. Returns the parquet file
-   * count after the rewrite.
+   * Rewrite a bucketed table through `xform`, preserving the bucket
+   * spec (and so every exchange-free join the layout pre-paid):
+   * [[bucketCompact]] is `xform = identity`, [[bucketForget]] an
+   * anti-join. Commits as a [[replaceTable]] location swap (the version
+   * is written with the table's own bucket spec), so a crash leaves one
+   * complete version registered. Run quiesced relative to appends: an
+   * append landing in the old version mid-rewrite is swapped away with
+   * it. The pre-write `repartition(buckets, cols)` uses the bucket
+   * spec's hash, so each task writes exactly one bucket's file. Returns
+   * the parquet file count of the registered version.
    */
   def bucketRewrite(spark: SparkSession, name: String,
                     buckets: Int, bucketCols: Seq[String])
                    (xform: DataFrame => DataFrame): Long = {
-    val stage = s"${name}__compact_stage"
-    val old = s"${name}__compact_old"
-    dropWithLocation(spark, stage)
-    dropWithLocation(spark, old)
+    import org.apache.spark.sql.functions.col
     // the repartition below matches the source's bucketed partitioning,
     // so the planner elides its shuffle — which is only correct if the
     // scan actually GROUPS files by bucket. Auto-bucketed-scan would
@@ -128,18 +125,13 @@ object Materialize {
     val prevAuto = spark.conf.get(autoKey)
     spark.conf.set(autoKey, "false")
     try {
-      xform(spark.table(name))
-        .repartition(buckets, bucketCols.map(org.apache.spark.sql.functions.col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .saveAsTable(stage)
+      val t = spark.table(name)
+      // back in the table's column order (a USING join moves its key
+      // first), so the swap keeps the catalog entry and its bucket spec
+      replaceTable(spark, name, xform(t).select(t.columns.map(col): _*)
+        .repartition(buckets, bucketCols.map(col): _*))
     } finally spark.conf.set(autoKey, prevAuto)
-    spark.sql(s"ALTER TABLE `$name` RENAME TO `$old`")
-    spark.sql(s"ALTER TABLE `$stage` RENAME TO `$name`")
-    dropWithLocation(spark, old)
-    spark.catalog.refreshTable(name)
-    val loc = new Path(spark.sessionState.conf.warehousePath, name.toLowerCase)
+    val loc = locationOf(spark, name).get
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(loc).count(_.getPath.getName.endsWith(".parquet")).toLong
   }
@@ -302,15 +294,10 @@ object Materialize {
           lit(true).as("is_current")): _*)
       val keptOpen = open.join(changed.select(keys.map(col): _*), keys, "left_anti")
       val newOpen = stamped.join(open.select(keys.map(col): _*), keys, "left_anti")
-      val next = closedHist.unionByName(keptOpen).unionByName(closedNow)
-        .unionByName(openedNow).unionByName(newOpen)
-      // stage-and-swap: `next` reads the table it is about to replace
-      val stagePath = java.nio.file.Files.createTempDirectory("graft_snap_stage")
-      try {
-        next.write.mode(SaveMode.Overwrite).parquet(stagePath.toString)
-        materialize(spark, name,
-          spark.read.parquet(stagePath.toString), AsTable())
-      } finally deleteRecursively(stagePath)
+      // `next` reads the table it replaces: replaceTable writes it to a
+      // fresh version before the catalog moves off the old one
+      replaceTable(spark, name, closedHist.unionByName(keptOpen)
+        .unionByName(closedNow).unionByName(openedNow).unionByName(newOpen))
     }
   }
 
@@ -424,30 +411,36 @@ object Materialize {
 
   /**
    * Atomically replace a table's full contents with `df` — which MAY
-   * read from the table itself (the delete+insert merge and the
-   * streaming-upsert fold both do). A location swap:
+   * read from the table itself (the delete+insert merge, the
+   * streaming-upsert fold, the SCD2 [[snapshot]], the sketch
+   * compactions and [[bucketRewrite]] all do, and all commit through
+   * here). A location swap:
    *
    *  1. `df` is written ONCE to a fresh version directory
-   *     `<warehouse>/<name>__v<uuid>`, as ~128 MB files sized by the
-   *     bytes of the version it replaces (the [[compact]] rule; a first
-   *     version is sized by Catalyst's estimate of `df`).
+   *     `<warehouse>/<name>__v<uuid>`. A bucketed table's version is
+   *     written with the table's own bucket spec (one file per bucket
+   *     per task, as `bucketBy` writes); any other version as ~128 MB
+   *     files sized by the bytes of the version it replaces (the
+   *     [[compact]] rule; a first version is sized by Catalyst's
+   *     estimate of `df`).
    *  2. The catalog is pointed at it: `ALTER TABLE … SET LOCATION`, or
    *     on first creation `catalog.createTable` with the frame's schema
    *     (all columns nullable, as parquet stores them), so no job infers
    *     the schema from file footers.
-   *  3. The replaced version — and any version orphaned by an earlier
-   *     crash — is deleted.
+   *  3. The replaced version — any version orphaned by an earlier
+   *     crash, and the name's default managed directory — is deleted.
    *
-   * Failure positions: a failure in 1 or 2 deletes the new version and
-   * leaves the previous one registered and readable — nothing was
-   * dropped, so no earlier fold is lost. A failure in 3 leaves the new
-   * version live and the old directory orphaned; the next replace or
-   * [[dropWithLocation]] sweeps it. A previous location outside the
+   * Failure positions: a failure in 1 or 2 leaves the previous version
+   * registered and readable — nothing was dropped, so no earlier fold
+   * is lost; the new version is deleted, or, if the process died,
+   * orphaned until the next replace or [[dropWithLocation]] sweeps it.
+   * A failure in 3 leaves the new version live and the old directory
+   * orphaned, swept the same way. A previous location outside the
    * warehouse (an external table) is swapped away from but never
    * deleted. A replacement that changes the table's shape (schema,
-   * partitioning, bucketing or format) cannot reuse the catalog entry:
-   * it is dropped and re-created over the new version, which is not
-   * atomic.
+   * partitioning or format) cannot reuse the catalog entry: it is
+   * dropped and re-created, unbucketed, over the new version, which is
+   * not atomic.
    *
    * A caller that has already folded old and new state into one frame
    * calls this directly instead of paying [[AsIncremental]]'s additional
@@ -458,26 +451,32 @@ object Materialize {
     val schema = StructType(df.schema.map(_.copy(nullable = true)))
     val meta = tableMeta(spark, name)
     val prev = meta.map(m => fs.makeQualified(new Path(m.location)))
+    // a same-shape replace keeps the catalog entry (and its bucket spec)
+    val swappable = meta.exists(m =>
+      m.provider.exists(_.equalsIgnoreCase("parquet")) &&
+        m.partitionColumnNames.isEmpty &&
+        m.schema.catalogString == schema.catalogString)
     val version = new Path(wh,
       s"${name.toLowerCase}__v${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    // a first version has no bytes to size by: Catalyst's size estimate
-    // of the frame stands in (no job; unknown means keep the partitioning)
-    val bytes = prev.fold(df.queryExecution.optimizedPlan.stats.sizeInBytes)(p =>
-      BigInt(fs.getContentSummary(p).getLength))
-    val sized =
-      if (bytes < spark.sessionState.conf.defaultSizeInBytes)
-        df.coalesce(filesFor(bytes.toLong, TargetFileMB))
-      else df
     try {
-      sized.write.parquet(version.toString)
-      meta match {
-        case Some(m) if m.provider.exists(_.equalsIgnoreCase("parquet")) &&
-            m.partitionColumnNames.isEmpty &&
-            m.bucketSpec.isEmpty && m.schema.catalogString == schema.catalogString =>
-          spark.sql(s"ALTER TABLE `$name` SET LOCATION '$version'")
-        case _ =>
-          meta.foreach(_ => spark.sql(s"DROP TABLE `$name`"))
-          spark.catalog.createTable(name, "parquet", schema, Map("path" -> version.toString))
+      meta.filter(_ => swappable).flatMap(_.bucketSpec) match {
+        case Some(spec) => writeBucketed(df, version, spec)
+        case None =>
+          // a first version has no bytes to size by: Catalyst's size
+          // estimate of the frame stands in (no job; unknown means keep
+          // the partitioning)
+          val bytes = prev.fold(df.queryExecution.optimizedPlan.stats.sizeInBytes)(p =>
+            BigInt(fs.getContentSummary(p).getLength))
+          val sized =
+            if (bytes < spark.sessionState.conf.defaultSizeInBytes)
+              df.coalesce(filesFor(bytes.toLong, TargetFileMB))
+            else df
+          sized.write.parquet(version.toString)
+      }
+      if (swappable) spark.sql(s"ALTER TABLE `$name` SET LOCATION '$version'")
+      else {
+        meta.foreach(_ => spark.sql(s"DROP TABLE `$name`"))
+        spark.catalog.createTable(name, "parquet", schema, Map("path" -> version.toString))
       }
     } catch {
       case e: Throwable =>
@@ -486,9 +485,23 @@ object Materialize {
         if (locationOf(spark, name).map(fs.makeQualified) == prev) fs.delete(version, true)
         throw e
     }
-    (prev.filter(isUnder(fs, wh)) ++ versionDirs(spark, name))
+    (prev.filter(isUnder(fs, wh)).toSeq ++ versionDirs(spark, name) :+ new Path(wh, name.toLowerCase))
       .filter(fs.makeQualified(_) != version)
       .foreach(fs.delete(_, true))
     spark.table(name)
   }
+
+  /** Write `df` to `path` laid out by a bucketed table's `spec` — the
+    * files `bucketBy(…).sortBy(…).saveAsTable` writes (bucket id in each
+    * file name, rows sorted within a file), without creating a table.
+    * The writer has no path-only bucketed form, so this plans the same
+    * insert command that `saveAsTable` plans. */
+  private[graft] def writeBucketed(df: DataFrame, path: Path, spec: BucketSpec): Unit =
+    GraftPlanBridge.ofRows(df.sparkSession, InsertIntoHadoopFsRelationCommand(
+      outputPath = path, staticPartitions = Map.empty,
+      ifPartitionNotExists = false, partitionColumns = Nil,
+      bucketSpec = Some(spec), fileFormat = new ParquetFileFormat,
+      options = Map.empty, query = df.queryExecution.analyzed,
+      mode = SaveMode.ErrorIfExists, catalogTable = None, fileIndex = None,
+      outputColumnNames = df.columns.toSeq))
 }

@@ -105,9 +105,6 @@ object CorpusIngest {
     val lastApplied = knownLast.getOrElse(lastAppliedIn(spark, table))
     if (batchId > lastApplied) {
       val fresh = batchSurvivors(batch, idCol, textCol, table)
-      if (sys.env.contains("GRAFT_INGEST_DEBUG"))
-        println(s"[ingest] batch=$batchId last=$lastApplied " +
-          s"in=${batch.count()} fresh=${fresh.count()}")
       val out = fresh.withColumn("__last_batch", lit(batchId))
       if (!exists)
         graft.core.Materialize.bucketTable(spark, table, out,
@@ -157,13 +154,6 @@ object CorpusIngest {
     val docsT = s"${prefix}_docs"
     val bandsT = s"${prefix}_bands"
     val shinglesT = s"${prefix}_shingles"
-    val debug = sys.env.contains("GRAFT_INGEST_DEBUG")
-    var tPrev = System.nanoTime()
-    def lap(phase: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"[ingest-phase] batch=$batchId $phase%-14s ${(now - tPrev) / 1e9}%.3f s")
-      tPrev = now
-    }
     val lastApplied = knownLast.getOrElse(lastAppliedIn(spark, docsT))
     // SCOPED release: everything this trigger computes is materialized
     // by the end of the block, so the operator-internal persist
@@ -198,13 +188,11 @@ object CorpusIngest {
       // so growing the index is a survivor-id semi-join over work
       // already done, not a second full MinHash pass over the survivor
       // text per trigger.
-      lap("setup")
       val (survPlan, batchBands, batchShingles) =
         graft.ext.Dedup.incrementalNearDupWithBatchIndex(batchNew,
           spark.table(bandsT), spark.table(shinglesT), idCol, textCol,
           threshold, shingleK, numHashes, bands)
       val surv = survPlan.localCheckpoint()
-      lap("dedup")
       val survIds = surv.select(col(idCol))
       // safe against cache eviction: these plans read only the batch
       // source and the accepted-docs table, neither of which mutates
@@ -225,13 +213,11 @@ object CorpusIngest {
         buckets = 8, bucketCols = Seq(idCol)) }
       Await.result(fb, Duration.Inf)
       Await.result(fs, Duration.Inf)
-      lap("append-index")
       spark.catalog.refreshTable(bandsT)
       spark.catalog.refreshTable(shinglesT)
       surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
         .write.mode("append").saveAsTable(docsT)
       spark.catalog.refreshTable(docsT)
-      lap("append-docs")
     }
     math.max(batchId, lastApplied)
   }

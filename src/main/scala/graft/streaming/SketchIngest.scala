@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Materialize.replaceTable
 
 /**
  * Streaming cardinality monitor: every micro-batch folds its keys into
@@ -26,150 +27,53 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *
  * Per-trigger cost: one batch-sized register aggregation (64 rows per
  * group out of the shuffle) + a collapse of the standing register
- * table. Batch-carrying tables are physically partitioned by a derived
- * `__pb` copy of batch_id (the data column keeps its type/position;
- * the partition copy exists purely so replay-guard and provenance
- * filters prune to one partition instead of scanning the full trigger
- * history), and bounded sketch-state writes are coalesced to one file
- * per trigger so standing-table reads list O(triggers) files, not
+ * table. Bounded sketch-state writes are coalesced to one file per
+ * trigger so standing-table reads list O(triggers) files, not
  * O(triggers × tasks). For a monitor that lives beyond thousands of
  * triggers, [[compactHll]]/[[compactBloom]]/[[compactCms]] rewrite the
  * standing state to its collapsed form without breaking the replay
  * arguments (each scaladoc carries the proof obligation) — either on
- * the operator's own schedule (quiesced relative to triggers) or wired
- * in-trigger via the ingests' `compactEvery` knob, where quiescence is
- * structural.
+ * the operator's own schedule or wired in-trigger via the ingests'
+ * `compactEvery` knob.
+ *
+ * Every compaction commits through
+ * [[graft.core.Materialize.replaceTable]]'s location swap: the
+ * collapsed state is written in full to a fresh `<table>__v<uuid>`
+ * directory, `ALTER TABLE … SET LOCATION` points the catalog at it,
+ * then the old version is deleted. The standing tables are
+ * unpartitioned parquet, so the swap keeps their catalog entry and
+ * later appends land in the new version. A crash before the
+ * `SET LOCATION` leaves an orphan version directory beside the intact
+ * old state; a crash after it leaves the old version beside the live
+ * new one. Neither needs recovery — the next compaction (or
+ * `dropWithLocation`) sweeps the leftover — so no trigger runs a
+ * recovery probe. A compaction must run quiesced relative to
+ * triggers: an append that lands in the old version while the new one
+ * is being written is swapped away with it. In-trigger compaction
+ * discharges that by construction (a micro-batch sink cannot race its
+ * own next trigger); an operator-scheduled one runs between triggers,
+ * the OPTIMIZE/VACUUM posture.
  */
 object SketchIngest {
 
-  /** Partition-column twin of batch_id: `filter(col(PB) === b)` prunes
-    * to one partition at the catalog level. Kept SEPARATE from the
-    * batch_id data column so reader-visible schemas (types, column
-    * order) are unchanged by the physical layout. */
-  private val PB = "__pb"
-
-  /** Append `df` (which must carry `batch_id`) to `table`, partitioned
-    * by the derived `__pb`. `bounded` marks frames whose size is capped
-    * by sketch geometry (≤ m positions, d×w buckets, top-N candidates)
-    * — those coalesce to ONE file per trigger; unbounded frames (per-key
-    * novelty/estimate rows) keep their task parallelism. A standing
-    * table written before the `__pb` layout keeps its unpartitioned
-    * shape (appending the partition column would be rejected) — the
-    * read path already tolerates both via [[bcol]]. Recovers a
-    * half-swapped compaction first ([[recoverSwap]]): a crash between
-    * the rewrite's renames must not let this append recreate the table
-    * EMPTY while the real state sits under `__cpt_old`. */
+  /** Append `df` to `table`. `bounded` marks frames whose size is
+    * capped by sketch geometry (≤ m positions, d×w buckets, top-N
+    * candidates) — those coalesce to ONE file per trigger; unbounded
+    * frames (per-key novelty/estimate rows) keep their task
+    * parallelism. */
   private def appendByBatch(df: DataFrame, table: String,
-                            bounded: Boolean): Unit = {
-    val spark = df.sparkSession
-    recoverSwap(spark, table)
-    val out = if (bounded) df.coalesce(1) else df
-    val legacy = spark.catalog.tableExists(table) &&
-      !spark.table(table).columns.contains(PB)
-    if (legacy)
-      out.write.mode("append").format("parquet").saveAsTable(table)
-    else
-      out.withColumn(PB, col("batch_id"))
-        .write.mode("append").format("parquet").partitionBy(PB)
-        .saveAsTable(table)
-  }
+                            bounded: Boolean): Unit =
+    (if (bounded) df.coalesce(1) else df)
+      .write.mode("append").format("parquet").saveAsTable(table)
 
-  /** Finish (or roll back) a compaction that crashed mid-swap. Three
-    * crash positions leave a `__cpt_old` twin behind, and ALL of them
-    * must be healed before any append or rewrite touches the table —
-    * the append would otherwise recreate the table empty, and the next
-    * rewrite's cleanup would delete the survivor:
-    *
-    *  1. between the two renames — `table` ABSENT, survivor under
-    *     `__cpt_old`: rename the survivor back in (+ MSCK — the rename
-    *     moved its directory out from under its partition metadata).
-    *  2. after the second rename but before the MSCK — `table` EXISTS
-    *     but a partitioned table READS EMPTY (partition metadata still
-    *     points at the stage table's pre-move paths): re-run the MSCK;
-    *     if the table still reads empty while the survivor doesn't,
-    *     restore the survivor (defense in depth — a swap that lost its
-    *     directory entirely must not become permanent data loss).
-    *  3. after the MSCK but before the old-copy cleanup — `table` reads
-    *     fine: just finish the cleanup.
-    *
-    * Reading the table to decide (an `isEmpty` probe) costs one
-    * metadata-pruned task and only runs when a survivor table exists —
-    * i.e. only in the trigger immediately after a crashed compaction. */
-  private def recoverSwap(spark: SparkSession, table: String): Unit = {
-    val old = s"${table}__cpt_old"
-    if (!spark.catalog.tableExists(old)) return
-    def repair(): Unit = {
-      if (spark.table(table).columns.contains(PB))
-        spark.sql(s"MSCK REPAIR TABLE `$table`")
-      spark.catalog.refreshTable(table)
-    }
-    if (!spark.catalog.tableExists(table)) { // crash position 1
-      spark.sql(s"ALTER TABLE `$old` RENAME TO `$table`")
-      repair()
-      return
-    }
-    if (spark.table(table).isEmpty) { // crash position 2 (or empty state)
-      repair()
-      if (spark.table(table).isEmpty && survivorHasData(spark, old)) {
-        dropSurvivor(spark, table)
-        spark.sql(s"ALTER TABLE `$old` RENAME TO `$table`")
-        repair()
-        return
-      }
-    }
-    // crash position 3 (or a healed 2): the swapped-in copy reads —
-    // finish the interrupted cleanup ([[dropSurvivor]]: the twin's
-    // stale partition metadata points INTO the live table's directory,
-    // so a plain managed-table drop would delete the data it guards)
-    dropSurvivor(spark, old)
-  }
-
-  /** Whether the survivor twin holds any data bytes — probed through the
-    * FILESYSTEM, never the catalog: after `RENAME TO __cpt_old` the
-    * survivor's partition metadata still points at its PRE-move paths
-    * (the original table directory), which the stage rename then
-    * repopulates with the NEW generation — so a catalog read of the
-    * survivor returns the new data, or nothing at all when the swap lost
-    * the directory. In that lost-directory case a catalog-read gate sees
-    * table-empty AND survivor-empty (both reads hit the same dead
-    * location) and would delete the last good copy. The survivor's real
-    * bytes sit under its own moved directory; list that. */
-  private def survivorHasData(spark: SparkSession, old: String): Boolean = {
-    // the survivor's TABLE location (rename updates it — only the
-    // PARTITION metadata goes stale), read from the catalog so named
-    // databases and custom locations resolve; hand-building
-    // <warehouse>/<name> here would make the gate silently pass (and
-    // the cleanup delete the last good copy) for any non-default layout
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(old)).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) !n.startsWith(".") && walk(st.getPath)
-        else st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-      }
-    fs.exists(loc) && walk(loc)
-  }
-
-  /** The pruning column of `df`: the `__pb` partition copy when the
-    * table carries it, else the plain batch_id data column (tolerates
-    * standing tables written before the partitioned layout). */
-  private def bcol(df: DataFrame) =
-    if (df.columns.contains(PB)) col(PB) else col("batch_id")
-
-  /** Has this batch already committed its LAST (guard) write? One
-    * partition-pruned count — metadata + at most one tiny partition,
-    * never a scan of the full trigger history. Falls back to a
-    * batch_id filter for pre-partitioning tables (an old monitor's
-    * standing tables predating the `__pb` layout). */
+  /** Has this batch already committed its LAST (guard) write? A
+    * batch_id-filtered count over the guard table (parquet min/max
+    * stats skip the other batches' row groups) — run only by direct
+    * callers without a watermark, never on the streaming trigger path. */
   private def committed(spark: SparkSession, guardTable: String,
                         batchId: Long): Boolean =
-    spark.catalog.tableExists(guardTable) && {
-      val t = spark.table(guardTable)
-      t.filter(bcol(t) === batchId).count() > 0
-    }
+    spark.catalog.tableExists(guardTable) &&
+      spark.table(guardTable).filter(col("batch_id") === batchId).count() > 0
 
   /** Max committed batch id in a guard table (−1 when absent/empty) —
     * the once-per-stream-start seed for the in-memory replay watermark
@@ -181,10 +85,8 @@ object SketchIngest {
   private[streaming] def lastCommittedIn(spark: SparkSession,
                                          guardTable: String): Long =
     if (!spark.catalog.tableExists(guardTable)) -1L
-    else {
-      val t = spark.table(guardTable)
-      t.agg(coalesce(max(bcol(t).cast("long")), lit(-1L))).head().getLong(0)
-    }
+    else spark.table(guardTable)
+      .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0)
 
   /** Replay check shared by the apply* entry points: an in-memory
     * watermark when the stream wrapper threads one (`knownLast`), the
@@ -214,93 +116,6 @@ object SketchIngest {
         lastCommittedIn(batch.sparkSession, guardTable))
       guard.set(Some(apply(batch, batchId, Some(last))))
     }.start()
-  }
-
-  /** Rewrite `table` with `compacted`, keeping the `__pb` layout when
-    * the frame carries it — via the [[graft.core.Materialize.bucketRewrite]]
-    * staged rename-swap: the compacted copy is FULLY written to a stage
-    * table (reading the original, so no lineage cut and no
-    * executor-memory copy), then two catalog renames swap it in. A
-    * crash before the swap leaves the original untouched; between the
-    * renames the data survives under `<table>__cpt_old`, never lost.
-    * Run quiesced relative to TRIGGERS (a trigger appending mid-rewrite
-    * would be dropped with the old generation) — the OPTIMIZE/VACUUM
-    * posture. */
-  private def rewrite(spark: SparkSession, table: String,
-                      compacted: DataFrame): Unit = {
-    val stage = s"${table}__cpt_stage"
-    val old = s"${table}__cpt_old"
-    // a prior compaction may have crashed mid-swap: restore the
-    // survivor BEFORE the cleanup below can delete it
-    recoverSwap(spark, table)
-    graft.core.Materialize.dropWithLocation(spark, stage)
-    graft.core.Materialize.dropWithLocation(spark, old)
-    val w = compacted.write.mode("overwrite").format("parquet")
-    (if (compacted.columns.contains(PB)) w.partitionBy(PB) else w)
-      .saveAsTable(stage)
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-    spark.sql(s"ALTER TABLE `$stage` RENAME TO `$table`")
-    // RENAME moves a managed table's directory but leaves partition
-    // metadata pointing at the pre-move paths — a partitioned table
-    // reads EMPTY after the swap until its partitions are re-discovered
-    // from the moved directory
-    if (compacted.columns.contains(PB))
-      spark.sql(s"MSCK REPAIR TABLE `$table`")
-    spark.catalog.refreshTable(table)
-    // cleanup gate: every compaction preserves emptiness (group-bys and
-    // unions of the original), so a swapped-in table that reads empty
-    // against a non-empty survivor means the swap LOST data (stale
-    // metadata, moved-out directory) — keep the survivor for
-    // recoverSwap instead of deleting the last good copy. The survivor
-    // is probed on the FILESYSTEM ([[survivorHasData]]): its catalog
-    // metadata points at the pre-rename paths and can read empty (or
-    // the new generation) exactly when the gate matters most.
-    if (spark.table(table).isEmpty && survivorHasData(spark, old))
-      throw new IllegalStateException(
-        s"compaction swap of `$table` reads empty against a non-empty " +
-        s"`$old` — survivor retained for recoverSwap")
-    dropSurvivor(spark, old)
-  }
-
-  /**
-   * Drop a RENAMED-AWAY twin without touching anyone else's data.
-   *
-   * `ALTER TABLE RENAME` moves a managed table's directory but leaves
-   * its catalog PARTITION metadata pointing at the pre-move paths —
-   * which, after the swap's second rename, is the LIVE table's
-   * directory. `DROP TABLE` on a managed partitioned table deletes
-   * every registered partition location, so a plain drop of the twin
-   * deletes the just-swapped-in generation through those stale entries
-   * (observed: standing table left with only `_SUCCESS` after a
-   * compaction from a catalog-partition-tracking session; the
-   * foreachBatch path escapes only because its session clone doesn't
-   * register catalog partitions). Forgetting the partition METADATA
-   * first (`retainData = true`) makes the drop touch exactly the
-   * twin's own moved directory.
-   */
-  private def dropSurvivor(spark: SparkSession, table: String): Unit = {
-    forgetPartitions(spark, table)
-    graft.core.Materialize.dropWithLocation(spark, table)
-  }
-
-  /** Remove `table`'s catalog partition metadata WITHOUT deleting the
-    * partition directories (`retainData = true`). No-op for
-    * unpartitioned/legacy tables and sessions that don't track
-    * filesource partitions in the catalog (the benign
-    * AnalysisException from listPartitions). A FAILED dropPartitions
-    * is NOT swallowed: falling through to DROP TABLE with the stale
-    * entries still registered would delete the live table's data —
-    * recovery must fail-stop there, not destroy the swapped-in
-    * generation. */
-  private def forgetPartitions(spark: SparkSession, table: String): Unit = {
-    val cat = spark.sessionState.catalog
-    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    val specs =
-      try cat.listPartitions(id).map(_.spec)
-      catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty }
-    if (specs.nonEmpty)
-      cat.dropPartitions(id, specs, ignoreIfNotExists = true,
-        purge = false, retainData = true)
   }
 
   /** `compactEvery` (0 = never; DEFAULT 8, the measured recommendation
@@ -379,13 +194,6 @@ object SketchIngest {
       val obs = org.apache.spark.sql.Observation()
       val b = graft.core.CacheRegistry.persistTracked(
         batch.observe(obs, count(lit(1)).as("n")))
-      // heal a half-swapped compaction BEFORE the raw append (the
-      // appendByBatch invariant): a crashed compactKmv can leave the
-      // standing table absent/empty with the survivor under
-      // __cpt_old; an unguarded append would recreate it holding
-      // only this batch's hashes and the next recoverSwap would then
-      // drop the survivor — silent loss of all prior sketch state.
-      recoverSwap(spark, hashT)
       graft.functions.KmvSketch
         .bottomKAgg(b, keyCol, k, Seq(groupCol))
         .select(col(groupCol), col("hash"))
@@ -418,11 +226,10 @@ object SketchIngest {
    */
   def compactKmv(spark: SparkSession, tablePrefix: String, k: Int): Unit = {
     val hashT = tablePrefix + "_kmv_hashes"
-    recoverSwap(spark, hashT)
     if (!spark.catalog.tableExists(hashT)) return
     val t = spark.table(hashT)
     val groupCols = t.columns.filterNot(_ == "hash").toSeq
-    rewrite(spark, hashT,
+    replaceTable(spark, hashT,
       graft.functions.KmvSketch.rerank(t, k, groupCols)
         .select(t.columns.map(col): _*))
   }
@@ -478,9 +285,6 @@ object SketchIngest {
       val obs = org.apache.spark.sql.Observation()
       val b = graft.core.CacheRegistry.persistTracked(
         batch.observe(obs, count(lit(1)).as("n")))
-      // heal a half-swapped compaction BEFORE the raw append (the
-      // appendByBatch invariant — see applyBatchKmv)
-      recoverSwap(spark, sampleT)
       graft.functions.QuantileSketch
         .bottomKSampleAgg(b, idCol, valCol, k, Seq(groupCol))
         .select(col(groupCol), col("hash"), col("val"))
@@ -512,11 +316,10 @@ object SketchIngest {
    */
   def compactQsk(spark: SparkSession, tablePrefix: String, k: Int): Unit = {
     val sampleT = tablePrefix + "_qsk_sample"
-    recoverSwap(spark, sampleT)
     if (!spark.catalog.tableExists(sampleT)) return
     val t = spark.table(sampleT)
     val groupCols = t.columns.filterNot(c => c == "hash" || c == "val").toSeq
-    rewrite(spark, sampleT,
+    replaceTable(spark, sampleT,
       graft.functions.QuantileSketch.resample(t, k, groupCols)
         .select(t.columns.map(col): _*))
   }
@@ -582,8 +385,7 @@ object SketchIngest {
         posT, bounded = true)
       spark.catalog.refreshTable(posT)
       if (obs.get("n").asInstanceOf[Long] > 0) {
-        val priorT = spark.table(posT)
-        val prior = priorT.filter(bcol(priorT) < batchId)
+        val prior = spark.table(posT).filter(col("batch_id") < batchId)
           .select("pos").distinct()
         appendByBatch(
           graft.functions.BloomSketch.mightContain(keys, keyCol, prior, k, m)
@@ -670,12 +472,10 @@ object SketchIngest {
           candT, bounded = true)
         spark.catalog.refreshTable(cntT)
         spark.catalog.refreshTable(candT)
-        val cntTbl = spark.table(cntT)
-        val buckets = cntTbl.filter(bcol(cntTbl) <= batchId)
+        val buckets = spark.table(cntT).filter(col("batch_id") <= batchId)
           .dropDuplicates("batch_id", "j", "pos")
           .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
-        val candTbl = spark.table(candT)
-        val cand = candTbl.filter(bcol(candTbl) <= batchId)
+        val cand = spark.table(candT).filter(col("batch_id") <= batchId)
           .select(col("key")).distinct()
         appendByBatch(
           cand.select(col("key"), posexplode(array((0 until d).map(j =>
@@ -710,11 +510,6 @@ object SketchIngest {
       val obs = org.apache.spark.sql.Observation()
       val b = graft.core.CacheRegistry.persistTracked(
         batch.observe(obs, count(lit(1)).as("n")))
-      // heal a half-swapped compactHll BEFORE the raw append (the
-      // applyBatchKmv guard): an unguarded append after a crashed
-      // swap would recreate the regs table holding only this batch's
-      // registers and the next recoverSwap would drop the survivor
-      recoverSwap(spark, regsT)
       graft.functions.HyperLogLog
         .registers(b, keyCol, Seq(groupCol))
         .coalesce(1) // ≤ 64 rows per group — one file per trigger
@@ -747,11 +542,10 @@ object SketchIngest {
    */
   def compactHll(spark: SparkSession, tablePrefix: String): Unit = {
     val regsT = tablePrefix + "_hll_regs"
-    recoverSwap(spark, regsT)
     if (!spark.catalog.tableExists(regsT)) return
     val t = spark.table(regsT)
     val keys = t.columns.filterNot(_ == "rho") // (groupCols…, reg)
-    rewrite(spark, regsT,
+    replaceTable(spark, regsT,
       t.groupBy(keys.map(col): _*).agg(max(col("rho")).as("rho"))
         .select(t.columns.map(col): _*))
   }
@@ -771,19 +565,16 @@ object SketchIngest {
   def compactBloom(spark: SparkSession, tablePrefix: String): Unit = {
     val posT = tablePrefix + "_bloom_pos"
     val novT = tablePrefix + "_bloom_novel"
-    recoverSwap(spark, posT)
     if (!spark.catalog.tableExists(posT) ||
         !spark.catalog.tableExists(novT)) return
     val maxRow = spark.table(novT).agg(max(col("batch_id"))).head()
     if (maxRow.isNullAt(0)) return
     val maxC = maxRow.getLong(0)
     val pos = spark.table(posT)
-    val compacted = pos.filter(bcol(pos) <= maxC)
+    replaceTable(spark, posT, pos.filter(col("batch_id") <= maxC)
       .select("pos").distinct()
       .select(lit(maxC).as("batch_id"), col("pos"))
-      .unionByName(pos.filter(bcol(pos) > maxC).select("batch_id", "pos"))
-      .withColumn(PB, col("batch_id"))
-    rewrite(spark, posT, compacted)
+      .unionByName(pos.filter(col("batch_id") > maxC).select("batch_id", "pos")))
   }
 
   /**
@@ -803,30 +594,26 @@ object SketchIngest {
     val cntT = tablePrefix + "_cms_cnt"
     val candT = tablePrefix + "_cms_cand"
     val estT = tablePrefix + "_cms_est"
-    recoverSwap(spark, cntT)
-    recoverSwap(spark, candT)
     if (!spark.catalog.tableExists(cntT) ||
         !spark.catalog.tableExists(estT)) return
     val maxRow = spark.table(estT).agg(max(col("batch_id"))).head()
     if (maxRow.isNullAt(0)) return
     val maxC = maxRow.getLong(0)
     val cnt = spark.table(cntT)
-    rewrite(spark, cntT,
-      cnt.filter(bcol(cnt) <= maxC)
+    replaceTable(spark, cntT,
+      cnt.filter(col("batch_id") <= maxC)
         .dropDuplicates("batch_id", "j", "pos")
         .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
         .select(lit(maxC).as("batch_id"), col("j"), col("pos"), col("cnt"))
-        .unionByName(cnt.filter(bcol(cnt) > maxC)
-          .select("batch_id", "j", "pos", "cnt"))
-        .withColumn(PB, col("batch_id")))
+        .unionByName(cnt.filter(col("batch_id") > maxC)
+          .select("batch_id", "j", "pos", "cnt")))
     if (spark.catalog.tableExists(candT)) {
       val cand = spark.table(candT)
-      rewrite(spark, candT,
-        cand.filter(bcol(cand) <= maxC).select("key").distinct()
+      replaceTable(spark, candT,
+        cand.filter(col("batch_id") <= maxC).select("key").distinct()
           .select(lit(maxC).as("batch_id"), col("key"))
-          .unionByName(cand.filter(bcol(cand) > maxC)
-            .select("batch_id", "key"))
-          .withColumn(PB, col("batch_id")))
+          .unionByName(cand.filter(col("batch_id") > maxC)
+            .select("batch_id", "key")))
     }
   }
 
@@ -902,8 +689,7 @@ object SketchIngest {
         cntT, bounded = true)
       if (obs.get("n").asInstanceOf[Long] > 0) {
         spark.catalog.refreshTable(cntT)
-        val cntTbl = spark.table(cntT)
-        val collapsed = cntTbl.filter(bcol(cntTbl) <= batchId)
+        val collapsed = spark.table(cntT).filter(col("batch_id") <= batchId)
           .dropDuplicates("batch_id", groupCol, "bucket")
           .groupBy(col(groupCol), col("bucket"))
           .agg(sum(col("cnt")).as("cnt"))
@@ -992,8 +778,7 @@ object SketchIngest {
         dailyT, bounded = true)
       if (obs.get("n").asInstanceOf[Long] > 0) {
         spark.catalog.refreshTable(dailyT)
-        val t = spark.table(dailyT)
-        val daily = t.filter(bcol(t) <= batchId)
+        val daily = spark.table(dailyT).filter(col("batch_id") <= batchId)
           .dropDuplicates("batch_id", groupCol, "day")
           .groupBy(col(groupCol), col("day"))
           .agg(sum(col("s_micro")).as("s"), sum(col("c")).as("c"))
@@ -1022,7 +807,6 @@ object SketchIngest {
   def compactCusum(spark: SparkSession, tablePrefix: String): Unit = {
     val dailyT = tablePrefix + "_cusum_daily"
     val trajT = tablePrefix + "_cusum_traj"
-    recoverSwap(spark, dailyT)
     if (!spark.catalog.tableExists(dailyT) ||
         !spark.catalog.tableExists(trajT)) return
     val maxRow = spark.table(trajT).agg(max(col("batch_id"))).head()
@@ -1030,17 +814,16 @@ object SketchIngest {
     val maxC = maxRow.getLong(0)
     val t = spark.table(dailyT)
     val groupCol = t.columns
-      .filterNot(Set("batch_id", "day", "s_micro", "c", PB)).head
-    rewrite(spark, dailyT,
-      t.filter(bcol(t) <= maxC)
+      .filterNot(Set("batch_id", "day", "s_micro", "c")).head
+    replaceTable(spark, dailyT,
+      t.filter(col("batch_id") <= maxC)
         .dropDuplicates("batch_id", groupCol, "day")
         .groupBy(col(groupCol), col("day"))
         .agg(sum(col("s_micro")).as("s_micro"), sum(col("c")).as("c"))
         .select(lit(maxC).as("batch_id"), col(groupCol), col("day"),
           col("s_micro"), col("c"))
-        .unionByName(t.filter(bcol(t) > maxC)
-          .select("batch_id", groupCol, "day", "s_micro", "c"))
-        .withColumn(PB, col("batch_id")))
+        .unionByName(t.filter(col("batch_id") > maxC)
+          .select("batch_id", groupCol, "day", "s_micro", "c")))
   }
 
   /**
@@ -1057,7 +840,6 @@ object SketchIngest {
   def compactHist(spark: SparkSession, tablePrefix: String): Unit = {
     val cntT = tablePrefix + "_hist_cnt"
     val qT = tablePrefix + "_hist_q"
-    recoverSwap(spark, cntT)
     if (!spark.catalog.tableExists(cntT) ||
         !spark.catalog.tableExists(qT)) return
     val maxRow = spark.table(qT).agg(max(col("batch_id"))).head()
@@ -1065,16 +847,15 @@ object SketchIngest {
     val maxC = maxRow.getLong(0)
     val cnt = spark.table(cntT)
     val groupCol = cnt.columns
-      .filterNot(Set("batch_id", "bucket", "cnt", PB)).head
-    rewrite(spark, cntT,
-      cnt.filter(bcol(cnt) <= maxC)
+      .filterNot(Set("batch_id", "bucket", "cnt")).head
+    replaceTable(spark, cntT,
+      cnt.filter(col("batch_id") <= maxC)
         .dropDuplicates("batch_id", groupCol, "bucket")
         .groupBy(col(groupCol), col("bucket"))
         .agg(sum(col("cnt")).as("cnt"))
         .select(lit(maxC).as("batch_id"), col(groupCol), col("bucket"),
           col("cnt"))
-        .unionByName(cnt.filter(bcol(cnt) > maxC)
-          .select("batch_id", groupCol, "bucket", "cnt"))
-        .withColumn(PB, col("batch_id")))
+        .unionByName(cnt.filter(col("batch_id") > maxC)
+          .select("batch_id", groupCol, "bucket", "cnt")))
   }
 }

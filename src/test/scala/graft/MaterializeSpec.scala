@@ -68,9 +68,8 @@ class MaterializeSpec extends SparkSpec {
     assert(scanSide.contains("SelectedBucketsCount") ||
       !plan.contains("Exchange hashpartitioning(k"),
       s"compacted bucketed side must not re-shuffle on k:\n$plan")
-    // no stage/backup residue
-    assert(!spark.catalog.tableExists(s"${name}__compact_stage"))
-    assert(!spark.catalog.tableExists(s"${name}__compact_old"))
+    // no residue: only the registered version's directory remains
+    assert(versionDirs(spark, name).size == 1)
     Materialize.dropWithLocation(spark, name)
   }
 
@@ -94,9 +93,44 @@ class MaterializeSpec extends SparkSpec {
     assert(scanSide.contains("SelectedBucketsCount") ||
       !plan.contains("Exchange hashpartitioning(k"),
       s"forgotten bucketed side must not re-shuffle on k:\n$plan")
-    assert(!spark.catalog.tableExists(s"${name}__compact_stage"))
-    assert(!spark.catalog.tableExists(s"${name}__compact_old"))
+    assert(versionDirs(spark, name).size == 1)
     Materialize.dropWithLocation(spark, name)
+  }
+
+  test("bucketForget crash around SET LOCATION: next append + forget equal the twin") {
+    val cra = "graft_test_forget_crash"
+    val twn = "graft_test_forget_twin"
+    val rows = (1L to 40L).map(i => (i, s"v$i")).toDF("k", "v")
+    val forget1 = Seq(3L, 17L).toDF("k")
+    val forget2 = Seq(5L, 41L).toDF("k")
+    def content(t: String) = spark.table(t).as[(Long, String)].collect().toSet
+    for (swapped <- Seq(false, true)) {
+      Seq(cra, twn).foreach(Materialize.dropWithLocation(spark, _))
+      try {
+        for (t <- Seq(cra, twn))
+          Materialize.bucketTable(spark, t, rows, buckets = 4, bucketCols = Seq("k"))
+        Materialize.bucketForget(spark, twn, 4, Seq("k"), "k", forget1)
+        // the crashed forget: its anti-joined version written, and
+        // registered only when the crash came after SET LOCATION
+        crashedReplace(cra, spark.table(cra).join(forget1, Seq("k"), "left_anti")
+          .select("k", "v"), swapped)
+        assert(versionDirs(spark, cra).size == 1 && managedDirExists(cra),
+          "precondition: the crash leaves two data directories")
+        for (t <- Seq(cra, twn)) {
+          Materialize.bucketAppend(spark, t, Seq((41L, "w"), (42L, "x")).toDF("k", "v"),
+            buckets = 4, bucketCols = Seq("k"))
+          Materialize.bucketForget(spark, t, 4, Seq("k"), "k", forget2)
+        }
+        // a crash before SET LOCATION lost the first forget, which the
+        // operator re-runs; after it, the forget is already live
+        if (!swapped) Materialize.bucketForget(spark, cra, 4, Seq("k"), "k", forget1)
+        assert(content(cra) == content(twn), s"swapped=$swapped diverged from the twin")
+        assert(versionDirs(spark, cra).size == 1 && !managedDirExists(cra),
+          s"swapped=$swapped: the next forget must leave only the registered version")
+        assert(spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(cra)).bucketSpec.exists(_.numBuckets == 4))
+      } finally Seq(cra, twn).foreach(Materialize.dropWithLocation(spark, _))
+    }
   }
 
   test("incremental merge upserts by unique key and keeps unmatched rows") {

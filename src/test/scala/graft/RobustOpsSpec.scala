@@ -221,12 +221,12 @@ class RobustOpsSpec extends SparkSpec {
   test("direct-call compaction keeps standing state (stale-partition drop regression)") {
     // Regression: from a session that tracks filesource partitions in
     // the catalog (any NON-foreachBatch session — the documented
-    // "operator's own schedule" maintenance path), ALTER TABLE RENAME
-    // leaves the renamed-away twin's partition metadata pointing INTO
-    // the live table's directory, and a plain managed-table DROP then
-    // deletes the just-swapped-in generation through those stale
-    // entries. dropSurvivor (retainData partition forget before the
-    // drop) must keep the standing table intact.
+    // "operator's own schedule" maintenance path), a rename-swap
+    // compaction of a partitioned standing table once deleted the
+    // just-swapped-in generation through stale partition metadata. The
+    // standing tables are now unpartitioned and compaction swaps the
+    // table's location, so no partition metadata exists to go stale;
+    // the direct-call compaction must keep the standing state intact.
     import graft.streaming.SketchIngest
     val p = "graft_t_cptreg"
     for (t <- Seq("_cms_cnt", "_cms_cand", "_cms_est"))
@@ -234,12 +234,11 @@ class RobustOpsSpec extends SparkSpec {
     import spark.implicits._
     SketchIngest.applyCmsBatch(Seq("x", "x", "y", "z").toDF("k"),
       0L, "k", p, d = 2, w = 64, topN = 4)
-    // the standing table IS catalog-partition-tracked in this session —
-    // the precondition that makes the plain drop destructive
     val cat = spark.sessionState.catalog
-    assert(cat.listPartitions(
+    assert(cat.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(p + "_cms_cnt"))
-      .nonEmpty, "precondition: catalog tracks the __pb partitions")
+      .partitionColumnNames.isEmpty,
+      "precondition: the standing table carries no partition metadata")
     SketchIngest.compactCms(spark, p)
     spark.catalog.refreshTable(p + "_cms_cnt")
     assert(spark.table(p + "_cms_cnt").count() == 5,

@@ -948,8 +948,7 @@ class StreamingSpec extends SparkSpec {
         .filter(col("batch_id") === 1L)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
       b1Rows.toSeq.toDF("batch_id", "j", "pos", "cnt")
-        .withColumn("__pb", col("batch_id")) // the table's partition copy
-        .write.mode("append").format("parquet").partitionBy("__pb")
+        .write.mode("append").format("parquet")
         .saveAsTable(prefix + "_cms_cnt")
       assert(collapsed() == stable, "replayed count rows collapse exactly")
     } finally for (t <- Seq("_cms_cnt", "_cms_cand", "_cms_est"))
@@ -989,8 +988,7 @@ class StreamingSpec extends SparkSpec {
       for (p <- Seq(a, b)) {
         graft.functions.BloomSketch.positions(b2, "key", 4, 4096)
           .select(lit(2L).as("batch_id"), col("pos"))
-          .withColumn("__pb", col("batch_id"))
-          .write.mode("append").format("parquet").partitionBy("__pb")
+          .write.mode("append").format("parquet")
           .saveAsTable(p + "_bloom_pos") // the orphan pre-crash write
         graft.streaming.SketchIngest.applyBloomBatch(b2, 2L, "key", p, 4, 4096)
       }
@@ -999,54 +997,146 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, String, Boolean)].collect().toSet
       assert(novel(a) == novel(b),
         "novelty trajectory diverged after compaction")
-      // the staged rename-swap cleans up after itself
-      assert(!spark.catalog.tableExists(a + "_bloom_pos__cpt_stage"))
-      assert(!spark.catalog.tableExists(a + "_bloom_pos__cpt_old"))
+      // the location swap cleans up after itself
+      assert(graft.core.Materialize.versionDirs(spark, a + "_bloom_pos").size == 1)
     } finally for (p <- Seq(a, b); t <- tbls)
       graft.core.Materialize.dropWithLocation(spark, p + t)
   }
 
-  test("bloom ingest: pre-__pb legacy tables keep working; mid-swap crash recovers") {
+  /** A bloom monitor whose compaction crashes mid-swap against a
+    * never-crashed twin. Both run batches 0-1; the twin compacts, the
+    * crashed monitor leaves `crashedReplace`'s state instead (the first
+    * compaction when `priorCompaction` is false, else a second one after
+    * a clean first and batch 2). Then both run the next trigger and the
+    * next compaction: trajectories and standing state must equal the
+    * twin's, and exactly one version directory — the registered one —
+    * may remain. */
+  private def bloomCompactionCrash(tag: String, swapped: Boolean,
+                                   priorCompaction: Boolean): Unit = {
     import spark.implicits._
-    val leg = "graft_test_bleg"   // legacy-layout monitor
-    val cra = "graft_test_bcra_a" // crashes mid-compaction-swap
-    val twn = "graft_test_bcra_b" // never-crashed twin
+    import graft.streaming.SketchIngest.{applyBloomBatch, compactBloom}
+    val cra = s"graft_test_${tag}_a"
+    val twn = s"graft_test_${tag}_b"
     val tbls = Seq("_bloom_pos", "_bloom_novel")
-    for (p <- Seq(leg, cra, twn); t <- tbls)
+    for (p <- Seq(cra, twn); t <- tbls)
       graft.core.Materialize.dropWithLocation(spark, p + t)
     try {
-      val b0 = Seq("u1", "u2", "u3").toDF("key")
-      val b1 = Seq("u2", "u4").toDF("key")
-      // ---- legacy layout: batch-0 state written UNPARTITIONED (the
-      // pre-r9 shape); the next trigger must append in the same shape
-      // instead of being rejected for the extra partition column
-      graft.functions.BloomSketch.positions(b0, "key", 4, 4096)
-        .select(lit(0L).as("batch_id"), col("pos"))
-        .write.format("parquet").saveAsTable(leg + "_bloom_pos")
-      b0.select(lit(0L).as("batch_id"), col("key"), lit(true).as("novel"))
-        .write.format("parquet").saveAsTable(leg + "_bloom_novel")
-      graft.streaming.SketchIngest.applyBloomBatch(b1, 1L, "key", leg, 4, 4096)
-      val legNov = spark.table(leg + "_bloom_novel")
-        .filter(col("batch_id") === 1L)
-        .select("key", "novel").as[(String, Boolean)].collect().toMap
-      assert(legNov == Map("u2" -> false, "u4" -> true),
-        "legacy-layout monitor must keep its history and semantics")
-      // ---- mid-swap crash: positions table renamed to __cpt_old (the
-      // state a crash between rewrite()'s two renames leaves) — the next
-      // trigger must recover the survivor, not recreate an empty table
-      for (p <- Seq(cra, twn))
-        graft.streaming.SketchIngest.applyBloomBatch(b0, 0L, "key", p, 4, 4096)
-      spark.sql(s"ALTER TABLE `${cra}_bloom_pos` RENAME TO `${cra}_bloom_pos__cpt_old`")
-      for (p <- Seq(cra, twn))
-        graft.streaming.SketchIngest.applyBloomBatch(b1, 1L, "key", p, 4, 4096)
+      val bs = Seq(Seq("u1", "u2", "u3"), Seq("u2", "u4"), Seq("u4", "u5", "u1"),
+        Seq("u6", "u2"), Seq("u7", "u5")).map(_.toDF("key"))
+      val posT = cra + "_bloom_pos"
+      var next = 0
+      def trigger(): Unit = {
+        for (p <- Seq(cra, twn))
+          applyBloomBatch(bs(next), next.toLong, "key", p, 4, 4096)
+        next += 1
+      }
+      trigger(); trigger()
+      if (priorCompaction) {
+        for (p <- Seq(cra, twn)) compactBloom(spark, p)
+        trigger()
+      }
+      val before = locationOf(posT)
+      // the frame compactBloom builds: the committed span collapsed
+      // under the max committed batch id
+      val maxC = (next - 1).toLong
+      val collapsed = spark.table(posT).select("pos").distinct()
+        .select(lit(maxC).as("batch_id"), col("pos"))
+      val crashed = crashedReplace(posT, collapsed, swapped)
+      compactBloom(spark, twn)
+      assert(locationOf(posT).toUri.getPath ==
+        (if (swapped) crashed else before).toUri.getPath,
+        "precondition: the crash leaves the expected version registered")
+      assert(graft.core.Materialize.versionDirs(spark, posT).size +
+        (if (managedDirExists(posT)) 1 else 0) == 2,
+        "precondition: the crash leaves a second data directory behind")
+      trigger()
+      for (p <- Seq(cra, twn)) compactBloom(spark, p)
+      trigger()
       def nov(p: String) = spark.table(p + "_bloom_novel")
         .select("batch_id", "key", "novel")
         .as[(Long, String, Boolean)].collect().toSet
-      assert(nov(cra) == nov(twn),
-        "recovered monitor must match the never-crashed twin")
-      assert(!spark.catalog.tableExists(cra + "_bloom_pos__cpt_old"))
-    } finally for (p <- Seq(leg, cra, twn); t <- tbls)
+      def pos(p: String) = spark.table(p + "_bloom_pos")
+        .select("batch_id", "pos").as[(Long, Int)].collect().toSet
+      assert(nov(cra) == nov(twn), "crashed monitor diverged from its twin")
+      assert(pos(cra) == pos(twn), "crashed standing state diverged from its twin")
+      val dirs = graft.core.Materialize.versionDirs(spark, posT)
+      assert(dirs.size == 1 && !managedDirExists(posT) &&
+        dirs.head.toUri.getPath == locationOf(posT).toUri.getPath,
+        s"the next compaction must leave only the registered version: $dirs")
+    } finally for (p <- Seq(cra, twn); t <- tbls)
       graft.core.Materialize.dropWithLocation(spark, p + t)
+  }
+
+  test("compaction crash before SET LOCATION: orphan version swept, twin-equal") {
+    bloomCompactionCrash("cpre", swapped = false, priorCompaction = true)
+  }
+
+  test("compaction crash after SET LOCATION: old version swept, twin-equal") {
+    bloomCompactionCrash("cpost", swapped = true, priorCompaction = true)
+  }
+
+  test("first compaction crash after SET LOCATION: managed dir swept, twin-equal") {
+    bloomCompactionCrash("cfirst", swapped = true, priorCompaction = false)
+  }
+
+  test("every table rewrite takes the atomic swap: schema and bucket spec kept") {
+    import spark.implicits._
+    import graft.core.Materialize
+    import graft.streaming.SketchIngest._
+    val p = "graft_test_atomic"
+    val bkt = "graft_test_atomic_bkt"
+    val sketchTbls = Seq("_hll_regs", "_hll_est", "_kmv_hashes", "_kmv_est",
+      "_qsk_sample", "_qsk_q", "_bloom_pos", "_bloom_novel", "_cms_cnt",
+      "_cms_cand", "_cms_est", "_hist_cnt", "_hist_q", "_cusum_daily",
+      "_cusum_traj").map(p + _)
+    (sketchTbls :+ bkt).foreach(Materialize.dropWithLocation(spark, _))
+    try {
+      val b = Seq(("a", "s1", 1.5, 1L), ("b", "s1", 7.0, 2L), ("a", "s2", 3.25, 3L))
+        .toDF("key", "src", "v", "id")
+        .withColumn("day", lit("2024-01-01").cast("date"))
+      for (i <- 0L to 1L) {
+        applyBatch(b, i, "key", "src", p)
+        applyBatchKmv(b, i, "key", "src", p, k = 8)
+        applyBatchQsk(b, i, "id", "v", "src", p, k = 8)
+        applyBloomBatch(b, i, "key", p, 4, 4096)
+        applyCmsBatch(b, i, "key", p, 2, 64, 2)
+        applyHistBatch(b, i, "v", "src", p, width = 2d)
+        applyCusumBatch(b, i, "v", "day", "src", p, slack = 0d)
+      }
+      // the id column comes second: the forget's USING join moves it first
+      Materialize.bucketTable(spark, bkt,
+        (1L to 20L).map(i => (s"v$i", i)).toDF("v", "k"), 4, Seq("k"))
+      Materialize.bucketAppend(spark, bkt, Seq(("w", 21L)).toDF("v", "k"), 4, Seq("k"))
+      val version = "[a-z_]+__v[0-9a-f]{32}".r
+      def meta(t: String) = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t))
+      def pinned(rewrites: Seq[(String, () => Unit)]): Unit =
+        for ((t, rewrite) <- rewrites) {
+          val m0 = meta(t)
+          rewrite()
+          val m1 = meta(t)
+          assert(m1.schema == m0.schema && m1.bucketSpec == m0.bucketSpec &&
+            m1.partitionColumnNames == m0.partitionColumnNames &&
+            m1.tableType == m0.tableType,
+            s"$t left the atomic SET LOCATION branch:\n$m0\n$m1")
+          assert(version.matches(locationOf(t).getName),
+            s"$t is not registered at a version dir: ${locationOf(t)}")
+        }
+      pinned(Seq(
+        p + "_hll_regs" -> (() => compactHll(spark, p)),
+        p + "_kmv_hashes" -> (() => compactKmv(spark, p, 8)),
+        p + "_qsk_sample" -> (() => compactQsk(spark, p, 8)),
+        p + "_bloom_pos" -> (() => compactBloom(spark, p)),
+        p + "_cms_cnt" -> (() => compactCms(spark, p)),
+        p + "_hist_cnt" -> (() => compactHist(spark, p)),
+        p + "_cusum_daily" -> (() => compactCusum(spark, p)),
+        bkt -> (() => Materialize.bucketCompact(spark, bkt, 4, Seq("k"))),
+        bkt -> (() => Materialize.bucketForget(spark, bkt, 4, Seq("k"), "k",
+          Seq(3L, 17L).toDF("k")))))
+      // compactCms rewrites the candidate table in the same call
+      assert(version.matches(locationOf(p + "_cms_cand").getName))
+      assert(meta(bkt).bucketSpec.exists(_.numBuckets == 4))
+    } finally (sketchTbls :+ bkt).foreach(Materialize.dropWithLocation(spark, _))
   }
 
   test("cms + hll compaction: state collapses; estimates keep matching the uncompacted twin") {
@@ -1279,58 +1369,6 @@ class StreamingSpec extends SparkSpec {
       graft.core.Materialize.dropWithLocation(spark, p + t)
   }
 
-  test("compaction crash between rename and MSCK: swapped-in table reads empty, next trigger repairs it") {
-    import spark.implicits._
-    val cra = "graft_test_mscr_a" // crashes after the second rename
-    val twn = "graft_test_mscr_b" // never-crashed twin
-    val tbls = Seq("_bloom_pos", "_bloom_novel")
-    for (p <- Seq(cra, twn); t <- tbls)
-      graft.core.Materialize.dropWithLocation(spark, p + t)
-    try {
-      val b0 = Seq("u1", "u2", "u3").toDF("key")
-      val b1 = Seq("u2", "u4").toDF("key")
-      val b2 = Seq("u4", "u5", "u1").toDF("key")
-      for (p <- Seq(cra, twn)) {
-        graft.streaming.SketchIngest.applyBloomBatch(b0, 0L, "key", p, 4, 4096)
-        graft.streaming.SketchIngest.applyBloomBatch(b1, 1L, "key", p, 4, 4096)
-      }
-      // reproduce rewrite() crashing AFTER "stage RENAME TO table" but
-      // BEFORE the MSCK: stage a compacted copy, run both renames by
-      // hand, stop. The rename moves the stage directory out from under
-      // its partition metadata, so the swapped-in table READS EMPTY
-      // while the survivor sits under __cpt_old — the ADVICE r9 window
-      // where the old recoverSwap (absent-table-only) silently ran the
-      // next trigger on empty state and the next compaction deleted the
-      // survivor.
-      val posT = cra + "_bloom_pos"
-      spark.table(posT).filter(col("batch_id") <= 1L)
-        .select("pos").distinct()
-        .select(lit(1L).as("batch_id"), col("pos"))
-        .withColumn("__pb", col("batch_id"))
-        .write.mode("overwrite").format("parquet").partitionBy("__pb")
-        .saveAsTable(posT + "__cpt_stage")
-      spark.sql(s"ALTER TABLE `$posT` RENAME TO `${posT}__cpt_old`")
-      spark.sql(s"ALTER TABLE `${posT}__cpt_stage` RENAME TO `$posT`")
-      spark.catalog.refreshTable(posT)
-      assert(spark.table(posT).isEmpty,
-        "precondition: the un-MSCK'd swapped-in table must read empty " +
-        "(otherwise this spec no longer reproduces the crash window)")
-      // next trigger on both monitors: the crashed one must repair the
-      // partition metadata (or restore the survivor) before probing
-      for (p <- Seq(cra, twn))
-        graft.streaming.SketchIngest.applyBloomBatch(b2, 2L, "key", p, 4, 4096)
-      def nov(p: String) = spark.table(p + "_bloom_novel")
-        .select("batch_id", "key", "novel")
-        .as[(Long, String, Boolean)].collect().toSet
-      assert(nov(cra) == nov(twn),
-        "repaired monitor must match the never-crashed twin")
-      assert(!spark.catalog.tableExists(posT + "__cpt_old"),
-        "interrupted cleanup must be finished")
-    } finally for (p <- Seq(cra, twn); t <- tbls;
-                   suf <- Seq("", "__cpt_old", "__cpt_stage"))
-      graft.core.Materialize.dropWithLocation(spark, p + t + suf)
-  }
-
   test("drift re-baseline: reference swaps from committed bins; crash replay identical; dupes collapse") {
     import spark.implicits._
     import graft.streaming.DriftMonitor.applyPsiRebaselineBatch
@@ -1385,56 +1423,6 @@ class StreamingSpec extends SparkSpec {
       // them: a doubled b2 weight would shift cra's batch-4 psi)
     } finally for (p <- Seq(cra, twn, pin); t <- tbls)
       graft.core.Materialize.dropWithLocation(spark, p + t)
-  }
-
-  test("compaction swap that LOST its directory: survivor restored from __cpt_old, not deleted") {
-    import spark.implicits._
-    val cra = "graft_test_lost_a" // swap lost the new table's directory
-    val twn = "graft_test_lost_b" // never-crashed twin
-    val tbls = Seq("_bloom_pos", "_bloom_novel")
-    for (p <- Seq(cra, twn); t <- tbls)
-      graft.core.Materialize.dropWithLocation(spark, p + t)
-    try {
-      val b0 = Seq("u1", "u2", "u3").toDF("key")
-      val b1 = Seq("u2", "u4").toDF("key")
-      val b2 = Seq("u4", "u5", "u1").toDF("key")
-      for (p <- Seq(cra, twn))
-        graft.streaming.SketchIngest.applyBloomBatch(b0, 0L, "key", p, 4, 4096)
-      // reproduce the ADVICE r10 lost-directory window: the survivor is
-      // renamed to __cpt_old (its partition metadata now points at the
-      // ORIGINAL table directory — a table with exactly ONE write since
-      // creation lists through catalog partitions, so its catalog read
-      // is EMPTY after the rename; ≥2 appends would flip it to
-      // location-based listing and mask the bug), and the swapped-in
-      // replacement exists but holds no bytes — so BOTH catalog reads
-      // (table and survivor) come back empty, the same dead location
-      // twice. A catalog-probing recoverSwap skips the restore and its
-      // cleanup deletes the last good copy; the filesystem probe must
-      // see the survivor's moved directory and restore it.
-      val posT = cra + "_bloom_pos"
-      spark.sql(s"ALTER TABLE `$posT` RENAME TO `${posT}__cpt_old`")
-      Seq.empty[(Long, Long)].toDF("batch_id", "pos")
-        .withColumn("__pb", col("batch_id"))
-        .write.mode("overwrite").format("parquet").partitionBy("__pb")
-        .saveAsTable(posT)
-      assert(spark.table(posT).isEmpty &&
-             spark.table(posT + "__cpt_old").isEmpty,
-        "precondition: both CATALOG reads must be empty " +
-        "(otherwise this spec no longer reproduces the lost-directory window)")
-      for (p <- Seq(cra, twn)) {
-        graft.streaming.SketchIngest.applyBloomBatch(b1, 1L, "key", p, 4, 4096)
-        graft.streaming.SketchIngest.applyBloomBatch(b2, 2L, "key", p, 4, 4096)
-      }
-      def nov(p: String) = spark.table(p + "_bloom_novel")
-        .select("batch_id", "key", "novel")
-        .as[(Long, String, Boolean)].collect().toSet
-      assert(nov(cra) == nov(twn),
-        "restored monitor must match the never-crashed twin")
-      assert(!spark.catalog.tableExists(posT + "__cpt_old"),
-        "interrupted cleanup must be finished after the restore")
-    } finally for (p <- Seq(cra, twn); t <- tbls;
-                   suf <- Seq("", "__cpt_old", "__cpt_stage"))
-      graft.core.Materialize.dropWithLocation(spark, p + t + suf)
   }
 
   test("late-data merge row: in-budget late chunks merge, beyond-filter windows stay dropped") {
