@@ -848,9 +848,10 @@ object ScaleProbe {
     // each compaction a replaceTable location swap) collapses even that
     // growth. Each trigger folds a constant-size batch of FRESH keys
     // (per-batch prefix) through the same apply* path the streaming
-    // ingest uses — called directly, so without a watermark each apply
-    // also runs the guard-table probe; first-4 vs last-8 trigger means
-    // expose any growth.
+    // ingest uses, threading each call's returned watermark into the
+    // next exactly as Replay.stream does, so no trigger pays a
+    // guard-table read; first-4 vs last-8 trigger means expose any
+    // growth.
     if (section("sketchtriggers")) {
       val trigSteps = sys.env.get("SPARK_GRAFT_TRIGS")
         .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(4, 32, 128))
@@ -862,35 +863,38 @@ object ScaleProbe {
       ev.count()
       def batchDf(i: Int) = ev.select(
         concat(lit(f"b$i%03d-"), col("key")).as("key"), col("src"))
-      val sketches = Seq[(String, Seq[String], (DataFrame, Long, String) => Unit,
+      val sketches = Seq[(String, Seq[String],
+                          (DataFrame, Long, String, Option[Long]) => Long,
                           (SparkSession, String) => Unit)](
         ("hll", Seq("_hll_regs", "_hll_est"),
-          (b, i, p) => graft.streaming.SketchIngest.applyBatch(b, i, "key", "src", p),
+          (b, i, p, w) => graft.streaming.SketchIngest
+            .applyBatch(b, i, "key", "src", p, w),
           (s, p) => graft.streaming.SketchIngest.compactHll(s, p)),
         ("bloom", Seq("_bloom_pos", "_bloom_novel"),
-          (b, i, p) => graft.streaming.SketchIngest
-            .applyBloomBatch(b, i, "key", p, k = 4, m = 4096),
+          (b, i, p, w) => graft.streaming.SketchIngest
+            .applyBloomBatch(b, i, "key", p, k = 4, m = 4096, knownLast = w),
           (s, p) => graft.streaming.SketchIngest.compactBloom(s, p)),
         ("cms", Seq("_cms_cnt", "_cms_cand", "_cms_est"),
-          (b, i, p) => graft.streaming.SketchIngest
-            .applyCmsBatch(b, i, "key", p, d = 4, w = 1024, topN = 20),
+          (b, i, p, w) => graft.streaming.SketchIngest
+            .applyCmsBatch(b, i, "key", p, d = 4, w = 1024, topN = 20,
+              knownLast = w),
           (s, p) => graft.streaming.SketchIngest.compactCms(s, p)),
         // r11 members: the histogram-quantile and CUSUM monitors join
         // the aging measurement — values/days derived from the key hash
         // so every trigger feeds fresh, deterministic data
         ("hist", Seq("_hist_cnt", "_hist_q"),
-          (b, i, p) => graft.streaming.SketchIngest.applyHistBatch(
+          (b, i, p, w) => graft.streaming.SketchIngest.applyHistBatch(
             b.select(col("src"),
               (abs(xxhash64(col("key"))) % 1000 / lit(2.0)).as("v")),
-            i, "v", "src", p, width = 8d),
+            i, "v", "src", p, width = 8d, knownLast = w),
           (s, p) => graft.streaming.SketchIngest.compactHist(s, p)),
         ("cusum", Seq("_cusum_daily", "_cusum_traj"),
-          (b, i, p) => graft.streaming.SketchIngest.applyCusumBatch(
+          (b, i, p, w) => graft.streaming.SketchIngest.applyCusumBatch(
             b.select(col("src"),
               date_add(lit("2024-01-01").cast("date"),
                 (abs(xxhash64(col("key"))) % 30).cast("int")).as("day"),
               (abs(xxhash64(col("key"))) % 1000 / lit(2.0)).as("v")),
-            i, "v", "day", "src", p, slack = 0d),
+            i, "v", "day", "src", p, slack = 0d, knownLast = w),
           (s, p) => graft.streaming.SketchIngest.compactCusum(s, p)))
       for ((name, tables, apply1, compact1) <- sketches;
            compactEvery <- Seq(0, 8);
@@ -898,8 +902,11 @@ object ScaleProbe {
         val prefix = s"graft_probe_trig_$name"
         tables.foreach(suf =>
           graft.core.Materialize.dropWithLocation(spark, prefix + suf))
+        var watermark = Option.empty[Long]
         val walls = (0 until t).map { i =>
-          val (_, w) = timed { apply1(batchDf(i), i.toLong, prefix) }
+          val (_, w) = timed {
+            watermark = Some(apply1(batchDf(i), i.toLong, prefix, watermark))
+          }
           val isCadence = compactEvery > 0 && (i + 1) % compactEvery == 0
           val (_, c) = timed { if (isCadence) compact1(spark, prefix) }
           (w, if (isCadence) Some(c) else None)

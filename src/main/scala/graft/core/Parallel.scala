@@ -31,7 +31,6 @@ import org.apache.spark.sql.DataFrame
 object Parallel {
 
   def widen(df: DataFrame): DataFrame = {
-    if (sys.env.contains("GRAFT_NO_WIDEN")) return df // A/B kill-switch
     val target = df.sparkSession.sparkContext.defaultParallelism
     // file count is a PROXY for scan splits: a table stored as few
     // files larger than maxPartitionBytes still splits wider than this

@@ -29,10 +29,7 @@ object StreamingQueries {
    * also guarantees a rerun can never resume a prior run's offsets.
    */
   private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession,
-                                     n0: Int)(f: => T): T = {
-    // measurement knob: override the drain's shard count without a
-    // rebuild (SPARK_GRAFT_ST_PARTS=2 bench ...); default = caller's n
-    val n = sys.env.get("SPARK_GRAFT_ST_PARTS").map(_.toInt).getOrElse(n0)
+                                     n: Int)(f: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     val prevCp = s.conf.getOption("spark.sql.streaming.checkpointLocation")
@@ -1056,7 +1053,7 @@ object StreamingQueries {
       graft.core.CacheRegistry.releaseAll()
       s.catalog.refreshTable(prefix + "_state")
       s.catalog.refreshTable(prefix + "_marks")
-      val last = graft.streaming.CorpusIngest.lastAppliedIn(s, prefix + "_marks")
+      val last = graft.streaming.Replay.lastIn(s, prefix + "_marks", "__last_batch")
       s.table(prefix + "_state").filter(col("__batch") === last).distinct()
         .select(col("cluster"), col("dim"), col("c"), col("cnt"))
     }, Some(kmeansIngestOracle(k = 8))),
@@ -1147,7 +1144,7 @@ object StreamingQueries {
       graft.core.CacheRegistry.releaseAll()
       s.catalog.refreshTable(prefix + "_weights")
       s.catalog.refreshTable(prefix + "_marks")
-      val last = graft.streaming.CorpusIngest.lastAppliedIn(s, prefix + "_marks")
+      val last = graft.streaming.Replay.lastIn(s, prefix + "_marks", "__last_batch")
       s.table(prefix + "_weights").filter(col("__batch") === last).distinct()
         .select(col("bucket"), col("weight"))
     }, Some(s"""WITH ${ExtQueries.duckPerceptronChained(batches = 4,

@@ -52,35 +52,32 @@ object ClassifierIngest {
     val spark = batch.sparkSession
     val weightsT = s"${prefix}_weights"
     val marksT = s"${prefix}_marks"
-    val lastApplied = knownLast.getOrElse(CorpusIngest.lastAppliedIn(spark, marksT))
-    if (batchId > lastApplied) {
+    Replay.once(spark, marksT, "__last_batch", batchId, knownLast) { last =>
       // Seed iff no batch has been applied (watermark −1), NOT on
       // table existence — in the batch-0 crash window (weight rows
       // landed, marks write lost) the table exists but the chain must
       // restart from zeros; weightsAt(-1) would coincidentally return
       // zeros, but the intent belongs in the guard, not an accident.
       val init =
-        if (lastApplied < 0) None
-        else Some(weightsAt(spark, prefix, lastApplied, numBuckets))
+        if (last < 0) None
+        else Some(weightsAt(spark, prefix, last, numBuckets))
       val model = Classifier.perceptronTrain(batch.toDF(), bucketsCol,
         labelCol, numBuckets, maxRounds = roundsPerBatch, init = init)
-      val out = model.weightsFrame(spark).withColumn("__batch", lit(batchId))
-      if (!spark.catalog.tableExists(weightsT)) out.write.saveAsTable(weightsT)
-      else out.write.mode("append").saveAsTable(weightsT)
+      model.weightsFrame(spark).withColumn("__batch", lit(batchId))
+        .write.mode("append").saveAsTable(weightsT)
       spark.catalog.refreshTable(weightsT)
       import spark.implicits._
       Seq(batchId).toDF("__last_batch")
         .write.mode("append").saveAsTable(marksT)
       spark.catalog.refreshTable(marksT)
     }
-    math.max(batchId, lastApplied)
   }
 
   def classifierIngest(feats: DataFrame, bucketsCol: String,
                        labelCol: String, prefix: String, numBuckets: Int,
                        roundsPerBatch: Int,
                        checkpoint: Option[String] = None): StreamingQuery =
-    CorpusIngest.guardedIngest(feats, checkpoint)((batch, batchId, last) =>
+    Replay.stream(feats, checkpoint)((batch, batchId, last) =>
       applyTrainBatch(batch, batchId, bucketsCol, labelCol, prefix,
         numBuckets, roundsPerBatch, last))
 }

@@ -13,10 +13,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * within a batch the lowest id wins — so an id-ordered feed converges
  * to exactly the batch dedup's min-id-per-fingerprint survivor set.
  *
- * Exactly-once: foreachBatch is at-least-once (a batch can replay after
- * a crash), and blind append is not idempotent — every appended row
- * carries its batch id and a replayed id skips, the same guard the
- * keyed streaming upsert uses ([[EventStream.upsertUserStats]]).
+ * Exactly-once: every appended row carries its batch id in
+ * `__last_batch`, the guard column of [[Replay]] — a replayed id skips.
  *
  * Scale shape: per batch, ONE hash aggregation on the 64-bit
  * fingerprint (map-side combined) + ONE anti-join against the accepted
@@ -26,32 +24,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * MERGE WHEN NOT MATCHED.
  */
 object CorpusIngest {
-
-  /** Shared stream wrapper for the ingest family: foreachBatch with the
-    * once-per-run replay-watermark guard (seeded by the first trigger's
-    * table read — covers restart-from-checkpoint — then held in
-    * memory). `apply` receives (batch, batchId, knownLast) and returns
-    * the new watermark. */
-  private[streaming] def guardedIngest(rows: DataFrame,
-      checkpoint: Option[String])(
-      apply: (Dataset[Row], Long, Option[Long]) => Long): StreamingQuery = {
-    val guard = new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
-    val w = rows.writeStream
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c))
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        guard.set(Some(apply(batch, batchId, guard.get())))
-      }.start()
-  }
-
-  /** Read the persisted replay watermark (max applied batch id) from an
-    * accepted table — the once-per-stream-start seed for the in-memory
-    * guard the ingest wrappers hold. Exposed so a restarted driver (or a
-    * test) can recover the guard without replicating the expression. */
-  def lastAppliedIn(spark: org.apache.spark.sql.SparkSession,
-                    table: String): Long =
-    if (!spark.catalog.tableExists(table)) -1L
-    else spark.table(table)
-      .agg(coalesce(max(col("__last_batch")), lit(-1L))).head().getLong(0)
 
   /** The per-trigger dedup plan, exposed for plan-shape pinning: dedup
     * within the batch (lowest id per fingerprint — one map-side-combined
@@ -77,11 +49,8 @@ object CorpusIngest {
    * separately from the stream wrapper so the replay guard and
    * cross-batch dedup are directly testable.
    *
-   * Returns the new replay watermark. `knownLast` short-circuits the
-   * watermark read: within a run batch ids are monotonic, so the stream
-   * wrapper seeds it from the table ONCE and then passes its in-memory
-   * value — without it every trigger pays an O(accepted-corpus) scan
-   * just to re-learn a number that cannot have changed.
+   * Returns the new replay watermark; `knownLast` is the watermark
+   * [[Replay.stream]] holds (a direct call reads it from the table).
    *
    * The accepted table is BUCKETED on `__fp`
    * ([[graft.core.Materialize.bucketTable]]/[[graft.core.Materialize.bucketAppend]]),
@@ -101,11 +70,10 @@ object CorpusIngest {
     // batch's anti-join sees only the state from before the stream
     // started and the dedup silently degrades to per-batch.
     val spark = batch.sparkSession
-    val exists = spark.catalog.tableExists(table)
-    val lastApplied = knownLast.getOrElse(lastAppliedIn(spark, table))
-    if (batchId > lastApplied) {
-      val fresh = batchSurvivors(batch, idCol, textCol, table)
-      val out = fresh.withColumn("__last_batch", lit(batchId))
+    Replay.once(spark, table, "__last_batch", batchId, knownLast) { _ =>
+      val exists = spark.catalog.tableExists(table)
+      val out = batchSurvivors(batch, idCol, textCol, table)
+        .withColumn("__last_batch", lit(batchId))
       if (!exists)
         graft.core.Materialize.bucketTable(spark, table, out,
           buckets = 8, bucketCols = Seq("__fp"))
@@ -114,13 +82,12 @@ object CorpusIngest {
           buckets = 8, bucketCols = Seq("__fp"))
       spark.catalog.refreshTable(table)
     }
-    math.max(batchId, lastApplied)
   }
 
   def dedupIngest(docs: DataFrame, idCol: String, textCol: String,
                   table: String,
                   checkpoint: Option[String] = None): StreamingQuery =
-    guardedIngest(docs, checkpoint)(
+    Replay.stream(docs, checkpoint)(
       applyBatch(_, _, idCol, textCol, table, _))
 
   /**
@@ -154,7 +121,6 @@ object CorpusIngest {
     val docsT = s"${prefix}_docs"
     val bandsT = s"${prefix}_bands"
     val shinglesT = s"${prefix}_shingles"
-    val lastApplied = knownLast.getOrElse(lastAppliedIn(spark, docsT))
     // SCOPED release: everything this trigger computes is materialized
     // by the end of the block, so the operator-internal persist
     // barriers (shingle/band/verdict frames) are released — without a
@@ -163,63 +129,64 @@ object CorpusIngest {
     // destroy caller-owned tracked caches/broadcasts registered before
     // it ran (a destroyed broadcast hard-fails the caller's later
     // actions; see CacheRegistry.scoped).
-    if (batchId > lastApplied) graft.core.CacheRegistry.scoped {
-      if (!spark.catalog.tableExists(bandsT)) {
-        // first batch: seed EMPTY index tables with the right schema so
-        // every batch takes the same dedup-then-append path
-        val (b0, s0) = graft.ext.Dedup.nearDupIndex(batch.limit(0), idCol,
-          textCol, shingleK, numHashes, bands)
-        graft.core.Materialize.bucketTable(spark, bandsT, b0,
-          buckets = 8, bucketCols = Seq("band", "band_hash"))
-        graft.core.Materialize.bucketTable(spark, shinglesT, s0,
-          buckets = 8, bucketCols = Seq(idCol))
+    Replay.once(spark, docsT, "__last_batch", batchId, knownLast) { _ =>
+      graft.core.CacheRegistry.scoped {
+        if (!spark.catalog.tableExists(bandsT)) {
+          // first batch: seed EMPTY index tables with the right schema so
+          // every batch takes the same dedup-then-append path
+          val (b0, s0) = graft.ext.Dedup.nearDupIndex(batch.limit(0), idCol,
+            textCol, shingleK, numHashes, bands)
+          graft.core.Materialize.bucketTable(spark, bandsT, b0,
+            buckets = 8, bucketCols = Seq("band", "band_hash"))
+          graft.core.Materialize.bucketTable(spark, shinglesT, s0,
+            buckets = 8, bucketCols = Seq(idCol))
+        }
+        // exactly-once per id: docs already accepted (possible only when a
+        // replayed feed re-presents an id) never re-enter the pipeline
+        val batchNew =
+          if (!spark.catalog.tableExists(docsT)) batch.toDF()
+          else batch.join(spark.table(docsT).select(col(idCol)),
+            Seq(idCol), "left_anti")
+        // EAGER lineage cut before the appends: the survivor plan reads
+        // the very tables the appends mutate (same hazard documented at
+        // ext_dedup_index_growth), so materialize it to rows first. The
+        // WithBatchIndex variant hands back the batch's own band/shingle
+        // frames — the very tables the dedup banded and verified with —
+        // so growing the index is a survivor-id semi-join over work
+        // already done, not a second full MinHash pass over the survivor
+        // text per trigger.
+        val (survPlan, batchBands, batchShingles) =
+          graft.ext.Dedup.incrementalNearDupWithBatchIndex(batchNew,
+            spark.table(bandsT), spark.table(shinglesT), idCol, textCol,
+            threshold, shingleK, numHashes, bands)
+        val surv = survPlan.localCheckpoint()
+        val survIds = surv.select(col(idCol))
+        // safe against cache eviction: these plans read only the batch
+        // source and the accepted-docs table, neither of which mutates
+        // before the docs write below
+        val bN = batchBands.join(survIds, Seq(idCol), "left_semi")
+        val sN = batchShingles.join(survIds, Seq(idCol), "left_semi")
+        // the two index appends are independent (both semi-join the
+        // checkpointed survivors) and target different tables — run them
+        // as concurrent jobs. Only the DOCS write below must stay last
+        // (it carries the replay watermark); the index appends may land
+        // in any order, replay absorbs partial appends (scaladoc above).
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val fb = Future { graft.core.Materialize.bucketAppend(spark, bandsT, bN,
+          buckets = 8, bucketCols = Seq("band", "band_hash")) }
+        val fs = Future { graft.core.Materialize.bucketAppend(spark, shinglesT, sN,
+          buckets = 8, bucketCols = Seq(idCol)) }
+        Await.result(fb, Duration.Inf)
+        Await.result(fs, Duration.Inf)
+        spark.catalog.refreshTable(bandsT)
+        spark.catalog.refreshTable(shinglesT)
+        surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
+          .write.mode("append").saveAsTable(docsT)
+        spark.catalog.refreshTable(docsT)
       }
-      // exactly-once per id: docs already accepted (possible only when a
-      // replayed feed re-presents an id) never re-enter the pipeline
-      val batchNew =
-        if (!spark.catalog.tableExists(docsT)) batch.toDF()
-        else batch.join(spark.table(docsT).select(col(idCol)),
-          Seq(idCol), "left_anti")
-      // EAGER lineage cut before the appends: the survivor plan reads
-      // the very tables the appends mutate (same hazard documented at
-      // ext_dedup_index_growth), so materialize it to rows first. The
-      // WithBatchIndex variant hands back the batch's own band/shingle
-      // frames — the very tables the dedup banded and verified with —
-      // so growing the index is a survivor-id semi-join over work
-      // already done, not a second full MinHash pass over the survivor
-      // text per trigger.
-      val (survPlan, batchBands, batchShingles) =
-        graft.ext.Dedup.incrementalNearDupWithBatchIndex(batchNew,
-          spark.table(bandsT), spark.table(shinglesT), idCol, textCol,
-          threshold, shingleK, numHashes, bands)
-      val surv = survPlan.localCheckpoint()
-      val survIds = surv.select(col(idCol))
-      // safe against cache eviction: these plans read only the batch
-      // source and the accepted-docs table, neither of which mutates
-      // before the docs write below
-      val bN = batchBands.join(survIds, Seq(idCol), "left_semi")
-      val sN = batchShingles.join(survIds, Seq(idCol), "left_semi")
-      // the two index appends are independent (both semi-join the
-      // checkpointed survivors) and target different tables — run them
-      // as concurrent jobs. Only the DOCS write below must stay last
-      // (it carries the replay watermark); the index appends may land
-      // in any order, replay absorbs partial appends (scaladoc above).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fb = Future { graft.core.Materialize.bucketAppend(spark, bandsT, bN,
-        buckets = 8, bucketCols = Seq("band", "band_hash")) }
-      val fs = Future { graft.core.Materialize.bucketAppend(spark, shinglesT, sN,
-        buckets = 8, bucketCols = Seq(idCol)) }
-      Await.result(fb, Duration.Inf)
-      Await.result(fs, Duration.Inf)
-      spark.catalog.refreshTable(bandsT)
-      spark.catalog.refreshTable(shinglesT)
-      surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
-        .write.mode("append").saveAsTable(docsT)
-      spark.catalog.refreshTable(docsT)
     }
-    math.max(batchId, lastApplied)
   }
 
   /**
@@ -236,7 +203,7 @@ object CorpusIngest {
                     shingleK: Int = 3, numHashes: Int = 64,
                     bands: Int = 32,
                     checkpoint: Option[String] = None): StreamingQuery =
-    guardedIngest(docs, checkpoint)((batch, batchId, last) =>
+    Replay.stream(docs, checkpoint)((batch, batchId, last) =>
       applyNearDupBatch(batch, batchId, idCol, textCol,
         prefix, threshold, shingleK, numHashes, bands, last))
 
@@ -254,7 +221,7 @@ object CorpusIngest {
                      shingleK: Int = 3, numHashes: Int = 64,
                      bands: Int = 32,
                      checkpoint: Option[String] = None): StreamingQuery =
-    guardedIngest(docs, checkpoint) { (batch, batchId, last) =>
+    Replay.stream(docs, checkpoint) { (batch, batchId, last) =>
       // persist the gated batch for the trigger: the survivor plan and
       // the batch-index frames both read it, and without a barrier the
       // explode + double-agg gate chain recomputes per consumer. The

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -26,8 +26,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * pass (the per-trigger bin frame is cached scoped, so psi and ks both
  * read it without a second batch scan); all drift arithmetic after that
  * is bins-sized regardless of baseline size or monitor age. The
- * appended row is O(1). Replay-guarded by batch id: a crash-replayed
- * trigger finds its row already present and appends nothing.
+ * appended row is O(1) and is the [[Replay]] guard (`batch_id`): a
+ * crash-replayed trigger is at or below the watermark and appends
+ * nothing.
  */
 object DriftMonitor {
 
@@ -64,32 +65,13 @@ object DriftMonitor {
                           tablePrefix: String, rebaselineEvery: Int,
                           checkpoint: Option[String] = None): StreamingQuery = {
     require(rebaselineEvery > 0, "rebaselineEvery must be positive")
-    val spark = ref.sparkSession
     val refBins = graft.core.CacheRegistry.persistTracked(
       graft.ext.Corpus.binCounts(ref, valueCol, binWidth))
     refBins.count() // pin the initial baseline before the first trigger
-    // in-memory replay watermark (the CorpusIngest.guardedIngest
-    // convention): seeded from the guard table on the first trigger,
-    // held in memory after — replaces a per-trigger guard-count job
-    val guard =
-      new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
-    val writer = stream.writeStream.outputMode("append")
-    checkpoint.foreach(cp => writer.option("checkpointLocation", cp))
-    writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val last = guard.get().getOrElse(
-        lastBatchIn(batch.sparkSession, tablePrefix + "_psi"))
-      guard.set(Some(applyPsiRebaselineBatch(batch.toDF(), batchId, refBins,
-        valueCol, binWidth, tablePrefix, rebaselineEvery, Some(last))))
-    }.start()
+    Replay.stream(stream, checkpoint)((batch, batchId, last) =>
+      applyPsiRebaselineBatch(batch.toDF(), batchId, refBins, valueCol,
+        binWidth, tablePrefix, rebaselineEvery, last))
   }
-
-  /** Max committed batch id in a monitor table (−1 when absent/empty) —
-    * the once-per-stream-start watermark seed. */
-  private def lastBatchIn(spark: org.apache.spark.sql.SparkSession,
-                          table: String): Long =
-    if (!spark.catalog.tableExists(table)) -1L
-    else spark.table(table)
-      .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0)
 
   /** One re-baselining trigger, exposed for direct at-least-once
     * testing (the CorpusIngest.applyBatch convention). `refBins` is the
@@ -102,78 +84,70 @@ object DriftMonitor {
     val spark = batch.sparkSession
     val table = tablePrefix + "_psi"
     val binsT = tablePrefix + "_psi_bins"
-    val replayed = knownLast.map(batchId <= _).getOrElse(
-      spark.catalog.tableExists(table) &&
-        spark.table(table).filter(col("batch_id") === batchId).count() > 0)
-    if (!replayed) graft.core.CacheRegistry.scoped {
-      // bin-row count rides the bins append as an Observation — one
-      // job per trigger fewer than a dedicated count(); an empty batch
-      // appends a zero-row bins file (invisible to the reference
-      // reader's dedupe+sum) and still writes NO scored/guard row
-      val obs = org.apache.spark.sql.Observation()
-      val bb = graft.core.CacheRegistry.persistTracked(
-        graft.ext.Corpus.binCounts(batch, valueCol, binWidth)
-          .observe(obs, count(lit(1)).as("n")))
-      // bins FIRST (replay-idempotent under the reader's dedupe),
-      // scored row LAST (the guard)
-      bb.select(lit(batchId).as("batch_id"), col("bin"), col("n"))
-        .coalesce(1) // bounded: bins per batch
-        .write.mode("append").format("parquet").saveAsTable(binsT)
-      spark.catalog.refreshTable(binsT)
-      if (obs.get("n").asInstanceOf[Long] > 0) {
-        val w = batchId / rebaselineEvery
-        val refW =
-          if (w == 0) refBins
-          else spark.table(binsT)
-            .filter(col("batch_id") >= (w - 1) * rebaselineEvery &&
-              col("batch_id") < w * rebaselineEvery)
-            .dropDuplicates("batch_id", "bin")
-            .groupBy(col("bin")).agg(sum(col("n")).as("n"))
-        val psiRow = graft.ext.Corpus.psiDriftFromBins(refW, bb)
-          .agg(round(sum(col("psi_term")) + lit(1e-9), 6).as("psi"),
-            sum(col("n_new")).as("n_rows"))
-        val ksRow = graft.ext.Corpus.ksDriftFromBins(refW, bb)
-          .agg(max(col("gap")).as("ks"))
-        psiRow.crossJoin(ksRow)
-          .select(lit(batchId).as("batch_id"),
-            lit(if (w == 0) -1L else w - 1).as("ref_window"),
-            col("psi"), col("ks"), col("n_rows"))
-          .write.mode("append").format("parquet").saveAsTable(table)
+    Replay.once(spark, table, "batch_id", batchId, knownLast) { _ =>
+      graft.core.CacheRegistry.scoped {
+        // bin-row count rides the bins append as an Observation — one
+        // job per trigger fewer than a dedicated count(); an empty batch
+        // appends a zero-row bins file (invisible to the reference
+        // reader's dedupe+sum) and still writes NO scored/guard row
+        val obs = org.apache.spark.sql.Observation()
+        val bb = graft.core.CacheRegistry.persistTracked(
+          graft.ext.Corpus.binCounts(batch, valueCol, binWidth)
+            .observe(obs, count(lit(1)).as("n")))
+        // bins FIRST (replay-idempotent under the reader's dedupe),
+        // scored row LAST (the guard)
+        bb.select(lit(batchId).as("batch_id"), col("bin"), col("n"))
+          .coalesce(1) // bounded: bins per batch
+          .write.mode("append").format("parquet").saveAsTable(binsT)
+        spark.catalog.refreshTable(binsT)
+        if (obs.get("n").asInstanceOf[Long] > 0) {
+          val w = batchId / rebaselineEvery
+          val refW =
+            if (w == 0) refBins
+            else spark.table(binsT)
+              .filter(col("batch_id") >= (w - 1) * rebaselineEvery &&
+                col("batch_id") < w * rebaselineEvery)
+              .dropDuplicates("batch_id", "bin")
+              .groupBy(col("bin")).agg(sum(col("n")).as("n"))
+          val psiRow = graft.ext.Corpus.psiDriftFromBins(refW, bb)
+            .agg(round(sum(col("psi_term")) + lit(1e-9), 6).as("psi"),
+              sum(col("n_new")).as("n_rows"))
+          val ksRow = graft.ext.Corpus.ksDriftFromBins(refW, bb)
+            .agg(max(col("gap")).as("ks"))
+          psiRow.crossJoin(ksRow)
+            .select(lit(batchId).as("batch_id"),
+              lit(if (w == 0) -1L else w - 1).as("ref_window"),
+              col("psi"), col("ks"), col("n_rows"))
+            .write.mode("append").format("parquet").saveAsTable(table)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   def psiIngest(stream: DataFrame, ref: DataFrame, valueCol: String,
                 binWidth: Double, tablePrefix: String,
                 checkpoint: Option[String] = None): StreamingQuery = {
-    val spark = ref.sparkSession
     val table = tablePrefix + "_psi"
     val refBins = graft.core.CacheRegistry.persistTracked(
       graft.ext.Corpus.binCounts(ref, valueCol, binWidth))
     refBins.count() // pin the baseline before the first trigger
-    // in-memory replay watermark, seeded once (see psiRebaselineIngest)
-    val guard =
-      new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
-    val writer = stream.writeStream.outputMode("append")
-    checkpoint.foreach(cp => writer.option("checkpointLocation", cp))
-    writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val last = guard.get().getOrElse(lastBatchIn(batch.sparkSession, table))
-      if (batchId > last) graft.core.CacheRegistry.scoped {
-        val bb = graft.core.CacheRegistry.persistTracked(
-          graft.ext.Corpus.binCounts(batch.toDF(), valueCol, binWidth))
-        val psiRow = graft.ext.Corpus.psiDriftFromBins(refBins, bb)
-          .agg(round(sum(col("psi_term")) + lit(1e-9), 6).as("psi"),
-            sum(col("n_new")).as("n_rows"))
-        val ksRow = graft.ext.Corpus.ksDriftFromBins(refBins, bb)
-          .agg(max(col("gap")).as("ks"))
-        val scored = psiRow.crossJoin(ksRow)
-          .select(lit(batchId).as("batch_id"), col("psi"), col("ks"),
-            col("n_rows"))
-          .filter(col("n_rows") > 0) // empty replay/trigger: no row
-        scored.write.mode("append").format("parquet").saveAsTable(table)
+    Replay.stream(stream, checkpoint) { (batch, batchId, known) =>
+      Replay.once(batch.sparkSession, table, "batch_id", batchId, known) { _ =>
+        graft.core.CacheRegistry.scoped {
+          val bb = graft.core.CacheRegistry.persistTracked(
+            graft.ext.Corpus.binCounts(batch.toDF(), valueCol, binWidth))
+          val psiRow = graft.ext.Corpus.psiDriftFromBins(refBins, bb)
+            .agg(round(sum(col("psi_term")) + lit(1e-9), 6).as("psi"),
+              sum(col("n_new")).as("n_rows"))
+          val ksRow = graft.ext.Corpus.ksDriftFromBins(refBins, bb)
+            .agg(max(col("gap")).as("ks"))
+          val scored = psiRow.crossJoin(ksRow)
+            .select(lit(batchId).as("batch_id"), col("psi"), col("ks"),
+              col("n_rows"))
+            .filter(col("n_rows") > 0) // empty replay/trigger: no row
+          scored.write.mode("append").format("parquet").saveAsTable(table)
+        }
       }
-      guard.set(Some(math.max(batchId, last)))
-    }.start()
+    }
   }
 }

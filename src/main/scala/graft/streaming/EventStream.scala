@@ -295,29 +295,22 @@ object EventStream {
    * transactional table format the fold+swap collapses into one MERGE
    * INTO; the per-batch shape is identical.
    *
-   * foreachBatch is at-least-once: a batch can REPLAY after a crash
-   * (the table commit landed, the offset commit did not), and the fold
-   * is not idempotent — so every row carries the id of the last batch
-   * folded in (`__last_batch`), and an already-applied id skips. The
-   * watermark is read from the table ONCE per stream start and then
-   * held in memory ([[CorpusIngest.guardedIngest]]): within a run batch
-   * ids only grow, so no trigger pays a guard job, and a restart
-   * re-seeds from the table, which skips exactly the committed prefix.
-   * With the checkpointed offsets this makes the upsert effectively
-   * exactly-once (the guard a MERGE-by-batch-id gives on a
-   * transactional format).
+   * foreachBatch is at-least-once and the fold is not idempotent, so
+   * every row carries the id of the last batch folded in
+   * (`__last_batch`), the [[Replay]] guard column: an already-applied
+   * id skips. The fold and its id land in ONE swap, so there is no
+   * partial state to absorb. With the checkpointed offsets this makes
+   * the upsert effectively exactly-once (the guard a MERGE-by-batch-id
+   * gives on a transactional format).
    */
   def upsertUserStats(events: DataFrame, table: String,
                       checkpoint: Option[String] = None): StreamingQuery = {
     val spark = events.sparkSession
-    CorpusIngest.guardedIngest(events, checkpoint) { (batch, batchId, known) =>
-      val lastApplied = known.getOrElse(CorpusIngest.lastAppliedIn(spark, table))
-      if (batchId <= lastApplied) lastApplied
-      else {
+    Replay.stream(events, checkpoint) { (batch, batchId, known) =>
+      Replay.once(spark, table, "__last_batch", batchId, known) { _ =>
         val prev = if (spark.catalog.tableExists(table)) Some(spark.table(table)) else None
         graft.core.Materialize.replaceTable(spark, table,
           foldUserStats(batch, prev).withColumn("__last_batch", lit(batchId)))
-        batchId
       }
     }
   }

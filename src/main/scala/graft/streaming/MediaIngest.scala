@@ -36,28 +36,24 @@ object MediaIngest {
     val spark = batch.sparkSession
     val metaT = s"${prefix}_meta"
     val marksT = s"${prefix}_marks"
-    val lastApplied = knownLast.getOrElse(CorpusIngest.lastAppliedIn(spark, marksT))
-    if (batchId > lastApplied) {
-      val media = graft.ext.Multimodal.toMediaFrame(
+    Replay.once(spark, marksT, "__last_batch", batchId, knownLast) { _ =>
+      graft.ext.Multimodal.toMediaFrame(
           batch.toDF(), idCol, payloadCol, mediaType)
         .select(col("media_id"), col("media_type"),
           col("meta.n_bytes").as("n_bytes"))
-      if (!spark.catalog.tableExists(metaT))
-        media.write.saveAsTable(metaT)
-      else media.write.mode("append").saveAsTable(metaT)
+        .write.mode("append").saveAsTable(metaT)
       spark.catalog.refreshTable(metaT)
       import spark.implicits._
       Seq(batchId).toDF("__last_batch")
         .write.mode("append").saveAsTable(marksT)
       spark.catalog.refreshTable(marksT)
     }
-    math.max(batchId, lastApplied)
   }
 
   def mediaIngest(rows: DataFrame, idCol: String, payloadCol: String,
                   mediaType: org.apache.spark.sql.Column, prefix: String,
                   checkpoint: Option[String] = None): StreamingQuery =
-    CorpusIngest.guardedIngest(rows, checkpoint)((batch, batchId, last) =>
+    Replay.stream(rows, checkpoint)((batch, batchId, last) =>
       applyMediaBatch(batch, batchId, idCol, payloadCol, mediaType,
         prefix, last))
 }

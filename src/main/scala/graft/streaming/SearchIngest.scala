@@ -58,41 +58,39 @@ object SearchIngest {
 
   /** Apply one micro-batch: append its postings to the term-bucketed
     * index, then record its additive stats row (watermark write, LAST).
-    * Returns the new replay watermark; `knownLast` as in
-    * [[CorpusIngest.applyBatch]]. */
+    * Returns the new [[Replay]] watermark. */
   def applyBm25Batch(batch: Dataset[Row], batchId: Long, idCol: String,
                      textCol: String, prefix: String, buckets: Int = 16,
                      knownLast: Option[Long] = None): Long = {
     val spark = batch.sparkSession
     val postT = s"${prefix}_postings"
     val statsT = s"${prefix}_stats"
-    val lastApplied = knownLast.getOrElse(CorpusIngest.lastAppliedIn(spark, statsT))
-    if (batchId > lastApplied) graft.core.CacheRegistry.scoped {
-      val tf = graft.core.CacheRegistry.persistTracked(
-        postingsOf(batch.toDF(), idCol, textCol))
-      if (!spark.catalog.tableExists(postT))
-        graft.core.Materialize.bucketTable(spark, postT, tf,
-          buckets = buckets, bucketCols = Seq("term"))
-      else
-        graft.core.Materialize.bucketAppend(spark, postT, tf,
-          buckets = buckets, bucketCols = Seq("term"))
-      spark.catalog.refreshTable(postT)
-      // batch-additive corpus stats; docs with no tokens contribute no
-      // postings and stay out of n_docs — the inverted-index convention
-      tf.agg(countDistinct(col("doc_id")).as("n_docs"),
-          sum(col("tc")).as("n_tokens"))
-        .withColumn("__last_batch", lit(batchId))
-        .write.mode("append").saveAsTable(statsT)
-      spark.catalog.refreshTable(statsT)
+    Replay.once(spark, statsT, "__last_batch", batchId, knownLast) { _ =>
+      graft.core.CacheRegistry.scoped {
+        val tf = graft.core.CacheRegistry.persistTracked(
+          postingsOf(batch.toDF(), idCol, textCol))
+        if (!spark.catalog.tableExists(postT))
+          graft.core.Materialize.bucketTable(spark, postT, tf,
+            buckets = buckets, bucketCols = Seq("term"))
+        else
+          graft.core.Materialize.bucketAppend(spark, postT, tf,
+            buckets = buckets, bucketCols = Seq("term"))
+        spark.catalog.refreshTable(postT)
+        // batch-additive corpus stats; docs with no tokens contribute no
+        // postings and stay out of n_docs — the inverted-index convention
+        tf.agg(countDistinct(col("doc_id")).as("n_docs"),
+            sum(col("tc")).as("n_tokens"))
+          .withColumn("__last_batch", lit(batchId))
+          .write.mode("append").saveAsTable(statsT)
+        spark.catalog.refreshTable(statsT)
+      }
     }
-    math.max(batchId, lastApplied)
   }
 
-  /** Streaming wrapper: watermark seeded from the stats table on the
-    * first trigger, then held in memory. */
+  /** Streaming wrapper ([[Replay.stream]]). */
   def bm25Ingest(docs: DataFrame, idCol: String, textCol: String,
                  prefix: String, buckets: Int = 16,
                  checkpoint: Option[String] = None): StreamingQuery =
-    CorpusIngest.guardedIngest(docs, checkpoint)(
+    Replay.stream(docs, checkpoint)(
       applyBm25Batch(_, _, idCol, textCol, prefix, buckets, _))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Materialize.replaceTable
@@ -66,57 +66,19 @@ object SketchIngest {
     (if (bounded) df.coalesce(1) else df)
       .write.mode("append").format("parquet").saveAsTable(table)
 
-  /** Has this batch already committed its LAST (guard) write? A
-    * batch_id-filtered count over the guard table (parquet min/max
-    * stats skip the other batches' row groups) — run only by direct
-    * callers without a watermark, never on the streaming trigger path. */
-  private def committed(spark: SparkSession, guardTable: String,
-                        batchId: Long): Boolean =
-    spark.catalog.tableExists(guardTable) &&
-      spark.table(guardTable).filter(col("batch_id") === batchId).count() > 0
-
-  /** Max committed batch id in a guard table (−1 when absent/empty) —
-    * the once-per-stream-start seed for the in-memory replay watermark
-    * the ingest wrappers hold (the [[CorpusIngest.guardedIngest]]
-    * convention): within a run batch ids are monotonic, so one seed
-    * read replaces a per-trigger [[committed]] probe job. Restart from
-    * checkpoint re-seeds from the table, so crash-replay still skips
-    * exactly the committed prefix. */
-  private[streaming] def lastCommittedIn(spark: SparkSession,
-                                         guardTable: String): Long =
-    if (!spark.catalog.tableExists(guardTable)) -1L
-    else spark.table(guardTable)
-      .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0)
-
-  /** Replay check shared by the apply* entry points: an in-memory
-    * watermark when the stream wrapper threads one (`knownLast`), the
-    * per-batch [[committed]] probe otherwise (direct/test callers). */
-  private def alreadyApplied(spark: SparkSession, guardTable: String,
-                             batchId: Long,
-                             knownLast: Option[Long]): Boolean =
-    knownLast.map(batchId <= _)
-      .getOrElse(committed(spark, guardTable, batchId))
-
-  /** foreachBatch wrapper with the in-memory replay watermark (the
-    * [[CorpusIngest.guardedIngest]] convention): seeded ONCE from the
-    * guard table — a no-op read when the table doesn't exist yet, i.e.
-    * every fresh monitor — then held in memory, so the per-trigger
-    * [[committed]] probe job disappears from the steady-state trigger
-    * path. Restart from checkpoint re-seeds from the table, preserving
-    * the crash-replay skip. `apply` returns the new watermark. */
-  private def guardedStart(stream: DataFrame, checkpoint: Option[String],
-                           guardTable: String)(
-      apply: (Dataset[Row], Long, Option[Long]) => Long): StreamingQuery = {
-    val guard =
-      new java.util.concurrent.atomic.AtomicReference[Option[Long]](None)
-    val writer = stream.writeStream.outputMode("append")
-    checkpoint.foreach(cp => writer.option("checkpointLocation", cp))
-    writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val last = guard.get().getOrElse(
-        lastCommittedIn(batch.sparkSession, guardTable))
-      guard.set(Some(apply(batch, batchId, Some(last))))
-    }.start()
-  }
+  /** The stream wrapper of every monitor here: [[Replay.stream]] over
+    * the monitor's `apply`, then the in-trigger compaction cadence (see
+    * [[hllIngest]]'s `compactEvery`). */
+  private def monitor(stream: DataFrame, checkpoint: Option[String],
+                      compactEvery: Int)(
+      apply: (DataFrame, Long, Option[Long]) => Long)(
+      compact: SparkSession => Unit): StreamingQuery =
+    Replay.stream(stream, checkpoint) { (batch, batchId, last) =>
+      val w = apply(batch.toDF(), batchId, last)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        compact(batch.sparkSession)
+      w
+    }
 
   /** `compactEvery` (0 = never; DEFAULT 8, the measured recommendation
     * — SCALE.md's trigger-growth table shows uncompacted state walls
@@ -133,14 +95,9 @@ object SketchIngest {
                 tablePrefix: String,
                 checkpoint: Option[String] = None,
                 compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_hll_est") {
-      (batch, batchId, last) =>
-        val w = applyBatch(batch.toDF(), batchId, keyCol, groupCol,
-          tablePrefix, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactHll(batch.sparkSession, tablePrefix)
-        w
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyBatch(_, _, keyCol, groupCol, tablePrefix, _))(
+      compactHll(_, tablePrefix))
 
   /**
    * Streaming SET-EXPRESSION cardinality monitor: every micro-batch
@@ -171,14 +128,9 @@ object SketchIngest {
                 tablePrefix: String, k: Int = 256,
                 checkpoint: Option[String] = None,
                 compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_kmv_est") {
-      (batch, batchId, last) =>
-        val w = applyBatchKmv(batch.toDF(), batchId, keyCol, groupCol,
-          tablePrefix, k, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactKmv(batch.sparkSession, tablePrefix, k)
-        w
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyBatchKmv(_, _, keyCol, groupCol, tablePrefix, k, _))(
+      compactKmv(_, tablePrefix, k))
 
   /** One KMV trigger's work, exposed for direct at-least-once testing
     * (the [[applyBatch]] convention). */
@@ -188,30 +140,30 @@ object SketchIngest {
     val spark = batch.sparkSession
     val hashT = tablePrefix + "_kmv_hashes"
     val estT = tablePrefix + "_kmv_est"
-    if (!alreadyApplied(spark, estT, batchId, knownLast))
+    Replay.once(spark, estT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // count rides the hash append as an Observation (see applyBatch)
-      val obs = org.apache.spark.sql.Observation()
-      val b = graft.core.CacheRegistry.persistTracked(
-        batch.observe(obs, count(lit(1)).as("n")))
-      graft.functions.KmvSketch
-        .bottomKAgg(b, keyCol, k, Seq(groupCol))
-        .select(col(groupCol), col("hash"))
-        .coalesce(1) // ≤ k rows per group — one file per trigger
-        .write.mode("append").format("parquet").saveAsTable(hashT)
-      spark.catalog.refreshTable(hashT)
-      val nNew = obs.get("n").asInstanceOf[Long]
-      if (nNew > 0) {
-        val collapsed = graft.functions.KmvSketch
-          .rerank(spark.table(hashT), k, Seq(groupCol))
-        appendByBatch(
-          graft.functions.KmvSketch.estimate(collapsed, k, Seq(groupCol))
-            .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
-              lit(nNew).as("n_new")),
-          estT, bounded = false)
+        // count rides the hash append as an Observation (see applyBatch)
+        val obs = org.apache.spark.sql.Observation()
+        val b = graft.core.CacheRegistry.persistTracked(
+          batch.observe(obs, count(lit(1)).as("n")))
+        graft.functions.KmvSketch
+          .bottomKAgg(b, keyCol, k, Seq(groupCol))
+          .select(col(groupCol), col("hash"))
+          .coalesce(1) // ≤ k rows per group — one file per trigger
+          .write.mode("append").format("parquet").saveAsTable(hashT)
+        spark.catalog.refreshTable(hashT)
+        val nNew = obs.get("n").asInstanceOf[Long]
+        if (nNew > 0) {
+          val collapsed = graft.functions.KmvSketch
+            .rerank(spark.table(hashT), k, Seq(groupCol))
+          appendByBatch(
+            graft.functions.KmvSketch.estimate(collapsed, k, Seq(groupCol))
+              .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
+                lit(nNew).as("n_new")),
+            estT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /**
@@ -262,14 +214,9 @@ object SketchIngest {
                 groupCol: String, tablePrefix: String, k: Int = 256,
                 checkpoint: Option[String] = None,
                 compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_qsk_q") {
-      (batch, batchId, last) =>
-        val w = applyBatchQsk(batch.toDF(), batchId, idCol, valCol, groupCol,
-          tablePrefix, k, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactQsk(batch.sparkSession, tablePrefix, k)
-        w
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyBatchQsk(_, _, idCol, valCol, groupCol, tablePrefix, k, _))(
+      compactQsk(_, tablePrefix, k))
 
   /** One quantile-sketch trigger's work, exposed for direct
     * at-least-once testing (the [[applyBatch]] convention). */
@@ -279,31 +226,31 @@ object SketchIngest {
     val spark = batch.sparkSession
     val sampleT = tablePrefix + "_qsk_sample"
     val estT = tablePrefix + "_qsk_q"
-    if (!alreadyApplied(spark, estT, batchId, knownLast))
+    Replay.once(spark, estT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // count rides the sample append as an Observation (see applyBatch)
-      val obs = org.apache.spark.sql.Observation()
-      val b = graft.core.CacheRegistry.persistTracked(
-        batch.observe(obs, count(lit(1)).as("n")))
-      graft.functions.QuantileSketch
-        .bottomKSampleAgg(b, idCol, valCol, k, Seq(groupCol))
-        .select(col(groupCol), col("hash"), col("val"))
-        .coalesce(1) // ≤ k rows per group — one file per trigger
-        .write.mode("append").format("parquet").saveAsTable(sampleT)
-      spark.catalog.refreshTable(sampleT)
-      val nNew = obs.get("n").asInstanceOf[Long]
-      if (nNew > 0) {
-        val collapsed = graft.functions.QuantileSketch
-          .resample(spark.table(sampleT), k, Seq(groupCol))
-        appendByBatch(
-          graft.functions.QuantileSketch.estimateQuantiles(collapsed,
-              Seq("p50" -> 0.5, "p90" -> 0.9), Seq(groupCol))
-            .select(lit(batchId).as("batch_id"), col(groupCol), col("m"),
-              col("p50"), col("p90"), lit(nNew).as("n_new")),
-          estT, bounded = false)
+        // count rides the sample append as an Observation (see applyBatch)
+        val obs = org.apache.spark.sql.Observation()
+        val b = graft.core.CacheRegistry.persistTracked(
+          batch.observe(obs, count(lit(1)).as("n")))
+        graft.functions.QuantileSketch
+          .bottomKSampleAgg(b, idCol, valCol, k, Seq(groupCol))
+          .select(col(groupCol), col("hash"), col("val"))
+          .coalesce(1) // ≤ k rows per group — one file per trigger
+          .write.mode("append").format("parquet").saveAsTable(sampleT)
+        spark.catalog.refreshTable(sampleT)
+        val nNew = obs.get("n").asInstanceOf[Long]
+        if (nNew > 0) {
+          val collapsed = graft.functions.QuantileSketch
+            .resample(spark.table(sampleT), k, Seq(groupCol))
+          appendByBatch(
+            graft.functions.QuantileSketch.estimateQuantiles(collapsed,
+                Seq("p50" -> 0.5, "p90" -> 0.9), Seq(groupCol))
+              .select(lit(batchId).as("batch_id"), col(groupCol), col("m"),
+                col("p50"), col("p90"), lit(nNew).as("n_new")),
+            estT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /**
@@ -354,14 +301,9 @@ object SketchIngest {
                          tablePrefix: String, k: Int, m: Int,
                          checkpoint: Option[String] = None,
                          compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_bloom_novel") {
-      (batch, batchId, last) =>
-        val w = applyBloomBatch(batch.toDF(), batchId, keyCol, tablePrefix,
-          k, m, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactBloom(batch.sparkSession, tablePrefix)
-        w
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyBloomBatch(_, _, keyCol, tablePrefix, k, m, _))(
+      compactBloom(_, tablePrefix))
 
   /** One novelty-gate trigger, exposed for direct at-least-once testing. */
   def applyBloomBatch(batch: DataFrame, batchId: Long, keyCol: String,
@@ -370,31 +312,31 @@ object SketchIngest {
     val spark = batch.sparkSession
     val posT = tablePrefix + "_bloom_pos"
     val novT = tablePrefix + "_bloom_novel"
-    if (!alreadyApplied(spark, novT, batchId, knownLast))
+    Replay.once(spark, novT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // key count rides the position append as an Observation (see
-      // applyBatch); an empty batch appends a zero-row position file —
-      // invisible to the probe's filter — and no novelty/guard row
-      val obs = org.apache.spark.sql.Observation()
-      val keys = graft.core.CacheRegistry.persistTracked(
-        batch.filter(col(keyCol).isNotNull).select(keyCol).distinct()
-          .observe(obs, count(lit(1)).as("n")))
-      appendByBatch(
-        graft.functions.BloomSketch.positions(keys, keyCol, k, m)
-          .select(lit(batchId).as("batch_id"), col("pos")),
-        posT, bounded = true)
-      spark.catalog.refreshTable(posT)
-      if (obs.get("n").asInstanceOf[Long] > 0) {
-        val prior = spark.table(posT).filter(col("batch_id") < batchId)
-          .select("pos").distinct()
+        // key count rides the position append as an Observation (see
+        // applyBatch); an empty batch appends a zero-row position file —
+        // invisible to the probe's filter — and no novelty/guard row
+        val obs = org.apache.spark.sql.Observation()
+        val keys = graft.core.CacheRegistry.persistTracked(
+          batch.filter(col(keyCol).isNotNull).select(keyCol).distinct()
+            .observe(obs, count(lit(1)).as("n")))
         appendByBatch(
-          graft.functions.BloomSketch.mightContain(keys, keyCol, prior, k, m)
-            .select(lit(batchId).as("batch_id"), col(keyCol),
-              (!col("might_contain")).as("novel")),
-          novT, bounded = false)
+          graft.functions.BloomSketch.positions(keys, keyCol, k, m)
+            .select(lit(batchId).as("batch_id"), col("pos")),
+          posT, bounded = true)
+        spark.catalog.refreshTable(posT)
+        if (obs.get("n").asInstanceOf[Long] > 0) {
+          val prior = spark.table(posT).filter(col("batch_id") < batchId)
+            .select("pos").distinct()
+          appendByBatch(
+            graft.functions.BloomSketch.mightContain(keys, keyCol, prior, k, m)
+              .select(lit(batchId).as("batch_id"), col(keyCol),
+                (!col("might_contain")).as("novel")),
+            novT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /**
@@ -430,14 +372,9 @@ object SketchIngest {
                 d: Int, w: Int, topN: Int,
                 checkpoint: Option[String] = None,
                 compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_cms_est") {
-      (batch, batchId, last) =>
-        val wm = applyCmsBatch(batch.toDF(), batchId, keyCol, tablePrefix,
-          d, w, topN, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactCms(batch.sparkSession, tablePrefix)
-        wm
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyCmsBatch(_, _, keyCol, tablePrefix, d, w, topN, _))(
+      compactCms(_, tablePrefix))
 
   /** One frequency-monitor trigger, exposed for at-least-once testing. */
   def applyCmsBatch(batch: DataFrame, batchId: Long, keyCol: String,
@@ -447,48 +384,48 @@ object SketchIngest {
     val cntT = tablePrefix + "_cms_cnt"
     val candT = tablePrefix + "_cms_cand"
     val estT = tablePrefix + "_cms_est"
-    if (!alreadyApplied(spark, estT, batchId, knownLast))
+    Replay.once(spark, estT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // distinct-key count rides the bucket append as an Observation
-      // (see applyBatch); an empty batch appends a zero-row bucket file
-      // — invisible to the reader's dedupe+sum — and no cand/est rows
-      val obs = org.apache.spark.sql.Observation()
-      val counts = graft.core.CacheRegistry.persistTracked(
-        batch.filter(col(keyCol).isNotNull)
-          .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
-          .observe(obs, count(lit(1)).as("n")))
-      appendByBatch(
-        counts.select(posexplode(array((0 until d).map(j =>
-            graft.functions.CountMinSketch.hashIdxCol(j, col(keyCol), w)): _*))
-            .as(Seq("j", "pos")), col("cnt"))
-          .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
-          .select(lit(batchId).as("batch_id"), col("j"), col("pos"),
-            col("cnt")),
-        cntT, bounded = true)
-      if (obs.get("n").asInstanceOf[Long] > 0) {
+        // distinct-key count rides the bucket append as an Observation
+        // (see applyBatch); an empty batch appends a zero-row bucket file
+        // — invisible to the reader's dedupe+sum — and no cand/est rows
+        val obs = org.apache.spark.sql.Observation()
+        val counts = graft.core.CacheRegistry.persistTracked(
+          batch.filter(col(keyCol).isNotNull)
+            .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
+            .observe(obs, count(lit(1)).as("n")))
         appendByBatch(
-          counts.orderBy(desc("cnt"), col(keyCol)).limit(topN)
-            .select(lit(batchId).as("batch_id"), col(keyCol).as("key")),
-          candT, bounded = true)
-        spark.catalog.refreshTable(cntT)
-        spark.catalog.refreshTable(candT)
-        val buckets = spark.table(cntT).filter(col("batch_id") <= batchId)
-          .dropDuplicates("batch_id", "j", "pos")
-          .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
-        val cand = spark.table(candT).filter(col("batch_id") <= batchId)
-          .select(col("key")).distinct()
-        appendByBatch(
-          cand.select(col("key"), posexplode(array((0 until d).map(j =>
-              graft.functions.CountMinSketch.hashIdxCol(j, col("key"), w)): _*))
-              .as(Seq("j", "pos")))
-            .join(broadcast(buckets), Seq("j", "pos"), "left")
-            .groupBy(col("key"))
-            .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
-            .select(lit(batchId).as("batch_id"), col("key"), col("est")),
-          estT, bounded = false)
+          counts.select(posexplode(array((0 until d).map(j =>
+              graft.functions.CountMinSketch.hashIdxCol(j, col(keyCol), w)): _*))
+              .as(Seq("j", "pos")), col("cnt"))
+            .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
+            .select(lit(batchId).as("batch_id"), col("j"), col("pos"),
+              col("cnt")),
+          cntT, bounded = true)
+        if (obs.get("n").asInstanceOf[Long] > 0) {
+          appendByBatch(
+            counts.orderBy(desc("cnt"), col(keyCol)).limit(topN)
+              .select(lit(batchId).as("batch_id"), col(keyCol).as("key")),
+            candT, bounded = true)
+          spark.catalog.refreshTable(cntT)
+          spark.catalog.refreshTable(candT)
+          val buckets = spark.table(cntT).filter(col("batch_id") <= batchId)
+            .dropDuplicates("batch_id", "j", "pos")
+            .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
+          val cand = spark.table(candT).filter(col("batch_id") <= batchId)
+            .select(col("key")).distinct()
+          appendByBatch(
+            cand.select(col("key"), posexplode(array((0 until d).map(j =>
+                graft.functions.CountMinSketch.hashIdxCol(j, col("key"), w)): _*))
+                .as(Seq("j", "pos")))
+              .join(broadcast(buckets), Seq("j", "pos"), "left")
+              .groupBy(col("key"))
+              .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
+              .select(lit(batchId).as("batch_id"), col("key"), col("est")),
+            estT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /** One trigger's work, exposed for direct at-least-once testing (the
@@ -499,35 +436,35 @@ object SketchIngest {
     val spark = batch.sparkSession
     val regsT = tablePrefix + "_hll_regs"
     val estT = tablePrefix + "_hll_est"
-    if (!alreadyApplied(spark, estT, batchId, knownLast))
+    Replay.once(spark, estT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // The batch row count rides the registers append as an
-      // Observation metric — one job per trigger fewer than a
-      // dedicated count() (guide §1.2: per-job constants dominate the
-      // trigger wall). An empty batch appends a zero-row file (readers
-      // collapse registers, so standing-state CONTENT is unchanged)
-      // and still writes NO estimate/guard row, exactly as before.
-      val obs = org.apache.spark.sql.Observation()
-      val b = graft.core.CacheRegistry.persistTracked(
-        batch.observe(obs, count(lit(1)).as("n")))
-      graft.functions.HyperLogLog
-        .registers(b, keyCol, Seq(groupCol))
-        .coalesce(1) // ≤ 64 rows per group — one file per trigger
-        .write.mode("append").format("parquet").saveAsTable(regsT)
-      spark.catalog.refreshTable(regsT)
-      val nNew = obs.get("n").asInstanceOf[Long]
-      if (nNew > 0) {
-        val merged = spark.table(regsT)
-          .groupBy(col(groupCol), col("reg"))
-          .agg(max(col("rho")).as("rho"))
-        appendByBatch(
-          graft.functions.HyperLogLog.estimate(merged, Seq(groupCol))
-            .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
-              lit(nNew).as("n_new")),
-          estT, bounded = false)
+        // The batch row count rides the registers append as an
+        // Observation metric — one job per trigger fewer than a
+        // dedicated count() (guide §1.2: per-job constants dominate the
+        // trigger wall). An empty batch appends a zero-row file (readers
+        // collapse registers, so standing-state CONTENT is unchanged)
+        // and still writes NO estimate/guard row, exactly as before.
+        val obs = org.apache.spark.sql.Observation()
+        val b = graft.core.CacheRegistry.persistTracked(
+          batch.observe(obs, count(lit(1)).as("n")))
+        graft.functions.HyperLogLog
+          .registers(b, keyCol, Seq(groupCol))
+          .coalesce(1) // ≤ 64 rows per group — one file per trigger
+          .write.mode("append").format("parquet").saveAsTable(regsT)
+        spark.catalog.refreshTable(regsT)
+        val nNew = obs.get("n").asInstanceOf[Long]
+        if (nNew > 0) {
+          val merged = spark.table(regsT)
+            .groupBy(col(groupCol), col("reg"))
+            .agg(max(col("rho")).as("rho"))
+          appendByBatch(
+            graft.functions.HyperLogLog.estimate(merged, Seq(groupCol))
+              .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
+                lit(nNew).as("n_new")),
+            estT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /**
@@ -565,11 +502,8 @@ object SketchIngest {
   def compactBloom(spark: SparkSession, tablePrefix: String): Unit = {
     val posT = tablePrefix + "_bloom_pos"
     val novT = tablePrefix + "_bloom_novel"
-    if (!spark.catalog.tableExists(posT) ||
-        !spark.catalog.tableExists(novT)) return
-    val maxRow = spark.table(novT).agg(max(col("batch_id"))).head()
-    if (maxRow.isNullAt(0)) return
-    val maxC = maxRow.getLong(0)
+    val maxC = Replay.lastIn(spark, novT, "batch_id")
+    if (maxC < 0 || !spark.catalog.tableExists(posT)) return
     val pos = spark.table(posT)
     replaceTable(spark, posT, pos.filter(col("batch_id") <= maxC)
       .select("pos").distinct()
@@ -594,11 +528,8 @@ object SketchIngest {
     val cntT = tablePrefix + "_cms_cnt"
     val candT = tablePrefix + "_cms_cand"
     val estT = tablePrefix + "_cms_est"
-    if (!spark.catalog.tableExists(cntT) ||
-        !spark.catalog.tableExists(estT)) return
-    val maxRow = spark.table(estT).agg(max(col("batch_id"))).head()
-    if (maxRow.isNullAt(0)) return
-    val maxC = maxRow.getLong(0)
+    val maxC = Replay.lastIn(spark, estT, "batch_id")
+    if (maxC < 0 || !spark.catalog.tableExists(cntT)) return
     val cnt = spark.table(cntT)
     replaceTable(spark, cntT,
       cnt.filter(col("batch_id") <= maxC)
@@ -649,14 +580,9 @@ object SketchIngest {
                          width: Double,
                          checkpoint: Option[String] = None,
                          compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_hist_q") {
-      (batch, batchId, last) =>
-        val w = applyHistBatch(batch.toDF(), batchId, valCol, groupCol,
-          tablePrefix, width, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactHist(batch.sparkSession, tablePrefix)
-        w
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyHistBatch(_, _, valCol, groupCol, tablePrefix, width, _))(
+      compactHist(_, tablePrefix))
 
   /** One quantile-monitor trigger, exposed for at-least-once testing.
     *
@@ -671,50 +597,50 @@ object SketchIngest {
     val spark = batch.sparkSession
     val cntT = tablePrefix + "_hist_cnt"
     val qT = tablePrefix + "_hist_q"
-    if (!alreadyApplied(spark, qT, batchId, knownLast))
+    Replay.once(spark, qT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // bucket-row count rides the count append as an Observation (see
-      // applyBatch); an empty batch appends a zero-row file — invisible
-      // to the reader's dedupe+sum — and no quantile/guard row
-      val obs = org.apache.spark.sql.Observation()
-      val counts = graft.core.CacheRegistry.persistTracked(
-        batch.filter(col(valCol).isNotNull)
-          .groupBy(col(groupCol),
-            floor(col(valCol) / width).cast("long").as("bucket"))
-          .agg(count(lit(1)).as("cnt"))
-          .observe(obs, count(lit(1)).as("n")))
-      appendByBatch(
-        counts.select(lit(batchId).as("batch_id"), col(groupCol),
-          col("bucket"), col("cnt")),
-        cntT, bounded = true)
-      if (obs.get("n").asInstanceOf[Long] > 0) {
-        spark.catalog.refreshTable(cntT)
-        val collapsed = spark.table(cntT).filter(col("batch_id") <= batchId)
-          .dropDuplicates("batch_id", groupCol, "bucket")
-          .groupBy(col(groupCol), col("bucket"))
-          .agg(sum(col("cnt")).as("cnt"))
-        val wAll = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(groupCol))
-        val wCum = wAll.orderBy(col("bucket"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, org.apache.spark.sql.expressions.Window
-            .currentRow)
-        val cum = collapsed
-          .withColumn("cum", sum(col("cnt")).over(wCum))
-          .withColumn("n", sum(col("cnt")).over(wAll))
-        def qEdge(q: Int): org.apache.spark.sql.Column =
-          min(when(col("cum") * 100 >= col("n") * q,
-            col("bucket").cast("double") * width))
+        // bucket-row count rides the count append as an Observation (see
+        // applyBatch); an empty batch appends a zero-row file — invisible
+        // to the reader's dedupe+sum — and no quantile/guard row
+        val obs = org.apache.spark.sql.Observation()
+        val counts = graft.core.CacheRegistry.persistTracked(
+          batch.filter(col(valCol).isNotNull)
+            .groupBy(col(groupCol),
+              floor(col(valCol) / width).cast("long").as("bucket"))
+            .agg(count(lit(1)).as("cnt"))
+            .observe(obs, count(lit(1)).as("n")))
         appendByBatch(
-          cum.groupBy(col(groupCol))
-            .agg(max(col("n")).as("n"), qEdge(50).as("p50"),
-              qEdge(90).as("p90"), qEdge(99).as("p99"))
-            .select(lit(batchId).as("batch_id"), col(groupCol), col("n"),
-              col("p50"), col("p90"), col("p99")),
-          qT, bounded = false)
+          counts.select(lit(batchId).as("batch_id"), col(groupCol),
+            col("bucket"), col("cnt")),
+          cntT, bounded = true)
+        if (obs.get("n").asInstanceOf[Long] > 0) {
+          spark.catalog.refreshTable(cntT)
+          val collapsed = spark.table(cntT).filter(col("batch_id") <= batchId)
+            .dropDuplicates("batch_id", groupCol, "bucket")
+            .groupBy(col(groupCol), col("bucket"))
+            .agg(sum(col("cnt")).as("cnt"))
+          val wAll = org.apache.spark.sql.expressions.Window
+            .partitionBy(col(groupCol))
+          val wCum = wAll.orderBy(col("bucket"))
+            .rowsBetween(org.apache.spark.sql.expressions.Window
+              .unboundedPreceding, org.apache.spark.sql.expressions.Window
+              .currentRow)
+          val cum = collapsed
+            .withColumn("cum", sum(col("cnt")).over(wCum))
+            .withColumn("n", sum(col("cnt")).over(wAll))
+          def qEdge(q: Int): org.apache.spark.sql.Column =
+            min(when(col("cum") * 100 >= col("n") * q,
+              col("bucket").cast("double") * width))
+          appendByBatch(
+            cum.groupBy(col(groupCol))
+              .agg(max(col("n")).as("n"), qEdge(50).as("p50"),
+                qEdge(90).as("p90"), qEdge(99).as("p99"))
+              .select(lit(batchId).as("batch_id"), col(groupCol), col("n"),
+                col("p50"), col("p90"), col("p99")),
+            qT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /**
@@ -743,14 +669,9 @@ object SketchIngest {
                   slack: Double = 0d,
                   checkpoint: Option[String] = None,
                   compactEvery: Int = 8): StreamingQuery =
-    guardedStart(stream, checkpoint, tablePrefix + "_cusum_traj") {
-      (batch, batchId, last) =>
-        val w = applyCusumBatch(batch.toDF(), batchId, valCol, dayCol,
-          groupCol, tablePrefix, slack, last)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactCusum(batch.sparkSession, tablePrefix)
-        w
-    }
+    monitor(stream, checkpoint, compactEvery)(
+      applyCusumBatch(_, _, valCol, dayCol, groupCol, tablePrefix, slack, _))(
+      compactCusum(_, tablePrefix))
 
   /** One CUSUM-monitor trigger, exposed for at-least-once testing. */
   def applyCusumBatch(batch: DataFrame, batchId: Long, valCol: String,
@@ -760,45 +681,45 @@ object SketchIngest {
     val spark = batch.sparkSession
     val dailyT = tablePrefix + "_cusum_daily"
     val trajT = tablePrefix + "_cusum_traj"
-    if (!alreadyApplied(spark, trajT, batchId, knownLast))
+    Replay.once(spark, trajT, "batch_id", batchId, knownLast) { _ =>
       graft.core.CacheRegistry.scoped {
-      // daily-row count rides the daily append as an Observation (see
-      // applyBatch); an empty batch appends a zero-row file — invisible
-      // to the reader's dedupe+sum — and no trajectory/guard row
-      val obs = org.apache.spark.sql.Observation()
-      val counts = graft.core.CacheRegistry.persistTracked(
-        batch.filter(col(valCol).isNotNull)
-          .groupBy(col(groupCol), col(dayCol).as("day"))
-          .agg(sum(floor(col(valCol) * 1e6).cast("long")).as("s_micro"),
-            count(lit(1)).as("c"))
-          .observe(obs, count(lit(1)).as("n")))
-      appendByBatch(
-        counts.select(lit(batchId).as("batch_id"), col(groupCol),
-          col("day"), col("s_micro"), col("c")),
-        dailyT, bounded = true)
-      if (obs.get("n").asInstanceOf[Long] > 0) {
-        spark.catalog.refreshTable(dailyT)
-        val daily = spark.table(dailyT).filter(col("batch_id") <= batchId)
-          .dropDuplicates("batch_id", groupCol, "day")
-          .groupBy(col(groupCol), col("day"))
-          .agg(sum(col("s_micro")).as("s"), sum(col("c")).as("c"))
-          .withColumn("x", col("s").cast("double") / lit(1e6) / col("c"))
-        val mu = avg(col("x")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col(groupCol)))
-        val scored = graft.ops.Windows.cusum(
-          daily.withColumn("mu", mu), Seq(groupCol), "day", "x",
-          mean = col("mu"), slack = lit(slack))
+        // daily-row count rides the daily append as an Observation (see
+        // applyBatch); an empty batch appends a zero-row file — invisible
+        // to the reader's dedupe+sum — and no trajectory/guard row
+        val obs = org.apache.spark.sql.Observation()
+        val counts = graft.core.CacheRegistry.persistTracked(
+          batch.filter(col(valCol).isNotNull)
+            .groupBy(col(groupCol), col(dayCol).as("day"))
+            .agg(sum(floor(col(valCol) * 1e6).cast("long")).as("s_micro"),
+              count(lit(1)).as("c"))
+            .observe(obs, count(lit(1)).as("n")))
         appendByBatch(
-          scored.groupBy(col(groupCol))
-            .agg(count(lit(1)).as("n_days"),
-              round(max(col("cusum_up")) + lit(1e-9), 6).as("max_up"),
-              round(max(col("cusum_down")) + lit(1e-9), 6).as("max_dn"))
-            .select(lit(batchId).as("batch_id"), col(groupCol),
-              col("n_days"), col("max_up"), col("max_dn")),
-          trajT, bounded = false)
+          counts.select(lit(batchId).as("batch_id"), col(groupCol),
+            col("day"), col("s_micro"), col("c")),
+          dailyT, bounded = true)
+        if (obs.get("n").asInstanceOf[Long] > 0) {
+          spark.catalog.refreshTable(dailyT)
+          val daily = spark.table(dailyT).filter(col("batch_id") <= batchId)
+            .dropDuplicates("batch_id", groupCol, "day")
+            .groupBy(col(groupCol), col("day"))
+            .agg(sum(col("s_micro")).as("s"), sum(col("c")).as("c"))
+            .withColumn("x", col("s").cast("double") / lit(1e6) / col("c"))
+          val mu = avg(col("x")).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col(groupCol)))
+          val scored = graft.ops.Windows.cusum(
+            daily.withColumn("mu", mu), Seq(groupCol), "day", "x",
+            mean = col("mu"), slack = lit(slack))
+          appendByBatch(
+            scored.groupBy(col(groupCol))
+              .agg(count(lit(1)).as("n_days"),
+                round(max(col("cusum_up")) + lit(1e-9), 6).as("max_up"),
+                round(max(col("cusum_down")) + lit(1e-9), 6).as("max_dn"))
+              .select(lit(batchId).as("batch_id"), col(groupCol),
+                col("n_days"), col("max_up"), col("max_dn")),
+            trajT, bounded = false)
+        }
       }
     }
-    math.max(batchId, knownLast.getOrElse(-1L))
   }
 
   /** Compact the CUSUM daily-statistics table — the [[compactHist]]
@@ -807,11 +728,8 @@ object SketchIngest {
   def compactCusum(spark: SparkSession, tablePrefix: String): Unit = {
     val dailyT = tablePrefix + "_cusum_daily"
     val trajT = tablePrefix + "_cusum_traj"
-    if (!spark.catalog.tableExists(dailyT) ||
-        !spark.catalog.tableExists(trajT)) return
-    val maxRow = spark.table(trajT).agg(max(col("batch_id"))).head()
-    if (maxRow.isNullAt(0)) return
-    val maxC = maxRow.getLong(0)
+    val maxC = Replay.lastIn(spark, trajT, "batch_id")
+    if (maxC < 0 || !spark.catalog.tableExists(dailyT)) return
     val t = spark.table(dailyT)
     val groupCol = t.columns
       .filterNot(Set("batch_id", "day", "s_micro", "c")).head
@@ -831,20 +749,16 @@ object SketchIngest {
    * COMMITTED quantile row collapse to one summed row per (group,
    * bucket) tagged with that max batch_id; uncommitted later appends
    * pass through untouched. Replay stays correct for the same reason as
-   * [[compactCms]]: a trigger b ≤ maxCommitted can only replay if its
-   * guard row were missing — and maxCommitted is read from the guard
-   * table itself, so every folded batch's guard row exists and the
-   * `committed` check skips the replay before it can append against the
+   * [[compactCms]]: maxCommitted is the guard table's own watermark
+   * ([[Replay.lastIn]]), so every folded batch is at or below it and
+   * [[Replay.once]] skips its replay before it can append against the
    * merged row.
    */
   def compactHist(spark: SparkSession, tablePrefix: String): Unit = {
     val cntT = tablePrefix + "_hist_cnt"
     val qT = tablePrefix + "_hist_q"
-    if (!spark.catalog.tableExists(cntT) ||
-        !spark.catalog.tableExists(qT)) return
-    val maxRow = spark.table(qT).agg(max(col("batch_id"))).head()
-    if (maxRow.isNullAt(0)) return
-    val maxC = maxRow.getLong(0)
+    val maxC = Replay.lastIn(spark, qT, "batch_id")
+    if (maxC < 0 || !spark.catalog.tableExists(cntT)) return
     val cnt = spark.table(cntT)
     val groupCol = cnt.columns
       .filterNot(Set("batch_id", "bucket", "cnt")).head

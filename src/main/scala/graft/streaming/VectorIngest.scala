@@ -71,8 +71,7 @@ object VectorIngest {
 
   /**
    * Apply one micro-batch of vectors to the accepted index. Returns the
-   * new replay watermark; `knownLast` short-circuits the once-per-run
-   * watermark read exactly as in [[CorpusIngest.applyBatch]].
+   * new [[Replay]] watermark.
    */
   def applyEmbedBatch(batch: Dataset[Row], batchId: Long, idCol: String,
                       vecCol: String, prefix: String,
@@ -81,35 +80,35 @@ object VectorIngest {
     val spark = batch.sparkSession
     val idsT = s"${prefix}_ids"
     val vecsT = s"${prefix}_vecs"
-    val lastApplied = knownLast.getOrElse(CorpusIngest.lastAppliedIn(spark, idsT))
-    if (batchId > lastApplied) graft.core.CacheRegistry.scoped {
-      graft.functions.GraftFunctions.register(spark)
-      def banded(df: DataFrame): DataFrame = df
-        .select(col(idCol), Similarity.asDouble(col(vecCol)).as("__e"))
-        .withColumn("bucket", Similarity.bucketId(col("__e"), bits))
-        .select(col(idCol), col("__e"), col("bucket"))
-      if (!spark.catalog.tableExists(vecsT))
-        // seed an EMPTY index with the right schema so every batch takes
-        // the same gate-then-append path
-        graft.core.Materialize.bucketTable(spark, vecsT,
-          banded(batch.limit(0).toDF()), buckets = 8, bucketCols = Seq("bucket"))
-      val batchNew =
-        if (!spark.catalog.tableExists(idsT)) batch.toDF()
-        else batch.join(spark.table(idsT).select(col(idCol)), Seq(idCol), "left_anti")
-      val b = graft.core.CacheRegistry.persistTracked(banded(batchNew))
-      // EAGER lineage cut before the append: the survivor plan reads the
-      // very table the append mutates
-      val surv = survivorsOf(b, spark.table(vecsT), idCol, tau).localCheckpoint()
-      graft.core.Materialize.bucketAppend(spark, vecsT,
-        surv.select(col(idCol), col("__e"), col("bucket")),
-        buckets = 8, bucketCols = Seq("bucket"))
-      spark.catalog.refreshTable(vecsT)
-      // watermark write LAST (replay-exactness argument in the scaladoc)
-      surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
-        .write.mode("append").saveAsTable(idsT)
-      spark.catalog.refreshTable(idsT)
+    Replay.once(spark, idsT, "__last_batch", batchId, knownLast) { _ =>
+      graft.core.CacheRegistry.scoped {
+        graft.functions.GraftFunctions.register(spark)
+        def banded(df: DataFrame): DataFrame = df
+          .select(col(idCol), Similarity.asDouble(col(vecCol)).as("__e"))
+          .withColumn("bucket", Similarity.bucketId(col("__e"), bits))
+          .select(col(idCol), col("__e"), col("bucket"))
+        if (!spark.catalog.tableExists(vecsT))
+          // seed an EMPTY index with the right schema so every batch takes
+          // the same gate-then-append path
+          graft.core.Materialize.bucketTable(spark, vecsT,
+            banded(batch.limit(0).toDF()), buckets = 8, bucketCols = Seq("bucket"))
+        val batchNew =
+          if (!spark.catalog.tableExists(idsT)) batch.toDF()
+          else batch.join(spark.table(idsT).select(col(idCol)), Seq(idCol), "left_anti")
+        val b = graft.core.CacheRegistry.persistTracked(banded(batchNew))
+        // EAGER lineage cut before the append: the survivor plan reads the
+        // very table the append mutates
+        val surv = survivorsOf(b, spark.table(vecsT), idCol, tau).localCheckpoint()
+        graft.core.Materialize.bucketAppend(spark, vecsT,
+          surv.select(col(idCol), col("__e"), col("bucket")),
+          buckets = 8, bucketCols = Seq("bucket"))
+        spark.catalog.refreshTable(vecsT)
+        // watermark write LAST (replay-exactness argument in the scaladoc)
+        surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
+          .write.mode("append").saveAsTable(idsT)
+        spark.catalog.refreshTable(idsT)
+      }
     }
-    math.max(batchId, lastApplied)
   }
 
   // ---- Streaming mini-batch k-means ------------------------------------
@@ -153,56 +152,56 @@ object VectorIngest {
     val spark = batch.sparkSession
     val stateT = s"${prefix}_state"
     val marksT = s"${prefix}_marks"
-    val lastApplied = knownLast.getOrElse(CorpusIngest.lastAppliedIn(spark, marksT))
-    if (batchId > lastApplied) graft.core.CacheRegistry.scoped {
-      val b = graft.core.CacheRegistry.persistTracked(
-        batch.toDF().select(col(idCol),
-          Similarity.asDouble(col(vecCol)).as("__e")))
-      // Seed iff NO batch has been applied (watermark −1) — NOT on
-      // state-table existence: in the batch-0 crash window (state rows
-      // landed, marks write lost) the table exists but holds no rows at
-      // __batch = −1, and keying on existence would hand an EMPTY
-      // centroid set to assignNearestScan forever. Re-seeding replays
-      // batch 0 deterministically; the re-appended state rows are
-      // bit-exact duplicates the distinct-read absorbs.
-      val prev: Seq[(Long, Long, Array[Double])] =
-        if (lastApplied < 0)
-          // seed: k lowest-id vectors of the first batch, rounded like
-          // the batch kmeansFit seeds, weight 0 (they are priors, not
-          // observations — batch 0's own assignment supplies the data)
-          b.select(col(idCol).cast("long").as("__id"),
-              transform(col("__e"), x => round(x + lit(1e-9), 6)).as("__c"))
-            .sort(col("__id")).limit(k).collect().zipWithIndex
-            .map { case (r, i) =>
-              (i.toLong, 0L, r.getSeq[Double](1).toArray) }.toSeq
-        else stateAt(spark, stateT, lastApplied)
-      val cents = prev.map { case (l, _, c) => (l, c.toSeq) }
-      val assigned = Similarity.assignNearestScan(b, "__e", cents)
-      val partial = assigned
-        .select(col("assigned_label").as("cluster"),
-          posexplode(col("__e")).as(Seq("dim", "x")))
-        .groupBy(col("cluster"), col("dim").cast("long").as("dim"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-      import spark.implicits._
-      val old = prev.flatMap { case (l, cnt, c) =>
-        c.zipWithIndex.map { case (x, d) => (l, d.toLong, x, cnt) }
-      }.toDF("cluster", "dim", "c", "cnt")
-      val next = old.join(partial, Seq("cluster", "dim"), "left")
-        .select(col("cluster"), col("dim"),
-          when(col("n").isNull, col("c"))
-            .otherwise(round((col("cnt") * col("c") + col("s"))
-              / (col("cnt") + col("n")) + lit(1e-9), 6)).as("c"),
-          (col("cnt") + coalesce(col("n"), lit(0L))).as("cnt"))
-        .withColumn("__batch", lit(batchId))
-        .localCheckpoint() // lineage reads the state the append mutates
-      next.write.mode("append").saveAsTable(stateT)
-      spark.catalog.refreshTable(stateT)
-      // watermark LAST (replay-exactness argument in the scaladoc)
-      Seq(batchId).toDF("__last_batch")
-        .write.mode("append").saveAsTable(marksT)
-      spark.catalog.refreshTable(marksT)
+    Replay.once(spark, marksT, "__last_batch", batchId, knownLast) { last =>
+      graft.core.CacheRegistry.scoped {
+        val b = graft.core.CacheRegistry.persistTracked(
+          batch.toDF().select(col(idCol),
+            Similarity.asDouble(col(vecCol)).as("__e")))
+        // Seed iff NO batch has been applied (watermark −1) — NOT on
+        // state-table existence: in the batch-0 crash window (state rows
+        // landed, marks write lost) the table exists but holds no rows at
+        // __batch = −1, and keying on existence would hand an EMPTY
+        // centroid set to assignNearestScan forever. Re-seeding replays
+        // batch 0 deterministically; the re-appended state rows are
+        // bit-exact duplicates the distinct-read absorbs.
+        val prev: Seq[(Long, Long, Array[Double])] =
+          if (last < 0)
+            // seed: k lowest-id vectors of the first batch, rounded like
+            // the batch kmeansFit seeds, weight 0 (they are priors, not
+            // observations — batch 0's own assignment supplies the data)
+            b.select(col(idCol).cast("long").as("__id"),
+                transform(col("__e"), x => round(x + lit(1e-9), 6)).as("__c"))
+              .sort(col("__id")).limit(k).collect().zipWithIndex
+              .map { case (r, i) =>
+                (i.toLong, 0L, r.getSeq[Double](1).toArray) }.toSeq
+          else stateAt(spark, stateT, last)
+        val cents = prev.map { case (l, _, c) => (l, c.toSeq) }
+        val assigned = Similarity.assignNearestScan(b, "__e", cents)
+        val partial = assigned
+          .select(col("assigned_label").as("cluster"),
+            posexplode(col("__e")).as(Seq("dim", "x")))
+          .groupBy(col("cluster"), col("dim").cast("long").as("dim"))
+          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+        import spark.implicits._
+        val old = prev.flatMap { case (l, cnt, c) =>
+          c.zipWithIndex.map { case (x, d) => (l, d.toLong, x, cnt) }
+        }.toDF("cluster", "dim", "c", "cnt")
+        val next = old.join(partial, Seq("cluster", "dim"), "left")
+          .select(col("cluster"), col("dim"),
+            when(col("n").isNull, col("c"))
+              .otherwise(round((col("cnt") * col("c") + col("s"))
+                / (col("cnt") + col("n")) + lit(1e-9), 6)).as("c"),
+            (col("cnt") + coalesce(col("n"), lit(0L))).as("cnt"))
+          .withColumn("__batch", lit(batchId))
+          .localCheckpoint() // lineage reads the state the append mutates
+        next.write.mode("append").saveAsTable(stateT)
+        spark.catalog.refreshTable(stateT)
+        // watermark LAST (replay-exactness argument in the scaladoc)
+        Seq(batchId).toDF("__last_batch")
+          .write.mode("append").saveAsTable(marksT)
+        spark.catalog.refreshTable(marksT)
+      }
     }
-    math.max(batchId, lastApplied)
   }
 
   /** Streaming mini-batch k-means wrapper; final state is the `_state`
@@ -210,15 +209,13 @@ object VectorIngest {
   def kmeansIngest(vecs: DataFrame, idCol: String, vecCol: String,
                    prefix: String, k: Int,
                    checkpoint: Option[String] = None): StreamingQuery =
-    CorpusIngest.guardedIngest(vecs, checkpoint)(
+    Replay.stream(vecs, checkpoint)(
       applyKmeansBatch(_, _, idCol, vecCol, prefix, k, _))
 
-  /** Streaming wrapper: replay watermark seeded from the ids table on
-    * the first trigger (covers restart-from-checkpoint), then held in
-    * memory. */
+  /** Streaming wrapper ([[Replay.stream]]). */
   def embedIngest(vecs: DataFrame, idCol: String, vecCol: String,
                   prefix: String, tau: Double = 0.99, bits: Int = 4,
                   checkpoint: Option[String] = None): StreamingQuery =
-    CorpusIngest.guardedIngest(vecs, checkpoint)((batch, batchId, last) =>
+    Replay.stream(vecs, checkpoint)((batch, batchId, last) =>
       applyEmbedBatch(batch, batchId, idCol, vecCol, prefix, tau, bits, last))
 }

@@ -222,6 +222,135 @@ class StreamingSpec extends SparkSpec {
     } finally graft.core.Materialize.dropWithLocation(spark, table)
   }
 
+  test("Replay: absent table reads -1; once skips at or below the watermark") {
+    import spark.implicits._
+    import graft.streaming.Replay
+    val t = "graft_test_replay_guard"
+    graft.core.Materialize.dropWithLocation(spark, t)
+    try {
+      assert(Replay.lastIn(spark, t, "batch_id") == -1L)
+      Seq.empty[Long].toDF("batch_id").write.saveAsTable(t)
+      assert(Replay.lastIn(spark, t, "batch_id") == -1L, "an empty table reads -1")
+      Seq(0L, 3L).toDF("batch_id").write.mode("append").saveAsTable(t)
+      assert(Replay.lastIn(spark, t, "batch_id") == 3L)
+      var steps = Seq.empty[Long]
+      for (b <- Seq(2L, 3L))
+        assert(Replay.once(spark, t, "batch_id", b, None)(steps :+= _) == 3L)
+      assert(steps.isEmpty, "an id at or below the watermark must not run its step")
+      assert(Replay.once(spark, t, "batch_id", 5L, None)(steps :+= _) == 5L)
+      // a held watermark stands in for the table read
+      assert(Replay.once(spark, t, "batch_id", 5L, Some(5L))(steps :+= _) == 5L)
+      assert(Replay.once(spark, t, "batch_id", 6L, Some(5L))(steps :+= _) == 6L)
+      assert(steps == Seq(3L, 5L), "each step receives the previous watermark")
+    } finally graft.core.Materialize.dropWithLocation(spark, t)
+  }
+
+  test("ingest wrappers restart from a commit-boundary crash equal to a never-crashed twin") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.streaming._
+    /** One wrapper: its tables, its guard (table suffix, id column), the
+      * three chunks it drains and how it starts on a stream. */
+    case class Wrapper(name: String, tables: Seq[String], guard: (String, String),
+                       chunks: Seq[DataFrame],
+                       start: (DataFrame, String, Option[String]) => StreamingQuery)
+    val docs = Seq(
+      Seq((1L, "the quick brown fox"), (2L, "lazy dogs sleep all day")),
+      Seq((3L, "the fox jumps over dogs"), (4L, "brown bread and butter")),
+      Seq((5L, "quick quick slow"), (6L, "day and night")))
+      .map(_.toDF("doc_id", "text"))
+    val vecs = Seq(
+      Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(0.9, 0.1))),
+      Seq((4L, Seq(0.2, 0.8)), (5L, Seq(1.0, 0.2))),
+      Seq((6L, Seq(0.1, 0.9)), (7L, Seq(0.7, 0.3))))
+      .map(_.toDF("vec_id", "embedding"))
+    val ref = (1 to 20).map(_.toDouble).toDF("v")
+    val wrappers = Seq(
+      Wrapper("hll", Seq("_hll_regs", "_hll_est"), "_hll_est" -> "batch_id",
+        Seq(Seq(("a", "s1"), ("b", "s1"), ("c", "s2")), Seq(("a", "s2"), ("d", "s1")),
+          Seq(("e", "s1"), ("b", "s2"))).map(_.toDF("key", "src")),
+        (st, p, cp) => SketchIngest.hllIngest(st, "key", "src", p, checkpoint = cp)),
+      Wrapper("psi", Seq("_psi"), "_psi" -> "batch_id",
+        Seq(1 to 10, 11 to 30, 25 to 40).map(_.map(_.toDouble).toDF("v")),
+        (st, p, cp) => DriftMonitor.psiIngest(st, ref, "v", 5.0, p, cp)),
+      Wrapper("bm25", Seq("_postings", "_stats"), "_stats" -> "__last_batch", docs,
+        (st, p, cp) => SearchIngest.bm25Ingest(st, "doc_id", "text", p, checkpoint = cp)),
+      Wrapper("mm", Seq("_meta", "_marks"), "_marks" -> "__last_batch",
+        docs.map(_.select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))),
+        (st, p, cp) => MediaIngest.mediaIngest(st, "doc_id", "payload",
+          lit("image"), p, cp)),
+      Wrapper("clf", Seq("_weights", "_marks"), "_marks" -> "__last_batch",
+        Seq(Seq((1L, Seq(0, 1), 1L), (2L, Seq(2, 3), -1L)),
+          Seq((3L, Seq(0, 2), 1L), (4L, Seq(1, 3), -1L)),
+          Seq((5L, Seq(1, 2), -1L), (6L, Seq(0, 3), 1L)))
+          .map(_.toDF("doc_id", "buckets", "y")),
+        (st, p, cp) => ClassifierIngest.classifierIngest(st, "buckets", "y", p,
+          numBuckets = 4, roundsPerBatch = 2, checkpoint = cp)),
+      Wrapper("kmeans", Seq("_state", "_marks"), "_marks" -> "__last_batch", vecs,
+        (st, p, cp) => VectorIngest.kmeansIngest(st, "vec_id", "embedding", p,
+          k = 2, checkpoint = cp)))
+    // one file per chunk, mtimes in chunk order: the file source drains
+    // by modification time, so both runs see chunk i as batch i
+    val t0 = System.currentTimeMillis() - 600000L
+    def stageChunk(stage: String, c: DataFrame, i: Int): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_rs_part").toString
+      c.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(stage, s"chunk_$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst.toPath)
+      dst.setLastModified(t0 + i * 60000L)
+    }
+    for (w <- wrappers) {
+      val cra = s"graft_test_rs_${w.name}_a" // crashed at the commit boundary
+      val twn = s"graft_test_rs_${w.name}_b" // never crashed
+      def dropAll(): Unit = for (p <- Seq(cra, twn); t <- w.tables)
+        graft.core.Materialize.dropWithLocation(spark, p + t)
+      dropAll()
+      try {
+        val schema = w.chunks.head.schema
+        def drain(stage: String, p: String, cp: Option[String]): StreamingQuery = {
+          val q = w.start(spark.readStream.schema(schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", 1).parquet(stage), p, cp)
+          try q.processAllAvailable() finally q.stop()
+          q
+        }
+        val twinStage = java.nio.file.Files.createTempDirectory("graft_rs_twin").toString
+        w.chunks.zipWithIndex.foreach { case (c, i) => stageChunk(twinStage, c, i) }
+        drain(twinStage, twn, None)
+        val stage = java.nio.file.Files.createTempDirectory("graft_rs_stage").toString
+        val ckpt = java.nio.file.Files.createTempDirectory("graft_rs_ckpt").toString
+        stageChunk(stage, w.chunks(0), 0)
+        stageChunk(stage, w.chunks(1), 1)
+        drain(stage, cra, Some(ckpt))
+        // crash after batch 1's table commit, before its offset commit
+        val commits = new java.io.File(ckpt, "commits")
+        val last = commits.list().filter(_.matches("\\d+")).map(_.toLong).max
+        assert(last == 1L, s"${w.name}: two chunks must drain as two batches")
+        for (f <- Seq(s"$last", s".$last.crc")) new java.io.File(commits, f).delete()
+        stageChunk(stage, w.chunks(2), 2)
+        val q2 = drain(stage, cra, Some(ckpt))
+        assert(q2.recentProgress.map(_.batchId).contains(last),
+          s"${w.name}: the restart must re-run the uncommitted batch")
+        for (p <- Seq(cra, twn); t <- w.tables) spark.catalog.refreshTable(p + t)
+        val (g, idCol) = w.guard
+        def perId(p: String) = spark.table(p + g).groupBy(col(idCol)).count()
+          .as[(Long, Long)].collect().toMap
+        assert(perId(cra).keySet == Set(0L, 1L, 2L) && perId(cra) == perId(twn),
+          s"${w.name}: guard rows per batch id ${perId(cra)} vs twin ${perId(twn)}")
+        for (t <- w.tables) {
+          val (a, b) = (spark.table(cra + t), spark.table(twn + t))
+          assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+            s"${w.name}: $t differs from the never-crashed twin")
+        }
+      } finally {
+        dropAll()
+        graft.core.CacheRegistry.releaseAll()
+      }
+    }
+  }
+
   test("flatMapGroupsWithState emits only closed sessions, in append mode") {
     val sessions = EventStream.sessionizeClosed(
       EventStream.readEvents(spark, sfDir), gapMinutes = 30)
