@@ -93,10 +93,14 @@ object GraftSession {
       // over every task's files. The streaming ingest family pays a
       // full commit per durable table per trigger, so the per-write
       // constant is a measured term of the st-family wall. v2's crash
-      // window (a failed job can leave committed task files) is the
-      // standard trade-off and is already covered here: every ingest
-      // append is replay-guarded (marks-write-last) and readers absorb
-      // duplicate appends by construction.
+      // window: a failed job can leave SOME of its task files, i.e. part
+      // of an append. A replayed batch re-appends its rows and readers
+      // absorb those duplicates, but nothing restores MISSING rows, and
+      // a guard table holding part of batch b reads b as applied. So a
+      // guard append must be one file, published by one rename
+      // (SketchIngest.appendByBatch). The CorpusIngest `_docs` and
+      // VectorIngest `_ids` guard appends are still multi-file and open
+      // to this window (ROADMAP item 1).
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .getOrCreate()

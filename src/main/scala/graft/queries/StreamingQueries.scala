@@ -1,11 +1,15 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.{CacheRegistry, Materialize}
 import graft.streaming.EventStream
 
 /**
  * Structured Streaming entries in the correctness table: the stream is
- * driven to completion (processAllAvailable over the fixture files) and
+ * drained to completion over the fixture files ([[drain]]) and
  * its materialized result must hash-match the BATCH oracle — the
  * exactly-once file-source guarantee, checked by DuckDB.
  */
@@ -28,14 +32,13 @@ object StreamingQueries {
    * disk", not a durability recommendation. A fresh root per invocation
    * also guarantees a rerun can never resume a prior run's offsets.
    */
-  private def withStatePartitions[T](s: org.apache.spark.sql.SparkSession,
-                                     n: Int)(f: => T): T = {
+  private def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     val prevCp = s.conf.getOption("spark.sql.streaming.checkpointLocation")
     val shm = new java.io.File("/dev/shm")
     val cpRoot = if (shm.isDirectory && shm.canWrite)
-      Some(java.nio.file.Files.createTempDirectory(shm.toPath, "graft_st_cp"))
+      Some(Files.createTempDirectory(shm.toPath, "graft_st_cp"))
     else None
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     // AQE off for the drain: a micro-batch trigger runs ~12 exchanges of
@@ -55,104 +58,171 @@ object StreamingQueries {
         case Some(v) => s.conf.set("spark.sql.streaming.checkpointLocation", v)
         case None    => s.conf.unset("spark.sql.streaming.checkpointLocation")
       }
-      cpRoot.foreach { p =>
-        import scala.util.Try
-        Try {
-          java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+      cpRoot.foreach(p => scala.util.Try(Materialize.deleteRecursively(p)))
+    }
+  }
+
+  /**
+   * The staging dirs of one drain: [[chunkStream]] and [[withSentinel]]
+   * write them, and [[drain]] deletes every one when its stream stops.
+   */
+  private[graft] final class Staging(s: SparkSession) extends AutoCloseable {
+    private val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+    def dir(prefix: String): Path = {
+      val d = Files.createTempDirectory(prefix)
+      dirs += d
+      d
+    }
+
+    def close(): Unit = dirs.foreach(Materialize.deleteRecursively)
+
+    /**
+     * Stage `chunks` as one parquet file each, named and mtime-ordered so
+     * the file stream source (ordered by (mtime, path)) drains them one
+     * per micro-batch in sequence — mtimes are pinned a minute apart in
+     * the recent past so copy speed can't reorder them. Returns a reader
+     * over the stage with the chunks' own schema (no footer read); call
+     * it again for a second stream over the same files.
+     */
+    def chunkStream(chunks: Seq[DataFrame]): () => DataFrame = {
+      val stage = dir("graft_st_ingest")
+      // ONE write job for all chunks (union + partitionBy on the chunk
+      // ordinal), not one job per chunk — the per-job constant dominated
+      // the staging wall at fixture scale
+      val scratch = dir("graft_st_ing_part")
+      chunks.zipWithIndex.map { case (c, i) => c.withColumn("__chunk", lit(i)) }
+        .reduce(_ unionByName _)
+        .repartition(col("__chunk"))
+        .write.mode("overwrite").partitionBy("__chunk")
+        .parquet(scratch.toString)
+      chunks.indices.foreach { i =>
+        val part = new java.io.File(s"$scratch/__chunk=$i").listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        val dst = stage.resolve(s"${('a' + i).toChar}_chunk.parquet")
+        Files.copy(part.toPath, dst)
+        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
+          .fromMillis(System.currentTimeMillis() - (chunks.size - i) * 60000L))
+      }
+      val schema = chunks.head.schema
+      () => s.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1).parquet(stage.toString)
+    }
+
+    /**
+     * Stage the events fixture PLUS far-future sentinel rows (one per
+     * requested event_type, ids -1, -2, …, user_id -1) into a scratch dir
+     * BEFORE the stream starts. The whole drain is then batch 0 — all
+     * files, watermark still at its initial floor, so nothing is dropped
+     * as late — plus one no-data batch in which the advanced watermark
+     * closes every window/timeout and flushes outer/terminal state.
+     * Draining first and appending the sentinel after pays two extra
+     * multi-second watermark-transition batches for the same final table
+     * (measured 9.3 s → 3.6 s on the stream-stream outer join at sf0.1);
+     * a live feed reaches the identical closed state as its watermark
+     * advances naturally.
+     */
+    def withSentinel(fixture: String, types: Seq[String]): String = {
+      val stage = dir("graft_st_stage")
+      Files.copy(Paths.get(s"$fixture/events.parquet"),
+        stage.resolve("a_events.parquet"))
+      val maxSec = graft.core.Tables.events(s, fixture)
+        .agg(max(col("ts").cast("long"))).head().getLong(0)
+      // The fixture copy and the sentinel must agree on ts's physical type:
+      // readEvents pins one schema from the first listing, so a mixed-type
+      // directory fails or corrupts ts. Probe the fixture's encoding (same
+      // footer probe readEvents uses; Tables.events above set nanosAsLong)
+      // and write the sentinel to match — an INT64-nanos column when the
+      // fixture is nanos, NTZ otherwise.
+      val fixtureNanos = s.read.parquet(s"$fixture/events.parquet")
+        .schema("ts").dataType == org.apache.spark.sql.types.LongType
+      import s.implicits._
+      val sentinelDir = dir("graft_st_sent")
+      val sentinelRaw =
+        if (fixtureNanos) {
+          val tsNanos = (maxSec + 86400L) * 1000000000L
+          types.zipWithIndex.map { case (tpe, i) =>
+            (-(i + 1).toLong, tsNanos, -1L, tpe, 0.0, "{}")
+          }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        } else {
+          val sentinelTs = java.time.LocalDateTime.ofEpochSecond(
+            maxSec + 86400L, 0, java.time.ZoneOffset.UTC)
+          types.zipWithIndex.map { case (tpe, i) =>
+            (-(i + 1).toLong, sentinelTs, -1L, tpe, 0.0, "{}")
+          }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         }
-      }
-    }
-  }
-
-  /**
-   * Stage the events fixture PLUS far-future sentinel rows (one per
-   * requested event_type, ids -1, -2, …, user_id -1) into a scratch dir
-   * BEFORE the stream starts. The whole drain is then batch 0 — all
-   * files, watermark still at its initial floor, so nothing is dropped
-   * as late — plus one no-data batch in which the advanced watermark
-   * closes every window/timeout and flushes outer/terminal state.
-   * Draining first and appending the sentinel after pays two extra
-   * multi-second watermark-transition batches for the same final table
-   * (measured 9.3 s → 3.6 s on the stream-stream outer join at sf0.1);
-   * a live feed reaches the identical closed state as its watermark
-   * advances naturally.
-   */
-  private def stageWithSentinel(s: org.apache.spark.sql.SparkSession,
-                                dir: String, types: Seq[String]): String = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_st_stage").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$stage/a_events.parquet"))
-    val maxSec = graft.core.Tables.events(s, dir)
-      .agg(max(col("ts").cast("long"))).head().getLong(0)
-    // The fixture copy and the sentinel must agree on ts's physical type:
-    // readEvents pins one schema from the first listing, so a mixed-type
-    // directory fails or corrupts ts. Probe the fixture's encoding (same
-    // footer probe readEvents uses) and write the sentinel to match —
-    // an INT64-nanos column when the fixture is nanos, NTZ otherwise.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fixtureNanos = s.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType == org.apache.spark.sql.types.LongType
-    import s.implicits._
-    val sentinelDir =
-      java.nio.file.Files.createTempDirectory("graft_st_sent").toString
-    val sentinelRaw =
-      if (fixtureNanos) {
-        val tsNanos = (maxSec + 86400L) * 1000000000L
-        types.zipWithIndex.map { case (tpe, i) =>
-          (-(i + 1).toLong, tsNanos, -1L, tpe, 0.0, "{}")
-        }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      } else {
-        val sentinelTs = java.time.LocalDateTime.ofEpochSecond(
-          maxSec + 86400L, 0, java.time.ZoneOffset.UTC)
-        types.zipWithIndex.map { case (tpe, i) =>
-          (-(i + 1).toLong, sentinelTs, -1L, tpe, 0.0, "{}")
-        }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      }
-    sentinelRaw.coalesce(1).write.mode("overwrite").parquet(sentinelDir)
-    val part = new java.io.File(sentinelDir).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(s"$stage/z_sentinel.parquet"))
-    stage
-  }
-
-  private val DocChunkSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("text",
-      org.apache.spark.sql.types.StringType)))
-
-  /**
-   * Stage document frames as one parquet file each, named and
-   * mtime-ordered so the file stream source (ordered by (mtime, path))
-   * drains them one per micro-batch in sequence — mtimes are pinned a
-   * minute apart in the recent past so copy speed can't reorder them.
-   */
-  private def stageIdChunks(s: org.apache.spark.sql.SparkSession,
-                            chunks: Seq[org.apache.spark.sql.DataFrame]): String = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_st_ingest")
-    // ONE write job for all chunks (union + partitionBy on the chunk
-    // ordinal), not one job per chunk — the per-job constant dominated
-    // the staging wall at fixture scale
-    val scratch = java.nio.file.Files.createTempDirectory("graft_st_ing_part")
-    chunks.zipWithIndex.map { case (c, i) => c.withColumn("__chunk", lit(i)) }
-      .reduce(_ unionByName _)
-      .repartition(col("__chunk"))
-      .write.mode("overwrite").partitionBy("__chunk")
-      .parquet(scratch.toString)
-    chunks.indices.foreach { i =>
-      val part = new java.io.File(s"$scratch/__chunk=$i").listFiles()
+      sentinelRaw.coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
+      val part = sentinelDir.toFile.listFiles()
         .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.Paths.get(s"$stage/${('a' + i).toChar}_chunk.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - (chunks.size - i) * 60000L))
+      Files.copy(part.toPath, stage.resolve("z_sentinel.parquet"))
+      stage.toString
     }
-    stage.toString
   }
+
+  /**
+   * `df` in `n` id-range chunks on `idCol` — chunk i holds the ids in
+   * [i·step, (i+1)·step), step = max(id) / n + 1 — and `step`. With a
+   * `tail` payload, chunk i > 0 also carries a copy of every chunk-(i−1)
+   * row with id % 5 = i, re-keyed to id + i·10⁶ with `tail` as its
+   * payload: near-duplicates that only a grown index can drop.
+   */
+  private def idChunks(df: DataFrame, idCol: String, n: Int,
+                       tail: Option[Column] = None): (Seq[DataFrame], Long) = {
+    val step = df.agg(max(col(idCol))).head().getLong(0) / n + 1
+    val range = (0 until n).map(i =>
+      df.filter(col(idCol) >= i * step && col(idCol) < (i + 1) * step))
+    val chunks = tail.fold(range)(t => range.indices.map(i =>
+      if (i == 0) range(0)
+      else range(i).unionByName(range(i - 1).filter(col(idCol) % 5 === i)
+        .select((col(idCol) + i * 1000000L).as(idCol), t))))
+    (chunks, step)
+  }
+
+  /**
+   * Drain one row's stream: drop `tables`, start the query over fresh
+   * staging, run it to completion, release the ingests' cached frames,
+   * refresh `tables` (the stream's clone did the appends, so this
+   * session's file listings are stale) and delete the staging dirs.
+   */
+  private def drain(s: SparkSession, tables: String*)(
+      start: Staging => StreamingQuery): StreamingQuery = {
+    tables.foreach(Materialize.dropWithLocation(s, _))
+    val staging = new Staging(s)
+    try {
+      val q = start(staging)
+      try q.processAllAvailable() finally q.stop()
+      CacheRegistry.releaseAll()
+      tables.foreach(s.catalog.refreshTable)
+      q
+    } finally staging.close()
+  }
+
+  /** [[drain]] `frame` into the memory sink `name`; returns its table. */
+  private def drainToMemory(s: SparkSession, name: String, mode: String)(
+      frame: Staging => DataFrame): DataFrame = {
+    drain(s)(st => frame(st).writeStream.format("memory")
+      .queryName(name).outputMode(mode).start())
+    s.table(name)
+  }
+
+  /** `documents` as (doc_id, text): the corpus rows' feed. */
+  private def docsText(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+
+  /** The near-dup corpus rows' tail payload: text plus a marker tail. */
+  private def docTail: Option[Column] =
+    Some(concat(col("text"), lit(" dup marker tail")).as("text"))
+
+  /** `embeddings` as (vec_id, embedding: array<double>). */
+  private def vecs(s: SparkSession, dir: String): DataFrame =
+    graft.core.Tables.embeddings(s, dir).select(col("vec_id"),
+      graft.ext.Similarity.asDouble(col("embedding")).as("embedding"))
+
+  /** `events` as (event_id, event_type, value): the quantile rows' feed. */
+  private def eventValues(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/events.parquet")
+      .select(col("event_id"), col("event_type"), col("value"))
 
   /** DuckDB: shingle sets (3-token, whole-text fallback for short docs)
     * of a doc CTE — the exact twin of `Dedup.shingleFrame`. */
@@ -171,7 +241,7 @@ object StreamingQueries {
 
   /** Four id-range chunks of `documents`; chunks 1-3 carry tail-copies
     * of earlier-chunk docs so cross-batch near-dup drops are guaranteed
-    * (mirrors the engine-side `chunk(i)` staging). */
+    * (mirrors the engine-side [[idChunks]] tail). */
   private val IngestChunkDefs =
     """st AS (SELECT (max(doc_id) // 4) + 1 AS s FROM documents),
       c0 AS (SELECT doc_id, text FROM documents, st WHERE doc_id < s),
@@ -388,30 +458,21 @@ object StreamingQueries {
         unnest(cv) AS c, cnt FROM k4"""
   }
 
-  private[graft] val VecChunkSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("embedding",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))))
-
   def defs: Seq[QueryDef] = Seq(
 
     // Watermarked event-time windowed aggregation, streamed to a memory
     // sink until the source is drained; tumbling 1h windows align to the
     // hour so the batch oracle is a date_trunc GROUP BY.
     QueryDef("st_windowed_stats", (s, dir) => withStatePartitions(s, 8) {
-      val q = EventStream.windowedStats(EventStream.readEvents(s, dir),
-          "1 hour", "2 hours")
-        .writeStream.format("memory")
-        .queryName("graft_st_windowed").outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_windowed").select(
-        col("window.start").as("window_start"),
-        col("event_type"),
-        col("n_events"),
-        round(col("avg_value") + lit(1e-9), 6).as("avg_value"),
-        col("max_value"))
+      drainToMemory(s, "graft_st_windowed", "complete")(_ =>
+        EventStream.windowedStats(EventStream.readEvents(s, dir),
+          "1 hour", "2 hours"))
+        .select(
+          col("window.start").as("window_start"),
+          col("event_type"),
+          col("n_events"),
+          round(col("avg_value") + lit(1e-9), 6).as("avg_value"),
+          col("max_value"))
     }, Some("""SELECT date_trunc('hour', ts) AS window_start, event_type,
         count(*) AS n_events, round(avg(value) + 1e-9, 6) AS avg_value,
         max(value) AS max_value
@@ -427,15 +488,12 @@ object StreamingQueries {
     QueryDef("st_hll_windowed", (s, dir) => withStatePartitions(s, 8) {
       import graft.functions.HyperLogLog
       val key = col("user_id").cast("string")
-      val q = EventStream.readEvents(s, dir)
-        .withWatermark("ts", "2 hours")
-        .select(window(col("ts"), "1 hour").as("win"),
-          HyperLogLog.idxCol(key).as("reg"), HyperLogLog.rhoCol(key).as("rho"))
-        .groupBy(col("win"), col("reg")).agg(max(col("rho")).as("rho"))
-        .writeStream.format("memory").queryName("graft_st_hll_win")
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      val regs = s.table("graft_st_hll_win")
+      val regs = drainToMemory(s, "graft_st_hll_win", "complete")(_ =>
+        EventStream.readEvents(s, dir)
+          .withWatermark("ts", "2 hours")
+          .select(window(col("ts"), "1 hour").as("win"),
+            HyperLogLog.idxCol(key).as("reg"), HyperLogLog.rhoCol(key).as("rho"))
+          .groupBy(col("win"), col("reg")).agg(max(col("rho")).as("rho")))
         .select(col("win.start").as("window_start"), col("reg"), col("rho"))
       HyperLogLog.estimate(regs, Seq("window_start"))
         .join(graft.core.Tables.events(s, dir)
@@ -492,32 +550,17 @@ object StreamingQueries {
     // contributions only — and max_event_id per window proves chunk 2
     // was dropped rather than merged.
     QueryDef("st_late_data_drop", (s, dir) => withStatePartitions(s, 8) {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 3 + 1
-      val stage = stageIdChunks(s, (0 until 3).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType)))
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(col("event_id"),
-          timestamp_seconds(base + (col("event_id") % 12) * 3600
-            + (col("event_id") % 60) * 60).as("ts"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour").as("win"))
-        .agg(count(lit(1)).as("n_events"), max(col("event_id")).as("max_event_id"))
-        .writeStream.format("memory").queryName("graft_st_late")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_late")
-        .select(col("win.start").as("window_start"),
+      drainToMemory(s, "graft_st_late", "append") { st =>
+        st.chunkStream(idChunks(s.read.parquet(s"$dir/events.parquet")
+          .select(col("event_id"), col("user_id")), "event_id", 3)._1)()
+          .select(col("event_id"),
+            timestamp_seconds(base + (col("event_id") % 12) * 3600
+              + (col("event_id") % 60) * 60).as("ts"))
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour").as("win"))
+          .agg(count(lit(1)).as("n_events"), max(col("event_id")).as("max_event_id"))
+      }.select(col("win.start").as("window_start"),
           col("n_events"), col("max_event_id"))
     }, Some("""WITH mxs AS (SELECT max(event_id) // 3 + 1 AS step FROM events),
       e AS (SELECT event_id,
@@ -548,32 +591,17 @@ object StreamingQueries {
     // are monotone under merge), and max_event_id ≥ 2·step on hours
     // 5–11 vs < 2·step on hours 0–4 proves merge vs drop per window.
     QueryDef("st_late_data_merge", (s, dir) => withStatePartitions(s, 8) {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 3 + 1
-      val stage = stageIdChunks(s, (0 until 3).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType)))
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(col("event_id"),
-          timestamp_seconds(base + (col("event_id") % 12) * 3600
-            + (col("event_id") % 60) * 60).as("ts"))
-        .withWatermark("ts", "6 hours")
-        .groupBy(window(col("ts"), "1 hour").as("win"))
-        .agg(count(lit(1)).as("n_events"), max(col("event_id")).as("max_event_id"))
-        .writeStream.format("memory").queryName("graft_st_late_merge")
-        .outputMode("update").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_late_merge")
-        .groupBy(col("win.start").as("window_start"))
+      drainToMemory(s, "graft_st_late_merge", "update") { st =>
+        st.chunkStream(idChunks(s.read.parquet(s"$dir/events.parquet")
+          .select(col("event_id"), col("user_id")), "event_id", 3)._1)()
+          .select(col("event_id"),
+            timestamp_seconds(base + (col("event_id") % 12) * 3600
+              + (col("event_id") % 60) * 60).as("ts"))
+          .withWatermark("ts", "6 hours")
+          .groupBy(window(col("ts"), "1 hour").as("win"))
+          .agg(count(lit(1)).as("n_events"), max(col("event_id")).as("max_event_id"))
+      }.groupBy(col("win.start").as("window_start"))
         .agg(max(col("n_events")).as("n_events"),
           max(col("max_event_id")).as("max_event_id"))
     }, Some("""WITH mxs AS (SELECT max(event_id) // 3 + 1 AS step FROM events),
@@ -610,30 +638,23 @@ object StreamingQueries {
     // engine's eviction counter; the oracle derives both columns from
     // the raw events alone.
     QueryDef("st_state_eviction", (s, dir) => withStatePartitions(s, 8) {
-      val ev = s.read.parquet(s"$dir/events.parquet").select(col("event_id"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType)))
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
-      val chunkC = floor(col("event_id") / lit(step))
-      val hr = when(chunkC === 0, pmod(col("event_id"), lit(6)))
-        .otherwise(chunkC + lit(5))
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(col("event_id"),
-          timestamp_seconds(base + hr * 3600
-            + pmod(col("event_id"), lit(60)) * 60).as("ts"))
-        .withWatermark("ts", "90 minutes")
-        .groupBy(window(col("ts"), "1 hour").as("win"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName("graft_st_evict")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      val q = drain(s) { st =>
+        val (chunks, step) = idChunks(
+          s.read.parquet(s"$dir/events.parquet").select(col("event_id")), "event_id", 4)
+        val chunkC = floor(col("event_id") / lit(step))
+        val hr = when(chunkC === 0, pmod(col("event_id"), lit(6)))
+          .otherwise(chunkC + lit(5))
+        st.chunkStream(chunks)()
+          .select(col("event_id"),
+            timestamp_seconds(base + hr * 3600
+              + pmod(col("event_id"), lit(60)) * 60).as("ts"))
+          .withWatermark("ts", "90 minutes")
+          .groupBy(window(col("ts"), "1 hour").as("win"))
+          .agg(count(lit(1)).as("n"))
+          .writeStream.format("memory").queryName("graft_st_evict")
+          .outputMode("append").start()
+      }
       import s.implicits._
       q.recentProgress.toSeq
         .filter(p => p.numInputRows > 0 && p.stateOperators.nonEmpty)
@@ -687,40 +708,28 @@ object StreamingQueries {
     // condition, ±1 semantics), unlike the aggregation twin whose
     // eviction granularity is whole windows the oracle can replay.
     QueryDef("st_join_state_eviction", (s, dir) => withStatePartitions(s, 8) {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType)))
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
-      def src() = {
-        val raw = s.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", 1).parquet(stage)
+      val q = drain(s) { st =>
+        val (chunks, step) = idChunks(s.read.parquet(s"$dir/events.parquet")
+          .select(col("event_id"), col("user_id")), "event_id", 4)
+        val read = st.chunkStream(chunks)
         val chunkC = floor(col("event_id") / lit(step))
-        raw.select(col("event_id"), col("user_id"),
+        def src() = read().select(col("event_id"), col("user_id"),
           timestamp_seconds(base + (chunkC * 3 + pmod(col("event_id"), lit(3))) * 3600
             + pmod(col("event_id"), lit(60)) * 60).as("ts"))
+        val clicks = src().filter(col("event_id") % 2 === 0)
+          .select(col("user_id"), col("ts").as("c_ts"))
+          .withWatermark("c_ts", "1 hour")
+        val purchases = src().filter(col("event_id") % 2 === 1)
+          .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+          .withWatermark("p_ts", "1 hour")
+        clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+              col("p_ts") >= col("c_ts") &&
+              col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
+          .writeStream.format("memory").queryName("graft_st_jevict")
+          .outputMode("append").start()
       }
-      val clicks = src().filter(col("event_id") % 2 === 0)
-        .select(col("user_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = src().filter(col("event_id") % 2 === 1)
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val q = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-        .writeStream.format("memory").queryName("graft_st_jevict")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
       // numInputRows counts SOURCE rows (each side reads the full chunk
       // before its parity filter), so the buffered baseline is half the
@@ -766,29 +775,22 @@ object StreamingQueries {
     QueryDef("st_stream_static_join", (s, dir) => withStatePartitions(s, 8) {
       val dim = graft.core.Tables.nation(s, dir)
         .select(col("n_nationkey"), col("n_name"))
-      val q = EventStream.readEvents(s, dir)
-        .withColumn("n_nationkey", col("user_id") % 25)
-        .join(broadcast(dim), Seq("n_nationkey"))
-        .groupBy("n_name").agg(count(lit(1)).as("n_events"))
-        .writeStream.format("memory")
-        .queryName("graft_st_dim_join").outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_dim_join")
+      drainToMemory(s, "graft_st_dim_join", "complete")(_ =>
+        EventStream.readEvents(s, dir)
+          .withColumn("n_nationkey", col("user_id") % 25)
+          .join(broadcast(dim), Seq("n_nationkey"))
+          .groupBy("n_name").agg(count(lit(1)).as("n_events")))
     }, Some("""SELECT n_name, count(*) AS n_events FROM events
       JOIN nation ON user_id % 25 = n_nationkey GROUP BY n_name""")),
 
     // Stream-stream interval join (click -> purchase attribution within
     // 30 min, per user), drained to completion == the batch self-join.
     QueryDef("st_stream_stream_join", (s, dir) => withStatePartitions(s, 8) {
-      val ev = EventStream.readEvents(s, dir)
-      val q = EventStream.clickToPurchase(
-          ev.filter(col("event_type") === "click"),
+      drainToMemory(s, "graft_st_attrib", "append")(_ =>
+        EventStream.clickToPurchase(
+          EventStream.readEvents(s, dir).filter(col("event_type") === "click"),
           EventStream.readEvents(s, dir).filter(col("event_type") === "purchase"),
-          windowMinutes = 30)
-        .writeStream.format("memory")
-        .queryName("graft_st_attrib").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_attrib")
+          windowMinutes = 30))
     }, Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
         c.user_id AS user_id
       FROM events c JOIN events p
@@ -804,16 +806,14 @@ object StreamingQueries {
     // every unmatched click. Oracle = the batch LEFT JOIN with the same
     // interval condition.
     QueryDef("st_stream_outer_join", (s, dir) => withStatePartitions(s, 8) {
-      val stage = stageWithSentinel(s, dir, Seq("click", "purchase"))
-      def side(tpe: String) = EventStream
-        .readEvents(s, stage, globFilter = "*.parquet")
-        .filter(col("event_type") === tpe)
-      val q = EventStream.clickToPurchaseOuter(side("click"), side("purchase"),
+      drainToMemory(s, "graft_st_outer", "append") { st =>
+        val stage = st.withSentinel(dir, Seq("click", "purchase"))
+        def side(tpe: String) = EventStream
+          .readEvents(s, stage, globFilter = "*.parquet")
+          .filter(col("event_type") === tpe)
+        EventStream.clickToPurchaseOuter(side("click"), side("purchase"),
           windowMinutes = 30)
-        .writeStream.format("memory")
-        .queryName("graft_st_outer").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_outer").filter(col("user_id") >= 0)
+      }.filter(col("user_id") >= 0)
     }, Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
         c.user_id AS user_id
       FROM (SELECT * FROM events WHERE event_type = 'click') c
@@ -823,12 +823,8 @@ object StreamingQueries {
 
     // Streaming dedup drained to completion == batch dropDuplicates.
     QueryDef("st_dedup_stream", (s, dir) => withStatePartitions(s, 8) {
-      val q = EventStream.dedupStream(EventStream.readEvents(s, dir),
-          Seq("user_id"))
-        .writeStream.format("memory")
-        .queryName("graft_st_dedup").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_dedup")
+      drainToMemory(s, "graft_st_dedup", "append")(_ =>
+        EventStream.dedupStream(EventStream.readEvents(s, dir), Seq("user_id")))
         .groupBy("user_id").agg(count(lit(1)).as("n_kept"))
     }, Some("""SELECT user_id, count(*) AS n_kept FROM (
         SELECT DISTINCT user_id, ts FROM events) GROUP BY user_id""")),
@@ -840,13 +836,10 @@ object StreamingQueries {
     // advances naturally). Oracle = the batch session_window chain (w12),
     // real users only.
     QueryDef("st_session_window", (s, dir) => withStatePartitions(s, 8) {
-      val stage = stageWithSentinel(s, dir, Seq("click"))
-      val q = graft.streaming.EventStream.sessionWindowStats(
-          graft.streaming.EventStream.readEvents(s, stage, globFilter = "*.parquet"))
-        .writeStream.format("memory")
-        .queryName("graft_st_session").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_session").filter(col("user_id") >= 0)
+      drainToMemory(s, "graft_st_session", "append")(st =>
+        EventStream.sessionWindowStats(EventStream.readEvents(s,
+          st.withSentinel(dir, Seq("click")), globFilter = "*.parquet")))
+        .filter(col("user_id") >= 0)
     }, Some("""WITH flagged AS (SELECT user_id, event_id, ts,
           CASE WHEN lag(ts) OVER w IS NULL
                  OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1
@@ -866,13 +859,10 @@ object StreamingQueries {
     // exactly what the oracle computes (exact integer-µs gap math on both
     // sides).
     QueryDef("st_custom_state", (s, dir) => withStatePartitions(s, 8) {
-      val stage = stageWithSentinel(s, dir, Seq("click"))
-      val q = EventStream.sessionizeClosed(
-          EventStream.readEvents(s, stage, globFilter = "*.parquet")).toDF()
-        .writeStream.format("memory")
-        .queryName("graft_st_fmgs").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_fmgs").filter(col("userId") >= 0)
+      drainToMemory(s, "graft_st_fmgs", "append")(st =>
+        EventStream.sessionizeClosed(EventStream.readEvents(s,
+          st.withSentinel(dir, Seq("click")), globFilter = "*.parquet")).toDF())
+        .filter(col("userId") >= 0)
         .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
           round(col("durationSec") + lit(1e-9), 6).as("duration_sec"))
     }, Some("""WITH flagged AS (SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -898,20 +888,17 @@ object StreamingQueries {
     // table == the one-shot batch aggregate.
     QueryDef("st_incremental_upsert", (s, dir) => withStatePartitions(s, 8) {
       val table = "graft_stream_user_stats"
-      graft.core.Materialize.dropWithLocation(s, table)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val stage = java.nio.file.Files.createTempDirectory("graft_st_ups")
-      try {
+      drain(s, table) { st =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val stage = st.dir("graft_st_ups").toString
         // plain read (no imposed schema): works against either fixture
         // ts encoding; the staged files inherit it and readEvents' probe
         // picks the matching conversion
         s.read.parquet(s"$dir/events.parquet")
-          .repartition(4).write.mode("overwrite").parquet(stage.toString)
-        val q = EventStream.upsertUserStats(
-          EventStream.readEvents(s, stage.toString, globFilter = "*.parquet",
-            maxFilesPerTrigger = 1), table)
-        try q.processAllAvailable() finally q.stop()
-      } finally graft.core.Materialize.deleteRecursively(stage)
+          .repartition(4).write.mode("overwrite").parquet(stage)
+        EventStream.upsertUserStats(EventStream.readEvents(s, stage,
+          globFilter = "*.parquet", maxFilesPerTrigger = 1), table)
+      }
       s.table(table).drop("__last_batch")
     }, Some("""SELECT user_id, count(*) AS n_events, max(ts) AS last_ts
       FROM events GROUP BY user_id""")),
@@ -924,22 +911,9 @@ object StreamingQueries {
     // is exactly what the oracle computes in one statement.
     QueryDef("st_dedup_ingest", (s, dir) => withStatePartitions(s, 4) {
       val table = "graft_stream_dedup_docs"
-      graft.core.Materialize.dropWithLocation(s, table)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val stream = s.readStream.schema(DocChunkSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.CorpusIngest.dedupIngest(
-        stream, "doc_id", "text", table)
-      try q.processAllAvailable() finally q.stop()
-      // the stream's clone did the appends; drop this session's stale
-      // file-listing snapshot before the read-back
-      s.catalog.refreshTable(table)
+      drain(s, table)(st => graft.streaming.CorpusIngest.dedupIngest(
+        st.chunkStream(idChunks(docsText(s, dir), "doc_id", 4)._1)(),
+        "doc_id", "text", table))
       s.table(table).select(col("doc_id"))
     }, Some("""SELECT min(doc_id) AS doc_id FROM (
         SELECT doc_id, array_to_string(list_filter(
@@ -960,29 +934,10 @@ object StreamingQueries {
     // Dedup.incrementalNearDupIndexed implements with banded candidates).
     QueryDef("st_neardup_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_neardup"
-      for (t <- Seq("_docs", "_bands", "_shingles"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      def quart(i: Int) = docs
-        .filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)
-      def chunk(i: Int) =
-        if (i == 0) quart(0)
-        else quart(i).unionByName(quart(i - 1)
-          .filter(col("doc_id") % 5 === i)
-          .select((col("doc_id") + i * 1000000L).as("doc_id"),
-            concat(col("text"), lit(" dup marker tail")).as("text")))
-      val stage = stageIdChunks(s, (0 until 4).map(chunk))
-      val stream = s.readStream.schema(DocChunkSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.CorpusIngest.nearDupIngest(
-        stream, "doc_id", "text", prefix, threshold = 0.5)
-      try q.processAllAvailable() finally q.stop()
-      graft.core.CacheRegistry.releaseAll()
-      s.catalog.refreshTable(prefix + "_docs")
+      drain(s, Seq("_docs", "_bands", "_shingles").map(prefix + _): _*)(st =>
+        graft.streaming.CorpusIngest.nearDupIngest(
+          st.chunkStream(idChunks(docsText(s, dir), "doc_id", 4, docTail)._1)(),
+          "doc_id", "text", prefix, threshold = 0.5))
       s.table(prefix + "_docs")
         .select(col("doc_id"), col("__last_batch").as("batch"))
     }, Some(nearDupIngestOracle)),
@@ -998,31 +953,13 @@ object StreamingQueries {
     // the four levels with the same bucket criterion.
     QueryDef("st_embed_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_embed"
-      for (t <- Seq("_ids", "_vecs"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val v = graft.core.Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          graft.ext.Similarity.asDouble(col("embedding")).as("embedding"))
-      val mx = v.agg(max(col("vec_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      def quart(i: Int) = v
-        .filter(col("vec_id") >= i * step && col("vec_id") < (i + 1) * step)
-      def chunk(i: Int) =
-        if (i == 0) quart(0)
-        else quart(i).unionByName(quart(i - 1)
-          .filter(col("vec_id") % 5 === i)
-          .select((col("vec_id") + i * 1000000L).as("vec_id"),
-            concat(array(element_at(col("embedding"), 1) + lit(0.01)),
-              slice(col("embedding"), 2, 63)).as("embedding")))
-      val stage = stageIdChunks(s, (0 until 4).map(chunk))
-      val stream = s.readStream.schema(VecChunkSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.VectorIngest.embedIngest(
-        stream, "vec_id", "embedding", prefix, tau = 0.99, bits = 4)
-      try q.processAllAvailable() finally q.stop()
-      graft.core.CacheRegistry.releaseAll()
-      s.catalog.refreshTable(prefix + "_ids")
+      // perturbed near-copies: cosine ≈ 0.9999 with their originals
+      val tail = concat(array(element_at(col("embedding"), 1) + lit(0.01)),
+        slice(col("embedding"), 2, 63)).as("embedding")
+      drain(s, prefix + "_ids", prefix + "_vecs")(st =>
+        graft.streaming.VectorIngest.embedIngest(
+          st.chunkStream(idChunks(vecs(s, dir), "vec_id", 4, Some(tail))._1)(),
+          "vec_id", "embedding", prefix, tau = 0.99, bits = 4))
       s.table(prefix + "_ids")
         .select(col("vec_id"), col("__last_batch").as("batch"))
     }, Some(embedIngestOracle)),
@@ -1035,24 +972,10 @@ object StreamingQueries {
     // drained state must equal the 4-step unrolled fold.
     QueryDef("st_kmeans_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_kmeans"
-      for (t <- Seq("_state", "_marks"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val v = graft.core.Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          graft.ext.Similarity.asDouble(col("embedding")).as("embedding"))
-      val mx = v.agg(max(col("vec_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        v.filter(col("vec_id") >= i * step && col("vec_id") < (i + 1) * step)))
-      val stream = s.readStream.schema(VecChunkSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.VectorIngest.kmeansIngest(
-        stream, "vec_id", "embedding", prefix, k = 8)
-      try q.processAllAvailable() finally q.stop()
-      graft.core.CacheRegistry.releaseAll()
-      s.catalog.refreshTable(prefix + "_state")
-      s.catalog.refreshTable(prefix + "_marks")
+      drain(s, prefix + "_state", prefix + "_marks")(st =>
+        graft.streaming.VectorIngest.kmeansIngest(
+          st.chunkStream(idChunks(vecs(s, dir), "vec_id", 4)._1)(),
+          "vec_id", "embedding", prefix, k = 8))
       val last = graft.streaming.Replay.lastIn(s, prefix + "_marks", "__last_batch")
       s.table(prefix + "_state").filter(col("__batch") === last).distinct()
         .select(col("cluster"), col("dim"), col("c"), col("cnt"))
@@ -1068,23 +991,10 @@ object StreamingQueries {
     // build — the same oracle SQL as ext_bm25_topk.
     QueryDef("st_bm25_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_bm25"
-      for (t <- Seq("_postings", "_stats"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val stream = s.readStream.schema(DocChunkSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.SearchIngest.bm25Ingest(
-        stream, "doc_id", "text", prefix)
-      try q.processAllAvailable() finally q.stop()
-      graft.core.CacheRegistry.releaseAll()
-      s.catalog.refreshTable(prefix + "_postings")
-      s.catalog.refreshTable(prefix + "_stats")
+      drain(s, prefix + "_postings", prefix + "_stats")(st =>
+        graft.streaming.SearchIngest.bm25Ingest(
+          st.chunkStream(idChunks(docsText(s, dir), "doc_id", 4)._1)(),
+          "doc_id", "text", prefix))
       val postings = graft.streaming.SearchIngest.dedupedPostings(
         s.table(prefix + "_postings"))
       val stats = graft.streaming.SearchIngest.statsOf(s, prefix)
@@ -1122,28 +1032,13 @@ object StreamingQueries {
     // (audit-ready); output = the final weight vector.
     QueryDef("st_classifier_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_clf"
-      for (t <- Seq("_weights", "_marks"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val feats = ExtQueries.classifierFixture(s, dir)
-      val stage = stageIdChunks(s, (0 until 4).map(b =>
-        feats.filter((col("doc_id") % 100000) % 4 === b)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("buckets",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.IntegerType)),
-        org.apache.spark.sql.types.StructField("y",
-          org.apache.spark.sql.types.LongType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.ClassifierIngest.classifierIngest(
-        stream, "buckets", "y", prefix, numBuckets = 64, roundsPerBatch = 4)
-      try q.processAllAvailable() finally q.stop()
-      graft.core.CacheRegistry.releaseAll()
-      s.catalog.refreshTable(prefix + "_weights")
-      s.catalog.refreshTable(prefix + "_marks")
+      drain(s, prefix + "_weights", prefix + "_marks") { st =>
+        val feats = ExtQueries.classifierFixture(s, dir)
+        graft.streaming.ClassifierIngest.classifierIngest(
+          st.chunkStream((0 until 4).map(b =>
+            feats.filter((col("doc_id") % 100000) % 4 === b)))(),
+          "buckets", "y", prefix, numBuckets = 64, roundsPerBatch = 4)
+      }
       val last = graft.streaming.Replay.lastIn(s, prefix + "_marks", "__last_batch")
       s.table(prefix + "_weights").filter(col("__batch") === last).distinct()
         .select(col("bucket"), col("weight"))
@@ -1160,29 +1055,15 @@ object StreamingQueries {
     // extraction (ext_mm_media_meta's oracle).
     QueryDef("st_mm_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_mm"
-      for (t <- Seq("_meta", "_marks"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("payload",
-          org.apache.spark.sql.types.BinaryType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.MediaIngest.mediaIngest(
-        stream, "doc_id", "payload",
-        element_at(typedLit(Seq("image", "audio", "video")),
-          (col("doc_id") % 3 + 1).cast("int")),
-        prefix)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_meta")
+      drain(s, prefix + "_meta", prefix + "_marks")(st =>
+        graft.streaming.MediaIngest.mediaIngest(
+          st.chunkStream(idChunks(s.read.parquet(s"$dir/documents.parquet")
+            .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
+            "doc_id", 4)._1)(),
+          "doc_id", "payload",
+          element_at(typedLit(Seq("image", "audio", "video")),
+            (col("doc_id") % 3 + 1).cast("int")),
+          prefix))
       graft.streaming.MediaIngest.dedupedMeta(s.table(prefix + "_meta"))
     }, Some("""SELECT doc_id AS media_id,
         (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS media_type,
@@ -1196,41 +1077,19 @@ object StreamingQueries {
     // chunked feed as st_neardup_ingest.
     QueryDef("st_curation_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_curation"
-      for (t <- Seq("_docs", "_bands", "_shingles"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      def quart(i: Int) = docs
-        .filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)
-      def chunk(i: Int) =
-        if (i == 0) quart(0)
-        else quart(i).unionByName(quart(i - 1)
-          .filter(col("doc_id") % 5 === i)
-          .select((col("doc_id") + i * 1000000L).as("doc_id"),
-            concat(col("text"), lit(" dup marker tail")).as("text")))
-      val stage = stageIdChunks(s, (0 until 4).map(chunk))
-      val stream = s.readStream.schema(DocChunkSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.CorpusIngest.curationIngest(
-        stream, "doc_id", "text", prefix, threshold = 0.5)
-      try q.processAllAvailable() finally q.stop()
-      graft.core.CacheRegistry.releaseAll()
-      s.catalog.refreshTable(prefix + "_docs")
+      drain(s, Seq("_docs", "_bands", "_shingles").map(prefix + _): _*)(st =>
+        graft.streaming.CorpusIngest.curationIngest(
+          st.chunkStream(idChunks(docsText(s, dir), "doc_id", 4, docTail)._1)(),
+          "doc_id", "text", prefix, threshold = 0.5))
       s.table(prefix + "_docs")
         .select(col("doc_id"), col("__last_batch").as("batch"),
           graft.ext.Corpus.hashSplit(col("doc_id")).as("split"))
     }, Some(curationIngestOracle)),
 
     QueryDef("st_dedup_bykey", (s, dir) => withStatePartitions(s, 8) {
-      val q = EventStream.dedupStreamByKey(EventStream.readEvents(s, dir),
-          Seq("user_id"))
-        .writeStream.format("memory")
-        .queryName("graft_st_dedup_bykey").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_st_dedup_bykey").select("user_id").distinct()
+      drainToMemory(s, "graft_st_dedup_bykey", "append")(_ =>
+        EventStream.dedupStreamByKey(EventStream.readEvents(s, dir), Seq("user_id")))
+        .select("user_id").distinct()
     }, Some("SELECT DISTINCT user_id FROM events")),
 
 
@@ -1241,25 +1100,13 @@ object StreamingQueries {
     // PSI against the same reference, chunk by chunk.
     QueryDef("st_drift_monitor", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_drift"
-      graft.core.Materialize.dropWithLocation(s, prefix + "_psi")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("n_chars"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.DriftMonitor.psiIngest(
-        stream, docs, "n_chars", binWidth = 500.0, prefix)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_psi")
+      drain(s, prefix + "_psi") { st =>
+        val docs = s.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id"), col("n_chars"))
+        graft.streaming.DriftMonitor.psiIngest(
+          st.chunkStream(idChunks(docs, "doc_id", 4)._1)(),
+          docs, "n_chars", binWidth = 500.0, prefix)
+      }
       s.table(prefix + "_psi")
     }, Some {
       val chunks = (0 until 4).map { i =>
@@ -1309,27 +1156,13 @@ object StreamingQueries {
     // scored each row.
     QueryDef("st_drift_rebaseline", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_driftrb"
-      graft.core.Materialize.dropWithLocation(s, prefix + "_psi")
-      graft.core.Materialize.dropWithLocation(s, prefix + "_psi_bins")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("n_chars"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.DriftMonitor.psiRebaselineIngest(
-        stream, docs, "n_chars", binWidth = 500.0, prefix,
-        rebaselineEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_psi")
+      drain(s, prefix + "_psi", prefix + "_psi_bins") { st =>
+        val docs = s.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id"), col("n_chars"))
+        graft.streaming.DriftMonitor.psiRebaselineIngest(
+          st.chunkStream(idChunks(docs, "doc_id", 4)._1)(),
+          docs, "n_chars", binWidth = 500.0, prefix, rebaselineEvery = 2)
+      }
       s.table(prefix + "_psi")
     }, Some {
       val chunks = (0 until 4).map { i =>
@@ -1385,30 +1218,13 @@ object StreamingQueries {
     // the cross-batch mergeability contract, trigger by trigger.
     QueryDef("st_hll_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_hll"
-      for (t <- Seq("_hll_regs", "_hll_est"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"), col("source"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(col("source"),
-          explode(graft.ext.TextOps.stringShingles(col("text"), 3)).as("term"))
-      val q = graft.streaming.SketchIngest.hllIngest(
-        stream, "term", "source", prefix)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_hll_est")
+      drain(s, prefix + "_hll_regs", prefix + "_hll_est")(st =>
+        graft.streaming.SketchIngest.hllIngest(
+          st.chunkStream(idChunks(s.read.parquet(s"$dir/documents.parquet")
+            .select(col("doc_id"), col("text"), col("source")), "doc_id", 4)._1)()
+            .select(col("source"),
+              explode(graft.ext.TextOps.stringShingles(col("text"), 3)).as("term")),
+          "term", "source", prefix))
       s.table(prefix + "_hll_est")
         .select(col("batch_id"), col("source"), col("est"), col("n_new"))
     }, Some(s"""WITH mxs AS (SELECT max(doc_id) // 4 + 1 AS step FROM documents),
@@ -1463,30 +1279,13 @@ object StreamingQueries {
     // must hash-match bit-identically anyway.
     QueryDef("st_kmv_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_kmv"
-      for (t <- Seq("_kmv_hashes", "_kmv_est"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"), col("source"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(col("source"),
-          explode(graft.ext.TextOps.stringShingles(col("text"), 3)).as("term"))
-      val q = graft.streaming.SketchIngest.kmvIngest(
-        stream, "term", "source", prefix, k = 64, compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_kmv_est")
+      drain(s, prefix + "_kmv_hashes", prefix + "_kmv_est")(st =>
+        graft.streaming.SketchIngest.kmvIngest(
+          st.chunkStream(idChunks(s.read.parquet(s"$dir/documents.parquet")
+            .select(col("doc_id"), col("text"), col("source")), "doc_id", 4)._1)()
+            .select(col("source"),
+              explode(graft.ext.TextOps.stringShingles(col("text"), 3)).as("term")),
+          "term", "source", prefix, k = 64, compactEvery = 2))
       s.table(prefix + "_kmv_est")
         .select(col("batch_id"), col("source"), col("est"), col("n_new"))
     }, Some(s"""WITH mxs AS (SELECT max(doc_id) // 4 + 1 AS step FROM documents),
@@ -1530,29 +1329,10 @@ object StreamingQueries {
     // so the trajectory is provably unchanged.
     QueryDef("st_kll_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_qsk"
-      for (t <- Seq("_qsk_sample", "_qsk_q"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"), col("value"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.SketchIngest.qskIngest(
-        stream, "event_id", "value", "event_type", prefix, k = 64,
-        compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_qsk_q")
+      drain(s, prefix + "_qsk_sample", prefix + "_qsk_q")(st =>
+        graft.streaming.SketchIngest.qskIngest(
+          st.chunkStream(idChunks(eventValues(s, dir), "event_id", 4)._1)(),
+          "event_id", "value", "event_type", prefix, k = 64, compactEvery = 2))
       s.table(prefix + "_qsk_q")
         .select(col("batch_id"), col("event_type"), col("m"),
           col("p50"), col("p90"), col("n_new"))
@@ -1596,29 +1376,10 @@ object StreamingQueries {
     // hash-match the uncompacted replay anyway.
     QueryDef("st_hist_quantile", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_hq"
-      for (t <- Seq("_hist_cnt", "_hist_q"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"), col("value"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.SketchIngest.histQuantileIngest(
-        stream, "value", "event_type", prefix, width = 8d,
-        compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_hist_q")
+      drain(s, prefix + "_hist_cnt", prefix + "_hist_q")(st =>
+        graft.streaming.SketchIngest.histQuantileIngest(
+          st.chunkStream(idChunks(eventValues(s, dir), "event_id", 4)._1)(),
+          "value", "event_type", prefix, width = 8d, compactEvery = 2))
       s.table(prefix + "_hist_q")
         .select(col("batch_id"), col("event_type"), col("n"),
           col("p50"), col("p90"), col("p99"))
@@ -1656,32 +1417,12 @@ object StreamingQueries {
     // compactEvery=2 puts the daily-table fold ON the oracle path.
     QueryDef("st_cusum_monitor", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_cusum"
-      for (t <- Seq("_cusum_daily", "_cusum_traj"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val ev = graft.core.Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"),
-          to_date(col("ts")).as("day"), col("value"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("day",
-          org.apache.spark.sql.types.DateType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.SketchIngest.cusumIngest(
-        stream, "value", "day", "event_type", prefix, slack = 2d,
-        compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_cusum_traj")
+      drain(s, prefix + "_cusum_daily", prefix + "_cusum_traj")(st =>
+        graft.streaming.SketchIngest.cusumIngest(
+          st.chunkStream(idChunks(graft.core.Tables.events(s, dir)
+            .select(col("event_id"), col("event_type"),
+              to_date(col("ts")).as("day"), col("value")), "event_id", 4)._1)(),
+          "value", "day", "event_type", prefix, slack = 2d, compactEvery = 2))
       s.table(prefix + "_cusum_traj")
         .select(col("batch_id"), col("event_type"), col("n_days"),
           col("max_up"), col("max_dn"))
@@ -1724,30 +1465,14 @@ object StreamingQueries {
     // including the filter's actual false positives — matches exactly.
     QueryDef("st_bloom_novelty", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_bloom"
-      for (t <- Seq("_bloom_pos", "_bloom_novel"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-      val mx = ev.agg(max(col("event_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        ev.filter(col("event_id") >= i * step && col("event_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(concat(lit("u"), col("user_id").cast("string"),
-          lit(":"), col("event_type")).as("key"))
-      val q = graft.streaming.SketchIngest.bloomNoveltyIngest(
-        stream, "key", prefix, k = 4, m = 4096)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_bloom_novel")
+      drain(s, prefix + "_bloom_pos", prefix + "_bloom_novel")(st =>
+        graft.streaming.SketchIngest.bloomNoveltyIngest(
+          st.chunkStream(idChunks(s.read.parquet(s"$dir/events.parquet")
+            .select(col("event_id"), col("user_id"), col("event_type")),
+            "event_id", 4)._1)()
+            .select(concat(lit("u"), col("user_id").cast("string"),
+              lit(":"), col("event_type")).as("key")),
+          "key", prefix, k = 4, m = 4096))
       s.table(prefix + "_bloom_novel")
         .select(col("batch_id"), col("key"), col("novel"))
     }, Some("""WITH mxs AS (SELECT max(event_id) // 4 + 1 AS step FROM events),
@@ -1782,28 +1507,11 @@ object StreamingQueries {
     // both engines derive the same md5 buckets.
     QueryDef("st_cms_ingest", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_cms"
-      for (t <- Seq("_cms_cnt", "_cms_cand", "_cms_est"))
-        graft.core.Materialize.dropWithLocation(s, prefix + t)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val step = mx / 4 + 1
-      val stage = stageIdChunks(s, (0 until 4).map(i =>
-        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .select(explode(graft.ext.TextOps.tokens(lower(col("text"))))
-          .as("term"))
-      val q = graft.streaming.SketchIngest.cmsIngest(
-        stream, "term", prefix, d = 4, w = 64, topN = 5)
-      try q.processAllAvailable() finally q.stop()
-      s.catalog.refreshTable(prefix + "_cms_est")
+      drain(s, Seq("_cms_cnt", "_cms_cand", "_cms_est").map(prefix + _): _*)(st =>
+        graft.streaming.SketchIngest.cmsIngest(
+          st.chunkStream(idChunks(docsText(s, dir), "doc_id", 4)._1)()
+            .select(explode(graft.ext.TextOps.tokens(lower(col("text")))).as("term")),
+          "term", prefix, d = 4, w = 64, topN = 5))
       s.table(prefix + "_cms_est")
         .select(col("batch_id"), col("key"), col("est"))
     }, Some(s"""WITH mxs AS (SELECT max(doc_id) // 4 + 1 AS step FROM documents),

@@ -27,10 +27,11 @@ import graft.core.Materialize.replaceTable
  *
  * Per-trigger cost: one batch-sized register aggregation (64 rows per
  * group out of the shuffle) + a collapse of the standing register
- * table. Bounded sketch-state writes are coalesced to one file per
- * trigger so standing-table reads list O(triggers) files, not
- * O(triggers × tasks). For a monitor that lives beyond thousands of
- * triggers, [[compactHll]]/[[compactBloom]]/[[compactCms]] rewrite the
+ * table. Every append is ONE file ([[appendByBatch]]), so
+ * standing-table reads list O(triggers) files, not O(triggers × tasks),
+ * and a crash mid-append leaves all of a batch's rows or none of them.
+ * For a monitor that lives beyond thousands of triggers,
+ * [[compactHll]]/[[compactBloom]]/[[compactCms]] rewrite the
  * standing state to its collapsed form without breaking the replay
  * arguments (each scaladoc carries the proof obligation) — either on
  * the operator's own schedule or wired in-trigger via the ingests'
@@ -56,15 +57,17 @@ import graft.core.Materialize.replaceTable
  */
 object SketchIngest {
 
-  /** Append `df` to `table`. `bounded` marks frames whose size is
-    * capped by sketch geometry (≤ m positions, d×w buckets, top-N
-    * candidates) — those coalesce to ONE file per trigger; unbounded
-    * frames (per-key novelty/estimate rows) keep their task
-    * parallelism. */
-  private def appendByBatch(df: DataFrame, table: String,
-                            bounded: Boolean): Unit =
-    (if (bounded) df.coalesce(1) else df)
-      .write.mode("append").format("parquet").saveAsTable(table)
+  /** Append `df` to `table` as ONE file. Under the v2 committer
+    * ([[graft.core.GraftSession]]) each task's file is published by its
+    * own rename at task commit, so a multi-file append that dies
+    * mid-job can leave part of a batch — and a guard table holding part
+    * of batch b reads b as applied ([[Replay.lastIn]]), so the rest is
+    * never written. One file is published by one rename: a crash leaves
+    * all of the batch or none of it. Every append here is batch-sized
+    * or smaller (sketch state, per-group estimates, per-key novelty
+    * rows), so one task writes it. */
+  private def appendByBatch(df: DataFrame, table: String): Unit =
+    df.coalesce(1).write.mode("append").format("parquet").saveAsTable(table)
 
   /** The stream wrapper of every monitor here: [[Replay.stream]] over
     * the monitor's `apply`, then the in-trigger compaction cadence (see
@@ -146,11 +149,9 @@ object SketchIngest {
         val obs = org.apache.spark.sql.Observation()
         val b = graft.core.CacheRegistry.persistTracked(
           batch.observe(obs, count(lit(1)).as("n")))
-        graft.functions.KmvSketch
+        appendByBatch(graft.functions.KmvSketch
           .bottomKAgg(b, keyCol, k, Seq(groupCol))
-          .select(col(groupCol), col("hash"))
-          .coalesce(1) // ≤ k rows per group — one file per trigger
-          .write.mode("append").format("parquet").saveAsTable(hashT)
+          .select(col(groupCol), col("hash")), hashT)
         spark.catalog.refreshTable(hashT)
         val nNew = obs.get("n").asInstanceOf[Long]
         if (nNew > 0) {
@@ -160,7 +161,7 @@ object SketchIngest {
             graft.functions.KmvSketch.estimate(collapsed, k, Seq(groupCol))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
                 lit(nNew).as("n_new")),
-            estT, bounded = false)
+            estT)
         }
       }
     }
@@ -232,11 +233,9 @@ object SketchIngest {
         val obs = org.apache.spark.sql.Observation()
         val b = graft.core.CacheRegistry.persistTracked(
           batch.observe(obs, count(lit(1)).as("n")))
-        graft.functions.QuantileSketch
+        appendByBatch(graft.functions.QuantileSketch
           .bottomKSampleAgg(b, idCol, valCol, k, Seq(groupCol))
-          .select(col(groupCol), col("hash"), col("val"))
-          .coalesce(1) // ≤ k rows per group — one file per trigger
-          .write.mode("append").format("parquet").saveAsTable(sampleT)
+          .select(col(groupCol), col("hash"), col("val")), sampleT)
         spark.catalog.refreshTable(sampleT)
         val nNew = obs.get("n").asInstanceOf[Long]
         if (nNew > 0) {
@@ -247,7 +246,7 @@ object SketchIngest {
                 Seq("p50" -> 0.5, "p90" -> 0.9), Seq(groupCol))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("m"),
                 col("p50"), col("p90"), lit(nNew).as("n_new")),
-            estT, bounded = false)
+            estT)
         }
       }
     }
@@ -324,7 +323,7 @@ object SketchIngest {
         appendByBatch(
           graft.functions.BloomSketch.positions(keys, keyCol, k, m)
             .select(lit(batchId).as("batch_id"), col("pos")),
-          posT, bounded = true)
+          posT)
         spark.catalog.refreshTable(posT)
         if (obs.get("n").asInstanceOf[Long] > 0) {
           val prior = spark.table(posT).filter(col("batch_id") < batchId)
@@ -333,7 +332,7 @@ object SketchIngest {
             graft.functions.BloomSketch.mightContain(keys, keyCol, prior, k, m)
               .select(lit(batchId).as("batch_id"), col(keyCol),
                 (!col("might_contain")).as("novel")),
-            novT, bounded = false)
+            novT)
         }
       }
     }
@@ -401,12 +400,12 @@ object SketchIngest {
             .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
             .select(lit(batchId).as("batch_id"), col("j"), col("pos"),
               col("cnt")),
-          cntT, bounded = true)
+          cntT)
         if (obs.get("n").asInstanceOf[Long] > 0) {
           appendByBatch(
             counts.orderBy(desc("cnt"), col(keyCol)).limit(topN)
               .select(lit(batchId).as("batch_id"), col(keyCol).as("key")),
-            candT, bounded = true)
+            candT)
           spark.catalog.refreshTable(cntT)
           spark.catalog.refreshTable(candT)
           val buckets = spark.table(cntT).filter(col("batch_id") <= batchId)
@@ -422,7 +421,7 @@ object SketchIngest {
               .groupBy(col("key"))
               .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
               .select(lit(batchId).as("batch_id"), col("key"), col("est")),
-            estT, bounded = false)
+            estT)
         }
       }
     }
@@ -447,10 +446,8 @@ object SketchIngest {
         val obs = org.apache.spark.sql.Observation()
         val b = graft.core.CacheRegistry.persistTracked(
           batch.observe(obs, count(lit(1)).as("n")))
-        graft.functions.HyperLogLog
-          .registers(b, keyCol, Seq(groupCol))
-          .coalesce(1) // ≤ 64 rows per group — one file per trigger
-          .write.mode("append").format("parquet").saveAsTable(regsT)
+        appendByBatch(
+          graft.functions.HyperLogLog.registers(b, keyCol, Seq(groupCol)), regsT)
         spark.catalog.refreshTable(regsT)
         val nNew = obs.get("n").asInstanceOf[Long]
         if (nNew > 0) {
@@ -461,7 +458,7 @@ object SketchIngest {
             graft.functions.HyperLogLog.estimate(merged, Seq(groupCol))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
                 lit(nNew).as("n_new")),
-            estT, bounded = false)
+            estT)
         }
       }
     }
@@ -612,7 +609,7 @@ object SketchIngest {
         appendByBatch(
           counts.select(lit(batchId).as("batch_id"), col(groupCol),
             col("bucket"), col("cnt")),
-          cntT, bounded = true)
+          cntT)
         if (obs.get("n").asInstanceOf[Long] > 0) {
           spark.catalog.refreshTable(cntT)
           val collapsed = spark.table(cntT).filter(col("batch_id") <= batchId)
@@ -637,7 +634,7 @@ object SketchIngest {
                 qEdge(90).as("p90"), qEdge(99).as("p99"))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("n"),
                 col("p50"), col("p90"), col("p99")),
-            qT, bounded = false)
+            qT)
         }
       }
     }
@@ -696,7 +693,7 @@ object SketchIngest {
         appendByBatch(
           counts.select(lit(batchId).as("batch_id"), col(groupCol),
             col("day"), col("s_micro"), col("c")),
-          dailyT, bounded = true)
+          dailyT)
         if (obs.get("n").asInstanceOf[Long] > 0) {
           spark.catalog.refreshTable(dailyT)
           val daily = spark.table(dailyT).filter(col("batch_id") <= batchId)
@@ -716,7 +713,7 @@ object SketchIngest {
                 round(max(col("cusum_down")) + lit(1e-9), 6).as("max_dn"))
               .select(lit(batchId).as("batch_id"), col(groupCol),
                 col("n_days"), col("max_up"), col("max_dn")),
-            trajT, bounded = false)
+            trajT)
         }
       }
     }

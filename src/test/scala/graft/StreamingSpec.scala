@@ -290,17 +290,6 @@ class StreamingSpec extends SparkSpec {
       Wrapper("kmeans", Seq("_state", "_marks"), "_marks" -> "__last_batch", vecs,
         (st, p, cp) => VectorIngest.kmeansIngest(st, "vec_id", "embedding", p,
           k = 2, checkpoint = cp)))
-    // one file per chunk, mtimes in chunk order: the file source drains
-    // by modification time, so both runs see chunk i as batch i
-    val t0 = System.currentTimeMillis() - 600000L
-    def stageChunk(stage: String, c: DataFrame, i: Int): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_rs_part").toString
-      c.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(stage, s"chunk_$i.parquet")
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(t0 + i * 60000L)
-    }
     for (w <- wrappers) {
       val cra = s"graft_test_rs_${w.name}_a" // crashed at the commit boundary
       val twn = s"graft_test_rs_${w.name}_b" // never crashed
@@ -349,6 +338,139 @@ class StreamingSpec extends SparkSpec {
         graft.core.CacheRegistry.releaseAll()
       }
     }
+  }
+
+  /** Stage chunk `i` of a restart spec into `stage` as one parquet file.
+    * Its mtime orders it after chunks 0..i−1 (the file source drains by
+    * modification time), so every run sees chunk i as batch i, also
+    * when chunk i is staged after a restart. */
+  private def stageChunk(stage: String, c: org.apache.spark.sql.DataFrame,
+                         i: Int): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rs_part")
+    try {
+      c.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(stage, s"chunk_$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst.toPath)
+      dst.setLastModified(System.currentTimeMillis() - 600000L + i * 60000L)
+    } finally graft.core.Materialize.deleteRecursively(tmp)
+  }
+
+  test("sketch monitors restart from a torn guard append equal to a never-crashed twin") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.streaming.SketchIngest
+    /** One monitor: its tables (guard last) and how it starts. */
+    case class Monitor(name: String, tables: Seq[String],
+                       start: (DataFrame, String, Option[String]) => StreamingQuery)
+    // compactEvery = 2 compacts every state table after batch 3 on both
+    // runs, so the crashed run's replay dupes must be folded away and
+    // every table must equal the twin's as a multiset
+    val monitors = Seq(
+      Monitor("hll", Seq("_hll_regs", "_hll_est"), (st, p, cp) =>
+        SketchIngest.hllIngest(st, "key", "grp", p, cp, compactEvery = 2)),
+      Monitor("kmv", Seq("_kmv_hashes", "_kmv_est"), (st, p, cp) =>
+        SketchIngest.kmvIngest(st, "key", "grp", p, k = 8, cp, compactEvery = 2)),
+      Monitor("qsk", Seq("_qsk_sample", "_qsk_q"), (st, p, cp) =>
+        SketchIngest.qskIngest(st, "id", "value", "grp", p, k = 8, cp,
+          compactEvery = 2)),
+      Monitor("bloom", Seq("_bloom_pos", "_bloom_novel"), (st, p, cp) =>
+        SketchIngest.bloomNoveltyIngest(st, "key", p, k = 3, m = 256, cp,
+          compactEvery = 2)),
+      Monitor("cms", Seq("_cms_cnt", "_cms_cand", "_cms_est"), (st, p, cp) =>
+        SketchIngest.cmsIngest(st, "key", p, d = 2, w = 32, topN = 3, cp,
+          compactEvery = 2)),
+      Monitor("hist", Seq("_hist_cnt", "_hist_q"), (st, p, cp) =>
+        SketchIngest.histQuantileIngest(st, "value", "grp", p, width = 4d, cp,
+          compactEvery = 2)),
+      Monitor("cusum", Seq("_cusum_daily", "_cusum_traj"), (st, p, cp) =>
+        SketchIngest.cusumIngest(st, "value", "day", "grp", p, slack = 1d, cp,
+          compactEvery = 2)))
+    // 4 chunks of 40 rows over 6 groups and ~50 keys: every guard append
+    // has rows for several groups or keys
+    val chunks = (0 until 4).map(c => (c * 40L until (c + 1) * 40L)
+      .map(id => (id, s"k${id * 7 % 53}", s"g${id % 6}", (id % 37) * 1.5, id % 5))
+      .toDF("id", "key", "grp", "value", "d")
+      .select(col("id"), col("key"), col("grp"), col("value"),
+        date_add(lit("2026-01-01").cast("date"), col("d").cast("int")).as("day")))
+    val schema = chunks.head.schema
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // as the registry drains run
+    val dirs = Seq("graft_tg_twin", "graft_tg_stage", "graft_tg_ckpt")
+      .map(java.nio.file.Files.createTempDirectory(_))
+    val Seq(twinStage, stage, ckpt) = dirs.map(_.toString)
+    chunks.zipWithIndex.foreach { case (c, i) => stageChunk(twinStage, c, i) }
+    (0 until 3).foreach(i => stageChunk(stage, chunks(i), i))
+    try for (m <- monitors) {
+      val cra = s"graft_test_tg_${m.name}_a" // torn guard append at batch 2
+      val twn = s"graft_test_tg_${m.name}_b" // never crashed
+      def dropAll(): Unit = for (p <- Seq(cra, twn); t <- m.tables)
+        graft.core.Materialize.dropWithLocation(spark, p + t)
+      dropAll()
+      val cp = s"$ckpt/${m.name}"
+      try {
+        def drain(stage: String, p: String, cp: Option[String]): StreamingQuery = {
+          val q = m.start(spark.readStream.schema(schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", 1).parquet(stage), p, cp)
+          try q.processAllAvailable() finally q.stop()
+          q
+        }
+        drain(twinStage, twn, None)
+        drain(stage, cra, Some(cp))
+        // the crash: batch 2's guard append died after one of its files
+        // was published, before the offset commit. A task-parallel
+        // append spreads these rows over several files (4 per monitor
+        // here), so deleting one leaves part of batch 2; a one-file
+        // append loses all of it, and the restart must re-run the batch
+        val guard = cra + m.tables.last
+        spark.catalog.refreshTable(guard)
+        val files = spark.table(guard).filter(col("batch_id") === 2L)
+          .select(input_file_name()).distinct().as[String].collect()
+          .map(f => new java.io.File(new java.net.URI(f)))
+        assert(files.nonEmpty, s"${m.name}: batch 2 wrote no guard rows")
+        assert(files.head.delete())
+        new java.io.File(files.head.getParent, s".${files.head.getName}.crc").delete()
+        val commits = new java.io.File(cp, "commits")
+        assert(commits.list().filter(_.matches("\\d+")).map(_.toLong).max == 2L,
+          s"${m.name}: three chunks must drain as three batches")
+        for (f <- Seq("2", ".2.crc")) new java.io.File(commits, f).delete()
+        spark.catalog.refreshTable(guard)
+        stageChunk(stage, chunks(3), 3)
+        val q2 = drain(stage, cra, Some(cp))
+        assert(q2.recentProgress.map(_.batchId).contains(2L),
+          s"${m.name}: the restart must re-run the uncommitted batch")
+        for (p <- Seq(cra, twn); t <- m.tables) spark.catalog.refreshTable(p + t)
+        for (t <- m.tables) {
+          val (a, b) = (spark.table(cra + t), spark.table(twn + t))
+          assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+            s"${m.name}: $t differs from the never-crashed twin " +
+              s"(batch 2's guard append was ${files.length} file(s), one deleted)")
+        }
+        assert(files.length == 1,
+          s"${m.name}: a guard append must be one file, was ${files.length}")
+      } finally {
+        dropAll()
+        graft.core.CacheRegistry.releaseAll()
+        new java.io.File(stage, "chunk_3.parquet").delete()
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      dirs.foreach(graft.core.Materialize.deleteRecursively)
+    }
+  }
+
+  test("registry drains leave no staging dir behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged() = tmp.list().filter(_.startsWith("graft_st_")).toSet
+    val before = staged()
+    try for (q <- Seq("st_stream_outer_join", "st_hll_ingest"))
+      graft.queries.Registry.queries(q)(spark, sfDir)
+    finally for (t <- Seq("_hll_regs", "_hll_est"))
+      graft.core.Materialize.dropWithLocation(spark, "graft_stream_hll" + t)
+    assert(staged() -- before == Set.empty[String],
+      "a drain must delete its staging dirs")
   }
 
   test("flatMapGroupsWithState emits only closed sessions, in append mode") {
@@ -538,14 +660,13 @@ class StreamingSpec extends SparkSpec {
     dropAll()
     val stage = java.nio.file.Files.createTempDirectory("graft_embres_stage").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_embres_ckpt").toString
-    val schema = graft.queries.StreamingQueries.VecChunkSchema
-    def feed() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
     val ones = Seq.fill(64)(1.0)
+    val first = Seq((10L, ones), (11L, Seq.fill(32)(1.0) ++ Seq.fill(32)(0.0)))
+      .toDF("vec_id", "embedding")
+    def feed() = spark.readStream.schema(first.schema)
+      .option("maxFilesPerTrigger", 1).parquet(stage)
     try {
-      Seq((10L, ones), (11L, Seq.fill(32)(1.0) ++ Seq.fill(32)(0.0)))
-        .toDF("vec_id", "embedding").coalesce(1)
-        .write.mode("overwrite").parquet(stage)
+      first.coalesce(1).write.mode("overwrite").parquet(stage)
       val q1 = graft.streaming.VectorIngest.embedIngest(
         feed(), "vec_id", "embedding", prefix, checkpoint = Some(ckpt))
       try q1.processAllAvailable() finally q1.stop()
@@ -877,7 +998,7 @@ class StreamingSpec extends SparkSpec {
   test("sentinel staging matches the fixture's ts encoding (INT64-nanos variant)") {
     // Re-encode the fixture's events as INT64 nanos — the other physical
     // encoding the driver has shipped — and run the sentinel-staged outer
-    // join against it. Before the encoding probe in stageWithSentinel,
+    // join against it. Before the encoding probe in Staging.withSentinel,
     // the staged dir mixed an INT64 fixture with an NTZ sentinel and the
     // pinned-schema stream read failed or corrupted ts.
     val nanosDir = java.nio.file.Files.createTempDirectory("graft_nanos_fix")
@@ -1362,27 +1483,6 @@ class StreamingSpec extends SparkSpec {
     graft.core.Materialize.dropWithLocation(spark, prefix + "_psi")
   }
 
-  /** Stage `chunks` as one parquet file each, mtime-ordered so a
-    * maxFilesPerTrigger=1 file stream drains one chunk per trigger —
-    * the StreamingQueries.stageIdChunks layout, spec-local. */
-  private def stageChunks(
-      chunks: Seq[org.apache.spark.sql.DataFrame]): String = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_spec_stage")
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      val scratch = java.nio.file.Files.createTempDirectory("graft_spec_part")
-      c.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = new java.io.File(scratch.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.Paths.get(
-        f"$stage/c$i%02d_chunk.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - (chunks.size - i) * 60000L))
-    }
-    stage.toString
-  }
-
   test("auto-compaction cadence: 6 triggers at compactEvery=2 stay bit-equal to the uncompacted twin") {
     import spark.implicits._
     val a = "graft_test_autocpt_a" // compactEvery = 2 (3 in-trigger compactions)
@@ -1391,21 +1491,14 @@ class StreamingSpec extends SparkSpec {
       "_cms_cnt", "_cms_cand", "_cms_est")
     for (p <- Seq(a, b); t <- tbls)
       graft.core.Materialize.dropWithLocation(spark, p + t)
+    val staging = new graft.queries.StreamingQueries.Staging(spark)
     try {
       // 6 chunks with fresh + repeating keys so novelty, registers, and
       // counts all evolve across the compaction points
       val chunks = (0 until 6).map(i =>
         Seq(s"k$i", s"k${i + 1}", "common")
           .toDF("key").withColumn("src", lit("s1")))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("src",
-          org.apache.spark.sql.types.StringType)))
-      val stage = stageChunks(chunks)
-      def feed() = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val feed = staging.chunkStream(chunks)
       for ((p, every) <- Seq(a -> 2, b -> 0)) {
         val q1 = graft.streaming.SketchIngest.hllIngest(
           feed(), "key", "src", p, compactEvery = every)
@@ -1444,8 +1537,11 @@ class StreamingSpec extends SparkSpec {
       assert(cnt.forall(_._1 == 5L) &&
         cnt.map(r => (r._2, r._3)).distinct.length == cnt.length,
         "cms buckets must be collapsed under the max committed id")
-    } finally for (p <- Seq(a, b); t <- tbls)
-      graft.core.Materialize.dropWithLocation(spark, p + t)
+    } finally {
+      staging.close()
+      for (p <- Seq(a, b); t <- tbls)
+        graft.core.Materialize.dropWithLocation(spark, p + t)
+    }
   }
 
   test("kmv ingest: cadence bit-equal to uncompacted twin; replay and compaction idempotent") {
@@ -1455,19 +1551,12 @@ class StreamingSpec extends SparkSpec {
     val tbls = Seq("_kmv_hashes", "_kmv_est")
     for (p <- Seq(a, b); t <- tbls)
       graft.core.Materialize.dropWithLocation(spark, p + t)
+    val staging = new graft.queries.StreamingQueries.Staging(spark)
     try {
       val chunks = (0 until 6).map(i =>
         ((0 to 8).map(j => s"k${i * 3 + j}") :+ "common")
           .toDF("key").withColumn("src", lit("s1")))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("src",
-          org.apache.spark.sql.types.StringType)))
-      val stage = stageChunks(chunks)
-      def feed() = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val feed = staging.chunkStream(chunks)
       for ((p, every) <- Seq(a -> 2, b -> 0)) {
         val q = graft.streaming.SketchIngest.kmvIngest(
           feed(), "key", "src", p, k = 8, compactEvery = every)
@@ -1494,8 +1583,11 @@ class StreamingSpec extends SparkSpec {
       val hs2 = spark.table(a + "_kmv_hashes")
         .select("src", "hash").as[(String, String)].collect()
       assert(hs2.sorted.toSeq == hs.sorted.toSeq)
-    } finally for (p <- Seq(a, b); t <- tbls)
-      graft.core.Materialize.dropWithLocation(spark, p + t)
+    } finally {
+      staging.close()
+      for (p <- Seq(a, b); t <- tbls)
+        graft.core.Materialize.dropWithLocation(spark, p + t)
+    }
   }
 
   test("drift re-baseline: reference swaps from committed bins; crash replay identical; dupes collapse") {
