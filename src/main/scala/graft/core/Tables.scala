@@ -1,7 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Table registry over the driver's parquet fixtures (TESTDATA.md).
@@ -18,6 +20,9 @@ import org.apache.spark.sql.functions._
  *    show the pruned shape.
  *  - At 100 TB the same API points at a partitioned table root; nothing
  *    here assumes single-file inputs.
+ *  - A plain `spark.read.parquet` submits one footer-inference job per
+ *    read. Every read here goes through [[raw]], which infers a file's
+ *    schema once and reads with it after that.
  */
 object Tables {
   val names: Seq[String] = Seq(
@@ -29,7 +34,31 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else raw(spark, dir, name)
+
+  /** Fixture `name` as stored (`events.ts` keeps its physical encoding),
+    * read with the schema last inferred for the same (qualified path,
+    * modification time, length): only a new or rewritten file pays
+    * Spark's footer-inference job. A column's inferred type depends on
+    * session settings that [[GraftSession.configure]] fixes for every
+    * session (`nanosAsLong` among them), so they are not part of the key. */
+  def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = st.getPath.toString
+    val stamp = (st.getModificationTime, st.getLen)
+    val schema = Option(schemas.get(key)).collect { case (`stamp`, s) => s }
+      .getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), StructType)]()
 
   /**
    * `events.ts` has shipped in two physical encodings across fixture
@@ -39,10 +68,10 @@ object Tables {
    * logical contract: a TimestampType (session-TZ) column at microsecond
    * precision.
    *
-   *  - Nanos files: the sanctioned escape hatch is
-   *    `spark.sql.legacy.parquet.nanosAsLong`, which surfaces the raw
-   *    nanosecond count as LongType; truncate ns → µs with INTEGER
-   *    division (`ts div 1000` — float division would lose precision:
+   *  - Nanos files: every graft session sets the sanctioned escape
+   *    hatch `spark.sql.legacy.parquet.nanosAsLong` ([[GraftSession]]),
+   *    which surfaces the raw nanosecond count as LongType; truncate
+   *    ns → µs with INTEGER division (`ts div 1000` — float division would lose precision:
    *    epoch-nanos ≈ 1.7e18 exceeds a double's 53-bit mantissa) and
    *    rebuild a TimestampType column. DuckDB performs the same ns → µs
    *    truncation, so oracle comparisons see identical values.
@@ -52,14 +81,13 @@ object Tables {
    *    instants.
    */
   private def eventsNanoFixed(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val tsFixed = raw.schema("ts").dataType match {
+    val stored = raw(spark, dir, "events")
+    val tsFixed = stored.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         timestamp_micros(expr("ts div 1000"))
       case _ => col("ts").cast(org.apache.spark.sql.types.TimestampType)
     }
-    raw.withColumn("ts", tsFixed)
+    stored.withColumn("ts", tsFixed)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.core.{CacheRegistry, Materialize}
+import graft.core.{CacheRegistry, Materialize, Tables}
 import graft.streaming.EventStream
 
 /**
@@ -127,15 +127,15 @@ object StreamingQueries {
       val stage = dir("graft_st_stage")
       Files.copy(Paths.get(s"$fixture/events.parquet"),
         stage.resolve("a_events.parquet"))
-      val maxSec = graft.core.Tables.events(s, fixture)
+      val maxSec = Tables.events(s, fixture)
         .agg(max(col("ts").cast("long"))).head().getLong(0)
       // The fixture copy and the sentinel must agree on ts's physical type:
       // readEvents pins one schema from the first listing, so a mixed-type
-      // directory fails or corrupts ts. Probe the fixture's encoding (same
-      // footer probe readEvents uses; Tables.events above set nanosAsLong)
-      // and write the sentinel to match — an INT64-nanos column when the
-      // fixture is nanos, NTZ otherwise.
-      val fixtureNanos = s.read.parquet(s"$fixture/events.parquet")
+      // directory fails or corrupts ts. Probe the fixture's encoding (the
+      // stored type readEvents' footer probe sees) and write the sentinel
+      // to match — an INT64-nanos column when the fixture is nanos, NTZ
+      // otherwise.
+      val fixtureNanos = Tables.raw(s, fixture, "events")
         .schema("ts").dataType == org.apache.spark.sql.types.LongType
       import s.implicits._
       val sentinelDir = dir("graft_st_sent")
@@ -208,7 +208,7 @@ object StreamingQueries {
 
   /** `documents` as (doc_id, text): the corpus rows' feed. */
   private def docsText(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+    Tables.raw(s, dir, "documents").select(col("doc_id"), col("text"))
 
   /** The near-dup corpus rows' tail payload: text plus a marker tail. */
   private def docTail: Option[Column] =
@@ -216,12 +216,12 @@ object StreamingQueries {
 
   /** `embeddings` as (vec_id, embedding: array<double>). */
   private def vecs(s: SparkSession, dir: String): DataFrame =
-    graft.core.Tables.embeddings(s, dir).select(col("vec_id"),
+    Tables.embeddings(s, dir).select(col("vec_id"),
       graft.ext.Similarity.asDouble(col("embedding")).as("embedding"))
 
   /** `events` as (event_id, event_type, value): the quantile rows' feed. */
   private def eventValues(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
+    Tables.raw(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
 
   /** DuckDB: shingle sets (3-token, whole-text fallback for short docs)
@@ -496,7 +496,7 @@ object StreamingQueries {
           .groupBy(col("win"), col("reg")).agg(max(col("rho")).as("rho")))
         .select(col("win.start").as("window_start"), col("reg"), col("rho"))
       HyperLogLog.estimate(regs, Seq("window_start"))
-        .join(graft.core.Tables.events(s, dir)
+        .join(Tables.events(s, dir)
           .groupBy(date_trunc("hour", col("ts")).as("window_start"))
           .agg(countDistinct(col("user_id").cast("string"))
             .as("exact_distinct")),
@@ -552,7 +552,7 @@ object StreamingQueries {
     QueryDef("st_late_data_drop", (s, dir) => withStatePartitions(s, 8) {
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
       drainToMemory(s, "graft_st_late", "append") { st =>
-        st.chunkStream(idChunks(s.read.parquet(s"$dir/events.parquet")
+        st.chunkStream(idChunks(Tables.raw(s, dir, "events")
           .select(col("event_id"), col("user_id")), "event_id", 3)._1)()
           .select(col("event_id"),
             timestamp_seconds(base + (col("event_id") % 12) * 3600
@@ -593,7 +593,7 @@ object StreamingQueries {
     QueryDef("st_late_data_merge", (s, dir) => withStatePartitions(s, 8) {
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
       drainToMemory(s, "graft_st_late_merge", "update") { st =>
-        st.chunkStream(idChunks(s.read.parquet(s"$dir/events.parquet")
+        st.chunkStream(idChunks(Tables.raw(s, dir, "events")
           .select(col("event_id"), col("user_id")), "event_id", 3)._1)()
           .select(col("event_id"),
             timestamp_seconds(base + (col("event_id") % 12) * 3600
@@ -641,7 +641,7 @@ object StreamingQueries {
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
       val q = drain(s) { st =>
         val (chunks, step) = idChunks(
-          s.read.parquet(s"$dir/events.parquet").select(col("event_id")), "event_id", 4)
+          Tables.raw(s, dir, "events").select(col("event_id")), "event_id", 4)
         val chunkC = floor(col("event_id") / lit(step))
         val hr = when(chunkC === 0, pmod(col("event_id"), lit(6)))
           .otherwise(chunkC + lit(5))
@@ -710,7 +710,7 @@ object StreamingQueries {
     QueryDef("st_join_state_eviction", (s, dir) => withStatePartitions(s, 8) {
       val base = lit("2026-01-01 00:00:00").cast("timestamp").cast("long")
       val q = drain(s) { st =>
-        val (chunks, step) = idChunks(s.read.parquet(s"$dir/events.parquet")
+        val (chunks, step) = idChunks(Tables.raw(s, dir, "events")
           .select(col("event_id"), col("user_id")), "event_id", 4)
         val read = st.chunkStream(chunks)
         val chunkC = floor(col("event_id") / lit(step))
@@ -773,7 +773,7 @@ object StreamingQueries {
     // Stream-static join: the unbounded stream enriches against a
     // broadcast dimension (per-micro-batch hash join — the streaming J1).
     QueryDef("st_stream_static_join", (s, dir) => withStatePartitions(s, 8) {
-      val dim = graft.core.Tables.nation(s, dir)
+      val dim = Tables.nation(s, dir)
         .select(col("n_nationkey"), col("n_name"))
       drainToMemory(s, "graft_st_dim_join", "complete")(_ =>
         EventStream.readEvents(s, dir)
@@ -889,12 +889,11 @@ object StreamingQueries {
     QueryDef("st_incremental_upsert", (s, dir) => withStatePartitions(s, 8) {
       val table = "graft_stream_user_stats"
       drain(s, table) { st =>
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val stage = st.dir("graft_st_ups").toString
-        // plain read (no imposed schema): works against either fixture
-        // ts encoding; the staged files inherit it and readEvents' probe
-        // picks the matching conversion
-        s.read.parquet(s"$dir/events.parquet")
+        // the fixture as stored: works against either ts encoding; the
+        // staged files inherit it and readEvents' probe picks the
+        // matching conversion
+        Tables.raw(s, dir, "events")
           .repartition(4).write.mode("overwrite").parquet(stage)
         EventStream.upsertUserStats(EventStream.readEvents(s, stage,
           globFilter = "*.parquet", maxFilesPerTrigger = 1), table)
@@ -1057,7 +1056,7 @@ object StreamingQueries {
       val prefix = "graft_stream_mm"
       drain(s, prefix + "_meta", prefix + "_marks")(st =>
         graft.streaming.MediaIngest.mediaIngest(
-          st.chunkStream(idChunks(s.read.parquet(s"$dir/documents.parquet")
+          st.chunkStream(idChunks(Tables.raw(s, dir, "documents")
             .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
             "doc_id", 4)._1)(),
           "doc_id", "payload",
@@ -1101,7 +1100,7 @@ object StreamingQueries {
     QueryDef("st_drift_monitor", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_drift"
       drain(s, prefix + "_psi") { st =>
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Tables.raw(s, dir, "documents")
           .select(col("doc_id"), col("n_chars"))
         graft.streaming.DriftMonitor.psiIngest(
           st.chunkStream(idChunks(docs, "doc_id", 4)._1)(),
@@ -1157,7 +1156,7 @@ object StreamingQueries {
     QueryDef("st_drift_rebaseline", (s, dir) => withStatePartitions(s, 4) {
       val prefix = "graft_stream_driftrb"
       drain(s, prefix + "_psi", prefix + "_psi_bins") { st =>
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Tables.raw(s, dir, "documents")
           .select(col("doc_id"), col("n_chars"))
         graft.streaming.DriftMonitor.psiRebaselineIngest(
           st.chunkStream(idChunks(docs, "doc_id", 4)._1)(),
@@ -1220,7 +1219,7 @@ object StreamingQueries {
       val prefix = "graft_stream_hll"
       drain(s, prefix + "_hll_regs", prefix + "_hll_est")(st =>
         graft.streaming.SketchIngest.hllIngest(
-          st.chunkStream(idChunks(s.read.parquet(s"$dir/documents.parquet")
+          st.chunkStream(idChunks(Tables.raw(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("source")), "doc_id", 4)._1)()
             .select(col("source"),
               explode(graft.ext.TextOps.stringShingles(col("text"), 3)).as("term")),
@@ -1281,7 +1280,7 @@ object StreamingQueries {
       val prefix = "graft_stream_kmv"
       drain(s, prefix + "_kmv_hashes", prefix + "_kmv_est")(st =>
         graft.streaming.SketchIngest.kmvIngest(
-          st.chunkStream(idChunks(s.read.parquet(s"$dir/documents.parquet")
+          st.chunkStream(idChunks(Tables.raw(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("source")), "doc_id", 4)._1)()
             .select(col("source"),
               explode(graft.ext.TextOps.stringShingles(col("text"), 3)).as("term")),
@@ -1419,7 +1418,7 @@ object StreamingQueries {
       val prefix = "graft_stream_cusum"
       drain(s, prefix + "_cusum_daily", prefix + "_cusum_traj")(st =>
         graft.streaming.SketchIngest.cusumIngest(
-          st.chunkStream(idChunks(graft.core.Tables.events(s, dir)
+          st.chunkStream(idChunks(Tables.events(s, dir)
             .select(col("event_id"), col("event_type"),
               to_date(col("ts")).as("day"), col("value")), "event_id", 4)._1)(),
           "value", "day", "event_type", prefix, slack = 2d, compactEvery = 2))
@@ -1467,7 +1466,7 @@ object StreamingQueries {
       val prefix = "graft_stream_bloom"
       drain(s, prefix + "_bloom_pos", prefix + "_bloom_novel")(st =>
         graft.streaming.SketchIngest.bloomNoveltyIngest(
-          st.chunkStream(idChunks(s.read.parquet(s"$dir/events.parquet")
+          st.chunkStream(idChunks(Tables.raw(s, dir, "events")
             .select(col("event_id"), col("user_id"), col("event_type")),
             "event_id", 4)._1)()
             .select(concat(lit("u"), col("user_id").cast("string"),

@@ -47,7 +47,6 @@ object EventStream {
   def readEvents(spark: SparkSession, dir: String,
                  globFilter: String = "events.parquet",
                  maxFilesPerTrigger: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // An empty landing directory (live-feed start before the first file
     // arrives) has nothing to probe — fall back to the current fixture
     // generation's encoding (rawSchema, NTZ). The probe pins ts's

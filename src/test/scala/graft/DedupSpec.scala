@@ -104,7 +104,7 @@ class DedupSpec extends SparkSpec {
     // build the index from base text staged on disk, materialize it as
     // warehouse tables, then DELETE the staged base — if the indexed run
     // still answers, the base text was never on the query path
-    val baseDir = java.nio.file.Files.createTempDirectory("graft_nd_base")
+    val baseDir = tempDir("graft_nd_base")
     base.write.mode("overwrite").parquet(baseDir.toString)
     val (bandT, shT) = Dedup.nearDupIndex(
       spark.read.parquet(baseDir.toString), "doc_id", "text",

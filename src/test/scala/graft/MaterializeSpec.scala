@@ -268,7 +268,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("compact shrinks a fragmented table without changing its rows") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_spec").toString + "/t"
+    val out = tempDir("graft_compact_spec").toString + "/t"
     val src = graft.core.Tables.lineitem(spark, sfDir)
     src.repartition(24).write.mode("overwrite").parquet(out)
     def parquetFiles = new java.io.File(out).listFiles()
@@ -301,7 +301,7 @@ class MaterializeSpec extends SparkSpec {
     // locality: equal high bits of both dims => same z prefix
     assert(ref(0xF0L, 0xF0L, 8) >> 8 == ref(0xF3L, 0xF1L, 8) >> 8)
     // compact roundtrip keeps rows
-    val out = java.nio.file.Files.createTempDirectory("graft_z_spec").toString + "/t"
+    val out = tempDir("graft_z_spec").toString + "/t"
     val src = graft.core.Tables.supplier(spark, sfDir)
     src.write.mode("overwrite").parquet(out)
     Layout.zorderCompact(spark, out, "s_suppkey", "s_nationkey", bits = 8,

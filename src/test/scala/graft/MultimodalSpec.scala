@@ -322,8 +322,7 @@ class MultimodalSpec extends SparkSpec {
     val n = 20
     val docs = (0 until n).map(i => (700000L + i, s"t$i", "en", "w", 2L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pxdedup").toString
+    val dir = tempDir("graft_pxdedup").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.queries.Registry.queries("ext_mm_pixel_dedup")(
       spark, dir).collect()

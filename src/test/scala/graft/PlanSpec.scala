@@ -98,7 +98,7 @@ class PlanSpec extends SparkSpec {
 
   test("partitioned sink: reads with a partition filter prune at planning") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/t"
+    val out = tempDir("graft_prune").toString + "/t"
     graft.core.Sinks.overwrite(
       graft.queries.Registry.queries("s3_table_source")(spark, sfDir)
         .sparkSession.read.parquet(s"$sfDir/orders.parquet"),

@@ -6,19 +6,17 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all suites (one JVM-wide instance). */
+/** Shared local SparkSession for all suites (one JVM-wide instance),
+  * configured as every graft session is ([[graft.core.GraftSession]]). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.core.GraftSession.configure(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // unique warehouse per test JVM — see GraftSession.local
       .config("spark.sql.warehouse.dir",
-        s"target/graft-wh-test-${java.util.UUID.randomUUID().toString.take(8)}")
-      .getOrCreate()
+        s"target/graft-wh-test-${java.util.UUID.randomUUID().toString.take(8)}"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -28,6 +26,22 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected lazy val spark: SparkSession = SparkSpec.spark
   protected val sfDir: String = SparkSpec.SfDir
+
+  /** Temp dirs of the running test, deleted when it ends, pass or fail. */
+  private val testDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh temp dir that is deleted when the running test ends. */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    testDirs += d
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test) finally {
+      testDirs.foreach(graft.core.Materialize.deleteRecursively)
+      testDirs.clear()
+    }
 
   /** The state `Materialize.replaceTable(table, df)` leaves when the
     * process dies mid-swap: `df` written in full to a fresh version

@@ -10,6 +10,22 @@ import graft.streaming.EventStream
  */
 class StreamingSpec extends SparkSpec {
 
+  private def graftTmpEntries(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).list()
+      .filter(_.startsWith("graft_")).toSet
+  private var tmpBefore = Set.empty[String]
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    tmpBefore = graftTmpEntries()
+  }
+
+  override def afterAll(): Unit =
+    try {
+      val left = graftTmpEntries() -- tmpBefore
+      assert(left.isEmpty, s"the suite left temp dirs behind: ${left.toSeq.sorted}")
+    } finally super.afterAll()
+
   test("windowed stats stream converges to the batch aggregate") {
     val stream = EventStream.windowedStats(
       EventStream.readEvents(spark, sfDir), "1 hour", "2 hours")
@@ -59,7 +75,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming session_window converges to the batch sessions once flushed") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_sess").toString
+    val dir = tempDir("graft_st_sess").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       java.nio.file.Paths.get(s"$dir/a_events.parquet"))
@@ -77,7 +93,7 @@ class StreamingSpec extends SparkSpec {
       val sentinelTs = java.time.LocalDateTime.ofEpochSecond(
         maxSec + 86400L, 0, java.time.ZoneOffset.UTC)
       import spark.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft_sentinel").toString
+      val stage = tempDir("graft_sentinel").toString
       Seq((-1L, sentinelTs, -1L, "click", 0.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(stage)
@@ -124,8 +140,8 @@ class StreamingSpec extends SparkSpec {
   test("checkpointed upsert resumes across a restart without loss or double-count") {
     val table = "graft_test_resume_upsert"
     graft.core.Materialize.dropWithLocation(spark, table)
-    val stage = java.nio.file.Files.createTempDirectory("graft_resume_stage").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_resume_ckpt").toString
+    val stage = tempDir("graft_resume_stage").toString
+    val ckpt = tempDir("graft_resume_ckpt").toString
     val src = spark.read.parquet(s"$sfDir/events.parquet")
     // first half of the feed arrives, is drained, and the query STOPS
     src.filter(col("event_id") % 2 === 0)
@@ -155,7 +171,7 @@ class StreamingSpec extends SparkSpec {
   test("upsert folds NULL user_ids into one row across triggers, as the batch GROUP BY does") {
     val table = "graft_test_upsert_nulls"
     graft.core.Materialize.dropWithLocation(spark, table)
-    val stage = java.nio.file.Files.createTempDirectory("graft_upsert_nulls").toString
+    val stage = tempDir("graft_upsert_nulls").toString
     def withNulls(df: org.apache.spark.sql.DataFrame) = df.withColumn("user_id",
       when(col("event_id") % 5 === 0, lit(null).cast("long")).otherwise(col("user_id")))
     val src = withNulls(spark.read.parquet(s"$sfDir/events.parquet"))
@@ -185,8 +201,8 @@ class StreamingSpec extends SparkSpec {
   test("upsert replay at the commit boundary is skipped by the re-seeded watermark") {
     val table = "graft_test_upsert_replay"
     graft.core.Materialize.dropWithLocation(spark, table)
-    val stage = java.nio.file.Files.createTempDirectory("graft_replay_stage").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay_ckpt").toString
+    val stage = tempDir("graft_replay_stage").toString
+    val ckpt = tempDir("graft_replay_ckpt").toString
     val src = spark.read.parquet(s"$sfDir/events.parquet")
     for (part <- 0 to 2)
       src.filter(col("event_id") % 3 === part).coalesce(1)
@@ -305,11 +321,11 @@ class StreamingSpec extends SparkSpec {
           try q.processAllAvailable() finally q.stop()
           q
         }
-        val twinStage = java.nio.file.Files.createTempDirectory("graft_rs_twin").toString
+        val twinStage = tempDir("graft_rs_twin").toString
         w.chunks.zipWithIndex.foreach { case (c, i) => stageChunk(twinStage, c, i) }
         drain(twinStage, twn, None)
-        val stage = java.nio.file.Files.createTempDirectory("graft_rs_stage").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_rs_ckpt").toString
+        val stage = tempDir("graft_rs_stage").toString
+        val ckpt = tempDir("graft_rs_ckpt").toString
         stageChunk(stage, w.chunks(0), 0)
         stageChunk(stage, w.chunks(1), 1)
         drain(stage, cra, Some(ckpt))
@@ -397,9 +413,8 @@ class StreamingSpec extends SparkSpec {
     val schema = chunks.head.schema
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false") // as the registry drains run
-    val dirs = Seq("graft_tg_twin", "graft_tg_stage", "graft_tg_ckpt")
-      .map(java.nio.file.Files.createTempDirectory(_))
-    val Seq(twinStage, stage, ckpt) = dirs.map(_.toString)
+    val Seq(twinStage, stage, ckpt) = Seq("graft_tg_twin", "graft_tg_stage",
+      "graft_tg_ckpt").map(tempDir(_).toString)
     chunks.zipWithIndex.foreach { case (c, i) => stageChunk(twinStage, c, i) }
     (0 until 3).foreach(i => stageChunk(stage, chunks(i), i))
     try for (m <- monitors) {
@@ -455,10 +470,7 @@ class StreamingSpec extends SparkSpec {
         graft.core.CacheRegistry.releaseAll()
         new java.io.File(stage, "chunk_3.parquet").delete()
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      dirs.foreach(graft.core.Materialize.deleteRecursively)
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("registry drains leave no staging dir behind") {
@@ -538,8 +550,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val table = "graft_test_resume_ingest"
     graft.core.Materialize.dropWithLocation(spark, table)
-    val stage = java.nio.file.Files.createTempDirectory("graft_ingres_stage").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ingres_ckpt").toString
+    val stage = tempDir("graft_ingres_stage").toString
+    val ckpt = tempDir("graft_ingres_ckpt").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -658,8 +670,8 @@ class StreamingSpec extends SparkSpec {
     def dropAll(): Unit = for (t <- Seq("_ids", "_vecs"))
       graft.core.Materialize.dropWithLocation(spark, prefix + t)
     dropAll()
-    val stage = java.nio.file.Files.createTempDirectory("graft_embres_stage").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_embres_ckpt").toString
+    val stage = tempDir("graft_embres_stage").toString
+    val ckpt = tempDir("graft_embres_ckpt").toString
     val ones = Seq.fill(64)(1.0)
     val first = Seq((10L, ones), (11L, Seq.fill(32)(1.0) ++ Seq.fill(32)(0.0)))
       .toDF("vec_id", "embedding")
@@ -1001,30 +1013,21 @@ class StreamingSpec extends SparkSpec {
     // join against it. Before the encoding probe in Staging.withSentinel,
     // the staged dir mixed an INT64 fixture with an NTZ sentinel and the
     // pinned-schema stream read failed or corrupted ts.
-    val nanosDir = java.nio.file.Files.createTempDirectory("graft_nanos_fix")
-    try {
-      graft.core.Tables.events(spark, sfDir)
-        .withColumn("ts", unix_micros(col("ts")) * 1000L)
-        .coalesce(1).write.mode("overwrite").parquet(s"$nanosDir/stage")
-      val part = new java.io.File(s"$nanosDir/stage").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$nanosDir/events.parquet"))
-      val run = graft.queries.Registry.queries("st_stream_outer_join")
-      val fromNanos = run(spark, nanosDir.toString)
-      val fromNtz = run(spark, sfDir)
-      assert(fromNanos.count() == fromNtz.count() && fromNanos.count() > 0,
-        "nanos-encoded fixture must drain to the same result as the NTZ fixture")
-      assert(fromNanos.exceptAll(fromNtz).isEmpty &&
-        fromNtz.exceptAll(fromNanos).isEmpty)
-    } finally {
-      import scala.util.Try
-      Try {
-        java.nio.file.Files.walk(nanosDir)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      }
-    }
+    val nanosDir = tempDir("graft_nanos_fix")
+    graft.core.Tables.events(spark, sfDir)
+      .withColumn("ts", unix_micros(col("ts")) * 1000L)
+      .coalesce(1).write.mode("overwrite").parquet(s"$nanosDir/stage")
+    val part = new java.io.File(s"$nanosDir/stage").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$nanosDir/events.parquet"))
+    val run = graft.queries.Registry.queries("st_stream_outer_join")
+    val fromNanos = run(spark, nanosDir.toString)
+    val fromNtz = run(spark, sfDir)
+    assert(fromNanos.count() == fromNtz.count() && fromNanos.count() > 0,
+      "nanos-encoded fixture must drain to the same result as the NTZ fixture")
+    assert(fromNanos.exceptAll(fromNtz).isEmpty &&
+      fromNtz.exceptAll(fromNanos).isEmpty)
   }
 
   test("concurrent scopes on two threads release only their own registrations") {
@@ -1450,7 +1453,7 @@ class StreamingSpec extends SparkSpec {
     val prefix = "graft_test_drift"
     graft.core.Materialize.dropWithLocation(spark, prefix + "_psi")
     val ref = (1L to 100L).map(i => (i, i * 10)).toDF("doc_id", "n_chars")
-    val stage = java.nio.file.Files.createTempDirectory("graft_drift_spec")
+    val stage = tempDir("graft_drift_spec")
     ref.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
