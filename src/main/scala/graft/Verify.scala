@@ -35,7 +35,7 @@ object Verify {
           false
         }
       }
-      // release per-query persist() barriers (dedup shingle/signature
+      // release per-query persist() barriers (dedup MinHash
       // frames etc.) so caches don't accumulate across the whole suite
       spark.catalog.clearCache()
     }

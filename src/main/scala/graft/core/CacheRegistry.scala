@@ -4,7 +4,7 @@ import org.apache.spark.sql.Dataset
 
 /**
  * Tracked persist() for library operators that need a cost barrier
- * (e.g. [[graft.ext.Dedup]] shingle/signature/simhash frames feed several
+ * (e.g. [[graft.ext.Dedup]] MinHash and simhash frames feed several
  * downstream joins — without a barrier the expensive scan recomputes per
  * consumer).
  *

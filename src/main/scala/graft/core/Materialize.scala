@@ -192,6 +192,21 @@ object Materialize {
   private def filesFor(bytes: Long, targetFileMB: Int): Int =
     math.min(Int.MaxValue, math.max(1L, bytes / (targetFileMB.toLong << 20))).toInt
 
+  /** Local scratch directories that outlive the call that made them
+    * (a lazy frame still reads them), deleted by one shutdown hook. */
+  private val deletedOnExit =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => deletedOnExit.forEach(d => deleteRecursively(d))))
+
+  /** A fresh `java.io.tmpdir` directory, deleted when the JVM exits. */
+  private[graft] def tempDirDeletedOnExit(prefix: String): java.nio.file.Path = {
+    exitHook
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    deletedOnExit.add(d)
+    d
+  }
+
   /** Best-effort recursive delete of a local scratch directory. */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files

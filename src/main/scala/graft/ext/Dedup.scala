@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
  *  - Run [[exact]] BEFORE near-dup in production: thousands of byte-equal
  *    copies of one document would otherwise all land in the same LSH
  *    bucket and re-create the quadratic blowup.
- *  - Everything is built from codegen'd higher-order array functions —
- *    no UDFs, no driver-side collection.
+ *  - Per-document MinHash work is ONE typed pass ([[shingleFrame]]):
+ *    tokens, shingle hashes, signature and band keys in a single
+ *    `mapPartitions` loop, persisted once; candidate pairs are verified
+ *    by the codegen'd sorted-merge `graft_sorted_jaccard` ([[jaccard]]).
+ *    No UDFs, no driver-side collection.
  */
 object Dedup {
 
@@ -173,13 +176,9 @@ object Dedup {
   def nearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                    shingleK: Int = 3, numHashes: Int = 64,
                    bands: Int = 32): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val sh = shingleFrame(corpus, idCol, textCol, shingleK)
-    val bandT = signatureFrame(sh, idCol, numHashes).select(col(idCol),
-        explode(bandHashes(col("__sig"), bands, r)).as("__b"))
-      .select(col(idCol), col("__b.band").as("band"), col("__b.bh").as("band_hash"))
-    (bandT, sh.select(col(idCol), col("__sh").as("shingles")))
+    val sh = shingleFrame(corpus, idCol, textCol, shingleK, numHashes, bands)
+    (bandRows(sh, idCol, "band", "band_hash"),
+      sh.select(col(idCol), col("__sh").as("shingles")))
   }
 
   /**
@@ -216,19 +215,14 @@ object Dedup {
                                 threshold: Double, shingleK: Int = 3,
                                 numHashes: Int = 64,
                                 bands: Int = 32): (DataFrame, DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    // every batch-side shingle/signature/band table is computed ONCE
-    // (persist barriers inside the frame builders) and reused across the
-    // base join, the self-pairing, and the verifications — re-deriving
-    // them per step multiplied the whole chain's cost in the first cut
-    val shB = shingleFrame(batch, idCol, textCol, shingleK)
-    val bandB = signatureFrame(shB, idCol, numHashes)
-      .select(col(idCol).as("__batch_id"),
-        explode(bandHashes(col("__sig"), bands, r)).as("__b"))
-      .select(col("__batch_id"), col("__b.band").as("__band"),
-        col("__b.bh").as("__bh"))
-      .transform(graft.core.CacheRegistry.persistTracked)
+    graft.functions.GraftFunctions.register(batch.sparkSession)
+    // the batch's shingles and band keys are computed ONCE (the persisted
+    // frame) and reused across the base join, the self-pairing, and the
+    // verifications — re-deriving them per step multiplied the whole
+    // chain's cost in the first cut
+    val shB = shingleFrame(batch, idCol, textCol, shingleK, numHashes, bands)
+    val bandB = bandRows(shB, idCol, "__band", "__bh")
+      .withColumnRenamed(idCol, "__batch_id")
     val baseB = baseBands.select(col(idCol).as("__base_id"),
       col("band").as("__band"), col("band_hash").as("__bh"))
     // a document is never its own near-dup: a batch id colliding with a
@@ -460,14 +454,17 @@ object Dedup {
       b => struct(b.as("band"),
         xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))).as("bh")))
 
-  /** splitmix64-based string hash for the typed hot path (internal —
-    * shingle hash identity only has to be consistent within one run). */
+  /** splitmix64-based string hash: the typed SimHash frame's default
+    * token hash, and the shingle hash [[MinHashKernel]] computes from
+    * token offsets (internal — hash identity only has to be consistent
+    * within one run). */
   private def hash64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
+    var h = FnvBasis
     var i = 0
     while (i < s.length) { h = mix64(h ^ s.charAt(i).toLong); i += 1 }
     h
   }
+  private val FnvBasis = 0xcbf29ce484222325L
 
   private def xorshiftLong(x0: Long): Long = {
     var x = x0
@@ -475,65 +472,131 @@ object Dedup {
     x
   }
 
+  /** Java's `\s` (no UNICODE_CHARACTER_CLASS): `[ \t\n\x0B\f\r]`. */
+  @inline private def isWs(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
   /**
-   * Materialized (id, shingles) frame, persisted.
+   * One document's MinHash work, with buffers reused across the rows of a
+   * task. The shingles are `hash64` over the space-joined lowercase
+   * tokens of `text.toLowerCase.trim.split("\\s+")`, hashed from token
+   * offsets (no token or shingle strings); a doc with fewer than `k`
+   * tokens is one shingle over all of them. The signature is
+   * [[minhashSignature]]'s and band b's key is
+   * `xxhash64(slice(sig, b*r+1, r), 42)` ([[bandHashes]]), i.e. a fold of
+   * `XXH64.hashLong` from seed 42 — bit-identical to the Column forms.
+   */
+  private final class MinHashKernel(k: Int, numHashes: Int, bands: Int) {
+    private val seeds = HashSeeds
+    private var starts = new Array[Int](64)
+    private var ends = new Array[Int](64)
+    private var hs = new Array[Long](64)
+    private val sig = new Array[Long](numHashes)
+
+    /** Sorted distinct shingle hashes. */
+    def shingles(text: String): Array[Long] = {
+      val s = text.toLowerCase
+      var lo = 0; var hi = s.length
+      while (lo < hi && s.charAt(lo) <= ' ') lo += 1 // String.trim's bounds
+      while (hi > lo && s.charAt(hi - 1) <= ' ') hi -= 1
+      var n = 0; var i = lo
+      while (i < hi) {
+        while (i < hi && isWs(s.charAt(i))) i += 1
+        if (i < hi) {
+          val st = i
+          while (i < hi && !isWs(s.charAt(i))) i += 1
+          if (n == starts.length) {
+            starts = java.util.Arrays.copyOf(starts, 2 * n)
+            ends = java.util.Arrays.copyOf(ends, 2 * n)
+          }
+          starts(n) = st; ends(n) = i; n += 1
+        }
+      }
+      val m = if (n < k) 1 else n - k + 1
+      if (hs.length < m) hs = new Array[Long](math.max(m, 2 * hs.length))
+      var g = 0
+      while (g < m) {
+        val last = if (n < k) n - 1 else g + k - 1
+        var h = FnvBasis; var t = g
+        while (t <= last) {
+          if (t > g) h = mix64(h ^ ' '.toLong)
+          var c = starts(t)
+          while (c < ends(t)) { h = mix64(h ^ s.charAt(c).toLong); c += 1 }
+          t += 1
+        }
+        hs(g) = h; g += 1
+      }
+      java.util.Arrays.sort(hs, 0, m)
+      var d = 0; g = 0
+      while (g < m) {
+        if (d == 0 || hs(g) != hs(d - 1)) { hs(d) = hs(g); d += 1 }
+        g += 1
+      }
+      java.util.Arrays.copyOf(hs, d)
+    }
+
+    /** LSH band keys of the shingle set's signature, one per band. */
+    def bandKeys(sh: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < numHashes) {
+        val seed = seeds(i)
+        var m = Long.MaxValue; var j = 0
+        while (j < sh.length) {
+          val v = xorshiftLong(sh(j) ^ seed)
+          if (v < m) m = v
+          j += 1
+        }
+        sig(i) = m; i += 1
+      }
+      val r = if (bands == 0) 0 else numHashes / bands
+      Array.tabulate(bands) { b =>
+        var h = 42L; var j = 0
+        while (j < r) {
+          h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(sig(b * r + j), h)
+          j += 1
+        }
+        h
+      }
+    }
+  }
+
+  /**
+   * The persisted per-document MinHash frame `(id, __sh, __bk)`: `__sh`
+   * the sorted distinct shingle hashes, `__bk` the LSH band keys of
+   * `bands` bands over a `numHashes` signature (empty when `bands` is 0,
+   * for callers that only need the shingles). One typed `mapPartitions`
+   * pass computes both ([[MinHashKernel]]), with values bit-identical to
+   * [[shingleHashes]] → [[minhashSignature]] → [[bandHashes]] (those
+   * Column forms are interpreted higher-order functions, ~100× slower
+   * per doc; SURVEY §2.10: mapPartitions as last resort, justified by
+   * measurement).
    *
-   * Implementation is a typed mapPartitions tight loop, NOT the Column
-   * expression form: higher-order array expressions are interpreted (no
-   * codegen), and measured cost was ~10 ms/doc — two orders over this
-   * loop. The Column form ([[shingleHashes]]) stays as the portable
-   * expression API; this is the scale path (SURVEY §2.10: mapPartitions
-   * as last resort, justified by measurement).
-   *
-   * The persist() is a cost barrier, not a cache nicety: downstream the
-   * frame feeds the signature step AND both sides of the verification
-   * join; without it the whole tokenization re-runs per consumer. At
-   * 100 TB the same barrier is a checkpoint to storage instead.
+   * The persist() is a cost barrier, not a cache nicety: the frame feeds
+   * the band explode AND both sides of the verification join; without it
+   * the whole tokenization re-runs per consumer. At 100 TB the same
+   * barrier is a checkpoint to storage instead.
    */
   private def shingleFrame(df: DataFrame, idCol: String, textCol: String,
-                           shingleK: Int): DataFrame = {
+                           shingleK: Int, numHashes: Int = 0,
+                           bands: Int = 0): DataFrame = {
+    require(numHashes <= MaxHashes, s"numHashes must be <= $MaxHashes")
+    require(bands == 0 || numHashes % bands == 0, "numHashes must divide into bands")
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .mapPartitions { iter =>
+        val kernel = new MinHashKernel(shingleK, numHashes, bands)
         iter.map { case (id, text) =>
-          val toks = text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
-          val sh: Array[Long] =
-            if (toks.length < shingleK) Array(hash64(toks.mkString(" ")))
-            else Array.tabulate(toks.length - shingleK + 1) { i =>
-              hash64(toks.slice(i, i + shingleK).mkString(" "))
-            }.distinct
-          (id, sh)
+          val sh = kernel.shingles(text)
+          (id, sh, kernel.bandKeys(sh))
         }
-      }.toDF(idCol, "__sh").transform(graft.core.CacheRegistry.persistTracked)
+      }.toDF(idCol, "__sh", "__bk").transform(graft.core.CacheRegistry.persistTracked)
   }
 
-  /** Typed minhash signatures over a shingle frame (hot path twin of
-    * [[minhashSignature]]). */
-  private def signatureFrame(sh: DataFrame, idCol: String,
-                             numHashes: Int): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val seeds = HashSeeds
-    sh.select(col(idCol), col("__sh")).as[(Long, Array[Long])]
-      .mapPartitions { iter =>
-        iter.map { case (id, shingles) =>
-          val sig = Array.tabulate(numHashes) { i =>
-            val seed = seeds(i)
-            var m = Long.MaxValue
-            var j = 0
-            while (j < shingles.length) {
-              val v = xorshiftLong(shingles(j) ^ seed)
-              if (v < m) m = v
-              j += 1
-            }
-            m
-          }
-          (id, sig)
-        }
-      }.toDF(idCol, "__sig").transform(graft.core.CacheRegistry.persistTracked)
-  }
+  /** One `(id, band, band_hash)` row per band key of a [[shingleFrame]]. */
+  private def bandRows(sh: DataFrame, idCol: String,
+                       bandCol: String, hashCol: String): DataFrame =
+    sh.select(col(idCol), posexplode(col("__bk")).as(Seq(bandCol, hashCol)))
 
   /**
    * Candidate pairs via the LSH bucket join: explode bands, shuffle by
@@ -543,18 +606,12 @@ object Dedup {
   def candidatePairs(df: DataFrame, idCol: String, textCol: String,
                      shingleK: Int = 3, numHashes: Int = 64,
                      bands: Int = 16, maxBucketSize: Int = 0): DataFrame =
-    candidatesFromShingles(shingleFrame(df, idCol, textCol, shingleK),
-      idCol, numHashes, bands, maxBucketSize)
+    candidatesFromFrame(shingleFrame(df, idCol, textCol, shingleK, numHashes, bands),
+      idCol, maxBucketSize)
 
-  private def candidatesFromShingles(sh: DataFrame, idCol: String,
-                                     numHashes: Int, bands: Int,
-                                     maxBucketSize: Int = 0): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val sig = signatureFrame(sh, idCol, numHashes)
-    val banded0 = sig.select(col(idCol),
-        explode(bandHashes(col("__sig"), bands, r)).as("__b"))
-      .select(col(idCol), col("__b.band").as("__band"), col("__b.bh").as("__bh"))
+  private def candidatesFromFrame(sh: DataFrame, idCol: String,
+                                  maxBucketSize: Int): DataFrame = {
+    val banded0 = bandRows(sh, idCol, "__band", "__bh")
     // optional degenerate-bucket guard (RefinedWeb-style): a bucket of
     // m members contributes m² candidate pairs, so one mega-bucket —
     // boilerplate that survived upstream gates, exact copies not
@@ -601,10 +658,14 @@ object Dedup {
         countDistinct(col("__bid")).as("n_bench_docs"))
   }
 
-  /** Exact Jaccard over two (distinct-element) arrays. */
+  /** Exact set Jaccard of two `array<bigint>` columns: the codegen'd
+    * sorted merge `graft_sorted_jaccard`, equal to
+    * `size(array_intersect(a, b)) / size(array_union(a, b))` for any
+    * input (see [[graft.functions.SortedJaccard]]). Needs the graft
+    * functions in the session (`GraftSession`, or
+    * `GraftFunctions.register`). */
   def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
+    call_function(graft.functions.GraftFunctions.SortedJaccardName, a, b)
 
   /**
    * Near-duplicate pairs: LSH candidates verified by exact shingle
@@ -614,13 +675,14 @@ object Dedup {
                    threshold: Double, shingleK: Int = 3,
                    numHashes: Int = 64, bands: Int = 16,
                    maxBucketSize: Int = 0): DataFrame = {
-    val sh = shingleFrame(df, idCol, textCol, shingleK)
-    candidatesFromShingles(sh, idCol, numHashes, bands, maxBucketSize)
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val sh = shingleFrame(df, idCol, textCol, shingleK, numHashes, bands)
+    candidatesFromFrame(sh, idCol, maxBucketSize)
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
       .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("__sh_a"), col("__sh_b")))
+      .select(col("id_a"), col("id_b"),
+        TextOps.evalOnce(jaccard(col("__sh_a"), col("__sh_b"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /**

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
  * language ID, document fingerprinting.
  *
  * Everything is a pure Column expression over built-in (codegen'd) string
- * and higher-order array functions — no UDFs, so these run inside
- * whole-stage codegen and scale linearly with input splits: per-document
- * work with no shuffle at all until an aggregation asks for one.
+ * and higher-order array functions, or graft's own codegen'd expressions
+ * ([[wordStats]]) — no UDFs, so these run inside whole-stage codegen and
+ * scale linearly with input splits: per-document work with no shuffle at
+ * all until an aggregation asks for one.
  */
 object TextOps {
 
@@ -26,6 +27,17 @@ object TextOps {
   def letCol(bound: Column)(body: Column => Column): Column =
     element_at(transform(array(struct(bound.as("v"))),
       s => body(s.getField("v"))), 1)
+
+  /**
+   * `c` as the output of a one-row generator (`explode(array(c))`), for a
+   * value that a later filter reads: Catalyst pushes a filter through a
+   * Project by inlining the aliased expression, and a filter has no
+   * common-subexpression elimination, so a Project-then-Filter evaluates
+   * `c` in the filter AND in the Project (once per reference). A filter
+   * on a generator output stays above the generator, so `c` runs once
+   * per row and the filter reads the column. One generator per select.
+   */
+  def evalOnce(c: Column): Column = explode(array(c))
 
   /** Whitespace tokenizer (split on runs of whitespace, drop empties). */
   def tokens(text: Column): Column =
@@ -602,46 +614,51 @@ object TextOps {
   }
 
   /**
-   * Gopher-style quality gate as a reusable frame transform (the same
-   * bounds the curation chain applies inline; Rae et al. 2021 rule
-   * family): keep docs whose word count, mean word length, and
-   * top-token dominance sit in the published ranges.
-   *
-   * Implementation (r14 optimization): the stats are PER-DOCUMENT, so
-   * the former explode → two hash aggregations → semi-join shape paid
-   * three shuffles for state a single row already holds. Now a pure
-   * per-row filter expression — token count from the array size, char
-   * sum and top-token multiplicity from `aggregate` over the SORTED
-   * token array (max run length of equal neighbors = max multiplicity)
-   * — ZERO exchanges at any scale; the arithmetic (integer sums,
-   * double division, `round(x + 1e-9, 4)`) is the exact expression the
-   * aggregate form evaluated, so the keep-set is bit-identical
-   * (PropertySpec pins gate ≡ ext_gopher_rules' passing set). Rows are
-   * gated independently — ids are one-doc-per-row, as every caller
-   * (batch curation, streaming triggers) already supplies.
+   * Per-document word statistics in one codegen'd pass
+   * (`graft_word_stats`, [[graft.functions.WordStats]]):
+   * `struct(n_words, sum_len, max_mult)` over [[tokens]] — token count,
+   * summed token length in code points, and the count of the most
+   * frequent (case-sensitive) token. NULL for NULL text or text without a
+   * token. Needs the graft functions in the session (`GraftSession`, or
+   * `GraftFunctions.register`).
+   */
+  def wordStats(text: Column): Column =
+    call_function(graft.functions.GraftFunctions.WordStatsName, text)
+
+  /**
+   * The Gopher word-stat rules (Rae et al. 2021 rule family) over a
+   * [[wordStats]] struct: `n_words`, `mean_word_len` and `top_tok_frac`
+   * (each ratio `round(x + 1e-9, 4)`), and `passes` — word count, mean
+   * word length and top-token dominance inside the published ranges.
+   * The one source of `ext_gopher_rules` and [[gopherGate]].
+   */
+  def gopherRules(ws: Column, minWords: Long = 20, maxWords: Long = 1000,
+                  minMwl: Double = 3.0, maxMwl: Double = 10.0,
+                  maxTtf: Double = 0.2): Seq[Column] = {
+    val n = ws.getField("n_words")
+    val mwl = round(ws.getField("sum_len").cast("double") / n + lit(1e-9), 4)
+    val ttf = round(ws.getField("max_mult").cast("double") / n + lit(1e-9), 4)
+    Seq(n.as("n_words"), mwl.as("mean_word_len"), ttf.as("top_tok_frac"),
+      (n.between(minWords, maxWords) && mwl.between(minMwl, maxMwl) &&
+        ttf <= maxTtf).as("passes"))
+  }
+
+  /**
+   * Gopher-style quality gate as a reusable frame transform: keep the
+   * rows whose [[gopherRules]] pass — exactly the docs `ext_gopher_rules`
+   * marks passing (PropertySpec pins it). One [[wordStats]] call per row
+   * ([[evalOnce]]) and a filter over its struct: zero exchanges at any
+   * scale. Rows are gated independently — ids are one-doc-per-row, as
+   * every caller (batch curation, streaming triggers) already supplies.
    */
   def gopherGate(df: DataFrame, idCol: String, textCol: String,
                  minWords: Long = 20, maxWords: Long = 1000,
                  minMwl: Double = 3.0, maxMwl: Double = 10.0,
                  maxTtf: Double = 0.2): DataFrame = {
-    val keep = letCol(array_sort(tokens(col(textCol)))) { ts =>
-      val n = size(ts).cast("long")
-      val sumLen = aggregate(ts, lit(0L), (a, t) => a + length(t))
-      val maxMult = aggregate(ts,
-        struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-        (st, t) => {
-          val run = when(t === st.getField("prev"),
-            st.getField("run") + lit(1L)).otherwise(lit(1L))
-          struct(t.as("prev"), run.as("run"),
-            greatest(st.getField("best"), run).as("best"))
-        },
-        st => st.getField("best"))
-      val mwl = round(sumLen.cast("double") / n + lit(1e-9), 4)
-      val ttf = round(maxMult.cast("double") / n + lit(1e-9), 4)
-      n.between(minWords, maxWords) &&
-        mwl.between(minMwl, maxMwl) && ttf <= maxTtf
-    }
-    df.filter(keep)
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.withColumn("__ws", evalOnce(wordStats(col(textCol))))
+      .filter(gopherRules(col("__ws"), minWords, maxWords, minMwl, maxMwl, maxTtf).last)
+      .drop("__ws")
   }
 
   /**

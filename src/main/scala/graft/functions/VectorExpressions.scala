@@ -99,33 +99,39 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 /** Function registration — both the programmatic route and the
-  * `spark.sql.extensions` route land on the same builder. */
+  * `spark.sql.extensions` route land on the same builders. */
 object GraftFunctions {
   val CosineName = "graft_cosine"
+  val SortedJaccardName = "graft_sorted_jaccard"
+  val WordStatsName = "graft_word_stats"
 
-  private val cosineInfo = new ExpressionInfo(
-    classOf[CosineSimilarity].getName, CosineName)
+  /** (name, info, builder) of every graft function. */
+  private[functions] val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      (CosineName, classOf[CosineSimilarity], e => CosineSimilarity(e.head, e(1))),
+      (SortedJaccardName, classOf[SortedJaccard], e => SortedJaccard(e.head, e(1))),
+      (WordStatsName, classOf[WordStats], e => WordStats(e.head))
+    ).map { case (name, cls, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
 
   /** Idempotently register graft functions in an existing session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(CosineName), cosineInfo,
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1)))
+    all.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injects the
   * full graft Catalyst set at session build time (SURVEY §2.10 path c):
-  * the codegen'd function, the fused top-k planner strategy, AND the
+  * the codegen'd functions, the fused top-k planner strategy, AND the
   * [[graft.plans.FuseCosineTopK]] optimizer rule that rewrites the
   * declarative rank-filtered cosine pattern into the fused operator —
   * the config-only superset of `GraftFunctions.register` +
   * `GraftStrategy.install`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.CosineName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, GraftFunctions.CosineName),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))))
+    GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
     ext.injectOptimizerRule(_ => graft.plans.FuseCosineTopK)
   }

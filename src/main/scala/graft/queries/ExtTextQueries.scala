@@ -310,25 +310,14 @@ object ExtTextQueries {
 
     // Gopher-style per-document quality gates (word count, mean word
     // length, max-token dominance) — the published rule-based filter
-    // family, computed with one explode + hash agg (no per-doc UDF
-    // state; at corpus scale this is a map-side explode and ONE shuffle
-    // on doc_id).
+    // family. The stats are per document, so one codegen'd word-stats
+    // pass per row (TextOps.wordStats) computes them: no explode, no
+    // shuffle. Docs without a token have no stats and no row.
     QueryDef("ext_gopher_rules", (s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      val perTok = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      perTok.groupBy("doc_id").agg(
-          sum(col("c")).as("n_words"),
-          round(sum(length(col("tok")) * col("c")).cast("double") /
-            sum(col("c")) + lit(1e-9), 4).as("mean_word_len"),
-          round(max(col("c")).cast("double") /
-            sum(col("c")) + lit(1e-9), 4).as("top_tok_frac"))
-        .withColumn("passes",
-          col("n_words").between(20, 1000) &&
-          col("mean_word_len").between(3.0, 10.0) &&
-          col("top_tok_frac") <= 0.2)
-        .select(col("doc_id"), col("n_words"), col("mean_word_len"),
-          col("top_tok_frac"), col("passes"))
+      Tables.documents(s, dir)
+        .select(col("doc_id"), TextOps.evalOnce(TextOps.wordStats(col("text"))).as("__ws"))
+        .filter(col("__ws").isNotNull)
+        .select(col("doc_id") +: TextOps.gopherRules(col("__ws")): _*)
     }, Some(s"""WITH t AS (SELECT doc_id, unnest($DuckToksRaw) AS tok FROM documents),
       per_tok AS (SELECT doc_id, tok, count(*) AS c FROM t GROUP BY 1, 2),
       m AS (SELECT doc_id,

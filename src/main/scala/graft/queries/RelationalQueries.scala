@@ -16,8 +16,10 @@ import graft.expr.{MetricExpr, QualityExpr, TimeExpr}
  */
 object RelationalQueries {
 
+  /** The row returns a lazy frame over this directory, so it lives
+    * until the JVM exits. */
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.core.Materialize.tempDirDeletedOnExit(prefix).toString
 
   /** Oracle twin of CongestionMarts.stgVolume (same CTE as the pipeline
     * oracles' IntChain — repeated here so the S9 oracles stay standalone). */

@@ -891,12 +891,13 @@ object StreamingQueries {
       drain(s, table) { st =>
         val stage = st.dir("graft_st_ups").toString
         // the fixture as stored: works against either ts encoding; the
-        // staged files inherit it and readEvents' probe picks the
-        // matching conversion
-        Tables.raw(s, dir, "events")
-          .repartition(4).write.mode("overwrite").parquet(stage)
+        // staged files inherit it, so readEvents takes the known ts type
+        // instead of probing the staged footers
+        val events = Tables.raw(s, dir, "events")
+        events.repartition(4).write.mode("overwrite").parquet(stage)
         EventStream.upsertUserStats(EventStream.readEvents(s, stage,
-          globFilter = "*.parquet", maxFilesPerTrigger = 1), table)
+          globFilter = "*.parquet", maxFilesPerTrigger = 1,
+          tsType = Some(events.schema("ts").dataType)), table)
       }
       s.table(table).drop("__last_batch")
     }, Some("""SELECT user_id, count(*) AS n_events, max(ts) AS last_ts

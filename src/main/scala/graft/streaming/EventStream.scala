@@ -41,33 +41,36 @@ object EventStream {
     *
     * A streaming source needs its schema up front, but the fixtures have
     * shipped `ts` as both INT64 nanos and TIMESTAMP(MICROS) across
-    * generations (see [[graft.core.Tables]]); one batch footer probe
-    * resolves the actual physical type, and the stream normalizes to the
-    * same TimestampType contract the batch loader provides. */
+    * generations (see [[graft.core.Tables]]). A caller that wrote the
+    * directory itself passes the `ts` type it wrote as `tsType`; otherwise
+    * one batch footer probe (a Spark job) resolves the actual physical
+    * type. Either way the stream normalizes to the same TimestampType
+    * contract the batch loader provides. */
   def readEvents(spark: SparkSession, dir: String,
                  globFilter: String = "events.parquet",
-                 maxFilesPerTrigger: Int = 0): DataFrame = {
+                 maxFilesPerTrigger: Int = 0,
+                 tsType: Option[DataType] = None): DataFrame = {
     // An empty landing directory (live-feed start before the first file
     // arrives) has nothing to probe — fall back to the current fixture
     // generation's encoding (rawSchema, NTZ). The probe pins ts's
     // physical type from the first listing; a directory must not mix
     // encodings across its lifetime (stage-writers use rawSchema for
     // exactly this reason).
-    val tsType = try {
+    val ts = tsType.getOrElse(try {
       spark.read.option("pathGlobFilter", globFilter)
         .parquet(dir).schema("ts").dataType
     } catch {
       case _: org.apache.spark.sql.AnalysisException =>
         rawSchema("ts").dataType
-    }
+    })
     val schema = StructType(rawSchema.fields.map(f =>
-      if (f.name == "ts") f.copy(dataType = tsType) else f))
+      if (f.name == "ts") f.copy(dataType = ts) else f))
     val r = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", globFilter)
     val r2 = if (maxFilesPerTrigger > 0)
       r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r
-    val tsFixed = tsType match {
+    val tsFixed = ts match {
       case LongType => timestamp_micros(expr("ts div 1000"))
       case _ => col("ts").cast(TimestampType)
     }

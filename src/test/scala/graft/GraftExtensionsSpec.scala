@@ -60,6 +60,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
         "SELECT round(graft_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)), 6) AS c")
         .head().getDouble(0)
       assert(r == 1.0)
+      val t = s.sql("SELECT graft_sorted_jaccard(array(3L, 2L, 1L), array(2L, 3L, 4L)), " +
+        "graft_word_stats('a b\ta')").head()
+      assert(t.getDouble(0) == 0.5)
+      assert(t.getStruct(1) == org.apache.spark.sql.Row(3L, 3L, 2L))
     }
   }
 

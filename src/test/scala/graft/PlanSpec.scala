@@ -309,11 +309,31 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
 
-  test("gopher gates: explode + hash aggs, no window, no join") {
+  test("gopher gates: one per-row word-stats pass, no exchange, no window, no join") {
     val p = plan("ext_gopher_rules")
-    assert(p.contains("Generate explode"))
-    assert(!p.contains("Window") && !p.contains("Join"),
-      "per-doc flags must come from aggregation alone")
+    assert(p.contains("graft_word_stats"))
+    assert(!p.contains("Exchange") && !p.contains("Window") && !p.contains("Join"),
+      s"per-doc flags must come from the per-row kernel alone:\n$p")
+  }
+
+  test("nearDupPairs: one persisted MinHash frame, verified by the sorted-merge kernel") {
+    val docs = graft.core.Tables.documents(spark, sfDir)
+      .select(org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("text"))
+    val qe = graft.ext.Dedup.nearDupPairs(docs, "doc_id", "text",
+      threshold = 0.5, numHashes = 64, bands = 32).queryExecution
+    val caches = qe.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+    }
+    val distinct = caches.foldLeft(List.empty[AnyRef])((acc, b) =>
+      if (acc.exists(_ eq b)) acc else b :: acc)
+    assert(caches.nonEmpty && distinct.size == 1,
+      s"one (id, shingles, band keys) frame feeds banding and verification, got ${distinct.size}")
+    val p = qe.executedPlan.toString
+    assert(p.contains("graft_sorted_jaccard"))
+    assert(!p.contains("array_intersect") && !p.contains("array_union"), p)
+    assert("graft_sorted_jaccard\\(".r.findAllIn(p).size == 1,
+      s"the Jaccard of a pair is evaluated once:\n$p")
   }
 
   test("kmeans assignment is scan-only: no exchange, no window, no join") {

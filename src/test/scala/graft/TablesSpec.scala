@@ -66,6 +66,19 @@ class TablesSpec extends SparkSpec {
     assert(Tables.lineitem(spark, d).count() == Tables.lineitem(spark, sfDir).count())
   }
 
+  test("readEvents with the writer's known ts type submits no footer probe") {
+    val stage = tempDir("graft_tables_events_stage").resolve("s").toString
+    val events = Tables.raw(spark, sfDir, "events")
+    events.repartition(2).write.parquet(stage)
+    val probed = graft.streaming.EventStream.readEvents(spark, stage, "*.parquet")
+    assert(jobsOf(graft.streaming.EventStream.readEvents(spark, stage, "*.parquet")) == 1)
+    val known = Some(events.schema("ts").dataType)
+    assert(jobsOf(graft.streaming.EventStream.readEvents(spark, stage, "*.parquet",
+      tsType = known)) == 0, "a drain that staged the files itself skips the probe")
+    assert(graft.streaming.EventStream.readEvents(spark, stage, "*.parquet",
+      tsType = known).schema == probed.schema)
+  }
+
   test("a fixture path rewritten with another schema reads with the new schema") {
     import spark.implicits._
     val dir = tempDir("graft_tables_rewrite")
