@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  * and any superlinear term shows up here before production.
  *
  * Amplification preserves join/key structure with DERIVED strides (the
- * ScaleProbe rule — a literal stride silently collides once the
+ * SCALE.md r6 rule — a literal stride silently collides once the
  * fixture grows): copy c shifts o_orderkey/l_orderkey by c×(max
  * orderkey + 1) so orders↔lineitem join fanout is exactly preserved;
  * events shift event_id AND user_id (distinct users scale with the
@@ -138,7 +138,7 @@ object AmpBench {
     // the 400 M-pair scan this mode exists to avoid)
     val probeIds = vecs.orderBy(col("vec_id")).limit(50)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    val exact50 = Similarity.bruteForceTopKFused(vecs, "vec_id", "embedding",
+    val exact50 = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
         probeIds, "probe_id", "probe_vec", k = 4)
       .filter(col("vec_id") =!= col("probe_id"))
       .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(
@@ -471,7 +471,7 @@ object AmpBench {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val (truth, truthSec) = timed(topkSet(
-      Similarity.bruteForceTopKFused(vecs, "vec_id", "embedding",
+      Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
         probes, "probe_id", "probe_vec", k), "probe_id", "vec_id"))
     def recallOf(m: Map[Long, Set[Long]]): Double = {
       val hits = truth.map { case (p, t) =>
@@ -488,7 +488,7 @@ object AmpBench {
       "probe_id", "vec_id"))
     // PQ codebooks train on the bounded id-ordered copy-0 sample
     // (standard practice: training cost independent of corpus size) at
-    // the production codebook size k=256 (the ScaleProbe ivfpq256
+    // the production codebook size k=256 (the SCALE.md `ivfpq256`
     // operating point — 8 bits per subspace)
     val trainN = math.max(500L, n / 10)
     val (books, trainSec) = timed(Similarity.pqTrain(

@@ -7,8 +7,11 @@ import org.apache.spark.sql.SparkSession
  * (runtime re-plan, skew-join splitting, partition coalescing), shuffle
  * parallelism sized to the cores actually available (not the 200
  * default), UTC semantics for oracle-stable timestamps, the graft
- * function set registered, and a `file:` filesystem that never runs a
- * shell command ([[LocalFs]]).
+ * function set registered, the graft Catalyst set installed
+ * ([[graft.plans.GraftPlanner]]: the `FuseCosineTopK` optimizer rule,
+ * which plans the declarative cosine top-k and kNN graph as the fused
+ * `CosineTopK` operator, and the `GraftStrategy` that plans that node),
+ * and a `file:` filesystem that never runs a shell command ([[LocalFs]]).
  *
  * Why the filesystem is replaced: without libhadoop, Hadoop's stock
  * local filesystem forks `chmod` for every file and directory it creates
@@ -33,7 +36,7 @@ object GraftSession {
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      // AQE advisory size stays at the 64 MB default: TpchDiag's
+      // AQE advisory size stays at the 64 MB default: an
       // ORDER-ROBUST sweep at the ×10 scale point (interleaved variant
       // minima — a sequential sweep misattributes fresh-JVM warm-up to
       // whichever config runs first) measured advisory 16 MB vs 64 MB
@@ -110,11 +113,9 @@ object GraftSession {
       // window: a failed job can leave SOME of its task files, i.e. part
       // of an append. A replayed batch re-appends its rows and readers
       // absorb those duplicates, but nothing restores MISSING rows, and
-      // a guard table holding part of batch b reads b as applied. So a
-      // guard append must be one file, published by one rename
-      // (SketchIngest.appendByBatch). The CorpusIngest `_docs` and
-      // VectorIngest `_ids` guard appends are still multi-file and open
-      // to this window (ROADMAP item 1).
+      // a guard table holding part of batch b reads b as applied. So
+      // every guard append is one file, published by one rename
+      // (Replay.appendOneFile).
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       // An INT64 TIMESTAMP(NANOS) parquet column reads as its raw
@@ -130,6 +131,7 @@ object GraftSession {
     }.getOrCreate()
     LocalFs.install(spark.sparkContext.hadoopConfiguration)
     graft.functions.GraftFunctions.register(spark)
+    graft.plans.GraftPlanner.install(spark)
     spark
   }
 }

@@ -48,14 +48,7 @@ object Retrieval {
    *         reproducible across engines and summation orders
    */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopKImpl(docs, queries, k, k1, b, windowTail = false)
-
-  /** Probe-visible twin with the ranking tail selectable — the
-    * window-vs-aggregator comparison in ScaleProbe (`bm25tail`) runs
-    * both; the public form pins the measured winner (aggregator). */
-  private[graft] def bm25TopKImpl(docs: DataFrame, queries: DataFrame, k: Int,
-      k1: Double, b: Double, windowTail: Boolean): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // (doc, term, tc, dl): one shuffle on (doc_id, term); dl rides the
     // same exchange as a window over the already-partitioned groups.
     // Persist barrier: feeds the df aggregation, the corpus stats, and
@@ -84,31 +77,7 @@ object Retrieval {
     rankTail(tf.join(qdf, Seq("term"))
       .crossJoin(stats)
       .groupBy("query_id", "doc_id")
-      .agg(round(sum(w) + lit(1e-9), 6).as("score")), k, windowTail)
-  }
-
-  /** The scored (query_id, doc_id, score) frame WITHOUT the top-k tail —
-    * probe-only hook so ScaleProbe can time the two tail forms against a
-    * cached scored input. */
-  private[graft] def bm25ScoredForProbe(docs: DataFrame, queries: DataFrame,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(TextOps.tokens(lower(col("text")))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tc"))
-      .withColumn("dl", sum("tc").over(Window.partitionBy("doc_id")))
-    val qdf = broadcast(queries.join(
-      tf.groupBy("term").agg(count(lit(1)).as("df")), "term"))
-    val stats = broadcast(tf.agg(
-      countDistinct(col("doc_id")).as("n_docs"),
-      sum(col("tc")).as("n_tokens")))
-    val avgdl = col("n_tokens").cast("double") / col("n_docs")
-    val idf = log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val w = idf * (col("tc") * lit(k1 + 1.0)) /
-      (col("tc") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl))
-    tf.join(qdf, Seq("term")).crossJoin(stats)
-      .groupBy("query_id", "doc_id")
-      .agg(round(sum(w) + lit(1e-9), 6).as("score"))
+      .agg(round(sum(w) + lit(1e-9), 6).as("score")), k)
   }
 
   /**
@@ -118,23 +87,15 @@ object Retrieval {
    * and the aggregator's partial pass reduces each partition to ≤ k
    * rows per query BEFORE the query-keyed exchange — so a hot term
    * that scores half the corpus for one query moves k × partitions
-   * rows, not the corpus. The window form shuffles every scored row to
-   * its query's single reducer; kept probe-selectable because at
-   * benign selectivity the two are within noise (measured table in
-   * SCALE.md, `bm25tail`). Ordering in both: (score DESC, doc_id ASC),
-   * score already 6-digit rounded — identical k-sets and ties.
+   * rows, not the corpus. A window form would shuffle every scored row
+   * to its query's single reducer; at benign selectivity the two are
+   * within noise (measured table in SCALE.md, `bm25tail`). Ordering:
+   * (score DESC, doc_id ASC), score already 6-digit rounded.
    */
-  private def rankTail(scored: DataFrame, k: Int,
-                       windowTail: Boolean): DataFrame =
-    if (windowTail)
-      scored.withColumn("__rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("score"), col("doc_id"))))
-        .filter(col("__rn") <= k)
-        .select("query_id", "doc_id", "score")
-    else
-      graft.functions.TopKAggregator.topKPerKey(scored, Seq("query_id"),
-          col("score"), col("doc_id"), k, "score", "doc_id")
-        .select("query_id", "doc_id", "score")
+  private def rankTail(scored: DataFrame, k: Int): DataFrame =
+    graft.functions.TopKAggregator.topKPerKey(scored, Seq("query_id"),
+        col("score"), col("doc_id"), k, "score", "doc_id")
+      .select("query_id", "doc_id", "score")
 
   /**
    * Pseudo-relevance-feedback query expansion (the RM3 posture, Lavrenko
@@ -226,8 +187,7 @@ object Retrieval {
       rankTail(tf.join(qdf, Seq("term"))
         .crossJoin(stats)
         .groupBy("query_id", "doc_id")
-        .agg(round(sum(w) + lit(1e-9), 6).as("score")), topK,
-        windowTail = false)
+        .agg(round(sum(w) + lit(1e-9), 6).as("score")), topK)
     }
     val queries = dfDerivedQueriesFrom(dfreq, n, perQuery)
     val first = pass(queries, feedbackK).select("query_id", "doc_id")
@@ -344,7 +304,7 @@ object Retrieval {
     rankTail(rel.join(qdf, Seq("term"))
       .crossJoin(st)
       .groupBy("query_id", "doc_id")
-      .agg(round(sum(w) + lit(1e-9), 6).as("score")), k, windowTail = false)
+      .agg(round(sum(w) + lit(1e-9), 6).as("score")), k)
   }
 
   /**

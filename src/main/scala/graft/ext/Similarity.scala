@@ -50,7 +50,11 @@ object Similarity {
    * Brute-force exact top-k: broadcast the probes, score every
    * (vector, probe) pair, keep k per probe by (score desc, id) — rank
    * window over scores only. Ties beyond k are cut deterministically by
-   * the id tiebreak.
+   * the id tiebreak. With LONG ids and FLOAT/DOUBLE vectors every graft
+   * session plans this as the fused [[graft.plans.CosineTopK]] operator
+   * ([[graft.plans.FuseCosineTopK]]): one pass over the vectors with a
+   * bounded per-probe buffer per partition, then a kilobyte-sized merge
+   * — no Exchange, no Window, the same rows.
    */
   def bruteForceTopK(vectors: DataFrame, idCol: String, vecCol: String,
                      probes: DataFrame, probeIdCol: String, probeVecCol: String,
@@ -67,41 +71,6 @@ object Similarity {
   }
 
   /**
-   * Fused whole-operator twin of [[bruteForceTopK]]
-   * ([[graft.plans.CosineTopKExec]]): one pass over the vectors with a
-   * bounded per-probe buffer per partition, then a kilobyte-sized merge —
-   * no Exchange, no Window, identical output. The operator the 100 TB ANN
-   * path actually wants: data volume moved is O(partitions × probes × k),
-   * independent of table size.
-   */
-  def bruteForceTopKFused(vectors: DataFrame, idCol: String, vecCol: String,
-                          probes: DataFrame, probeIdCol: String, probeVecCol: String,
-                          k: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.types.{DoubleType, LongType}
-    val spark = vectors.sparkSession
-    graft.plans.GraftStrategy.install(spark)
-    // probes stay a logical sub-plan; the physical operator collects them
-    // at execution exactly like a broadcast build side
-    val probeChild = probes.select(col(probeIdCol).cast("long"),
-      transform(col(probeVecCol), x => x.cast("double")))
-    // widen the scored side: the operator's dot-product pass is
-    // per-partition and its merge is global (pass 2), so split count
-    // changes nothing but parallelism — a single-file embedding scan
-    // otherwise runs the whole O(|vectors|×|probes|) kernel in one task
-    // (guide §2.5; measured r14 on the graph-feeder rows)
-    val child = graft.core.Parallel.widen(
-      vectors.select(col(idCol).cast("long"), col(vecCol)))
-    val out = Seq(
-      AttributeReference("probe_id", LongType, nullable = false)(),
-      AttributeReference("vec_id", LongType, nullable = false)(),
-      AttributeReference("score", DoubleType, nullable = false)())
-    org.apache.spark.sql.graft.GraftPlanBridge.ofRows(spark,
-      graft.plans.CosineTopK(k, out, child.queryExecution.analyzed,
-        probeChild.queryExecution.analyzed))
-  }
-
-  /**
    * Exact k-nearest-neighbor graph: every vector's k closest OTHER
    * vectors by cosine — the building block for embedding-space
    * clustering, semantic dedup sweeps, and diversity sampling. Exact
@@ -114,12 +83,18 @@ object Similarity {
    * ([[annTopKMultiTable]]) or IVF cells ([[ivfAssign]]), then this
    * exact scoring WITHIN each candidate block; the graph loses only
    * cross-bucket edges the bands were sized to make improbable.
+   *
+   * Every graft session plans this as the fused [[graft.plans.CosineTopK]]
+   * operator with self-exclusion ([[graft.plans.FuseCosineTopK]]). The
+   * scanned side is widened first: the operator's scoring pass is
+   * per-partition and its merge global, so a single-file embedding scan
+   * would otherwise run the whole O(n²) kernel in one task.
    */
   def knnGraph(vectors: DataFrame, idCol: String, vecCol: String,
                k: Int, scoreDigits: Int = 6): DataFrame = {
     graft.functions.GraftFunctions.register(vectors.sparkSession)
     val probes = vectors.select(col(idCol).as("src_id"), col(vecCol).as("__pv"))
-    val scored = vectors.crossJoin(broadcast(probes))
+    val scored = graft.core.Parallel.widen(vectors).crossJoin(broadcast(probes))
       .filter(col(idCol) =!= col("src_id"))
       .withColumn("score",
         round(cosineNative(col(vecCol), col("__pv")) + lit(1e-9), scoreDigits))
@@ -128,30 +103,6 @@ object Similarity {
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("src_id")).orderBy(desc("score"), col("dst_id"))))
       .filter(col("__rn") <= k).drop("__rn")
-  }
-
-  /**
-   * Fused-operator kNN graph: same answer as [[knnGraph]], built on the
-   * CosineTopK physical node — one pass with bounded per-probe buffers
-   * instead of a 250k-row nested-loop join + rank window. Self-edges are
-   * handled by asking for k+1, dropping self, and re-ranking the
-   * kilobyte-sized survivor set: whether or not self survives its own
-   * top-(k+1) tiebreaks, the remaining rows contain the true non-self
-   * top-k.
-   */
-  def knnGraphFused(vectors: DataFrame, idCol: String, vecCol: String,
-                    k: Int): DataFrame = {
-    val probes = vectors.select(col(idCol).as("probe_id"),
-      col(vecCol).as("probe_vec"))
-    bruteForceTopKFused(vectors, idCol, vecCol, probes, "probe_id",
-        "probe_vec", k + 1)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("probe_id")).orderBy(desc("score"), col("vec_id"))))
-      .filter(col("__rn") <= k).drop("__rn")
-      .select(col("probe_id").as("src_id"), col("vec_id").as("dst_id"),
-        col("score"))
   }
 
   /**
@@ -1083,7 +1034,7 @@ object Similarity {
    * cosine re-rank down to k — recall recovers what PQ's ranking error
    * loses at the cost of rerankFrom × probes full-width vector reads
    * (a broadcast-candidate semi-join against the corpus, never a
-   * corpus-wide float scan). Measured operating curve (ScaleProbe
+   * corpus-wide float scan). Measured operating curve (SCALE.md
    * `ivfpq256`, 128k vectors, m=4/k=256 books, k=10): recall 0.835
    * ADC-only → 0.980 at rerankFrom=2k → 1.000 at 4k → 1.000 at 8k,
    * with wall flat across the sweep (re-rank cost is invisible inside

@@ -165,7 +165,7 @@ object QuantileSketch {
    * search plus one `System.arraycopy` shift (a memmove, not a per-node
    * cons rebuild), so the O(k·ln(n/k)) accepted inserts cost
    * microseconds each at k = 16,384 instead of the List's ~16k-cell
-   * reallocation. Probe: ScaleProbe `qsketchk` — per-row cost flat in
+   * reallocation. Measured (SCALE.md `qsketchk`): per-row cost flat in
    * k on reject-dominated input. `reduce` mutates the buffer in place
    * and returns it (the Aggregator contract allows this; capacity grows
    * ×2 up to k so tiny groups never allocate 16k slots); `merge`

@@ -124,15 +124,14 @@ object GraftFunctions {
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injects the
   * full graft Catalyst set at session build time (SURVEY §2.10 path c):
-  * the codegen'd functions, the fused top-k planner strategy, AND the
-  * [[graft.plans.FuseCosineTopK]] optimizer rule that rewrites the
-  * declarative rank-filtered cosine pattern into the fused operator —
-  * the config-only superset of `GraftFunctions.register` +
-  * `GraftStrategy.install`. */
+  * the codegen'd functions and [[graft.plans.GraftPlanner]]'s planner
+  * strategy and optimizer rule — the same set
+  * `graft.core.GraftSession.configure` installs into every graft
+  * session. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.FuseCosineTopK)
+    graft.plans.GraftPlanner.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    graft.plans.GraftPlanner.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  * (`spark.sql.adaptive.skewJoin.enabled`, on by default here) before
  * reaching for manual key replication.
  *
- * Measured on an injected hot key (ScaleProbe `skewjoin`: 9.6M-row fact,
+ * Measured on an injected hot key (SCALE.md r7 `skewjoin`: 9.6M-row fact,
  * HALF the rows on one key, broadcast disabled, sf0.1 ×64): plain SMJ
  * 2.36 s; AQE skew split (fired, `skew=true` in the final plan) 1.89 s;
  * manual salting (salts=8) 1.20 s; salting + AQE 1.22 s. Reading:

@@ -599,7 +599,7 @@ object ExtMultimodalQueries {
       // The second variant's ids shift by a DERIVED stride —
       // max(doc_id) + 1, broadcast as a 1-row frame — never a literal:
       // a literal stride silently collides once the fixture grows (the
-      // same rule AmpBench and ScaleProbe enforce for amplified
+      // same rule AmpBench enforces for amplified
       // copies). The oracle computes the identical max in SQL.
       val shift = broadcast(
         docs.agg((max(col("doc_id")) + lit(1L)).as("__shift")))

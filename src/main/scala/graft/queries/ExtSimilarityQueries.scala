@@ -139,12 +139,11 @@ object ExtSimilarityQueries {
 
     // Exact kNN graph over the embedding table (k=3, self excluded) —
     // the clustering/semantic-dedup building block; at corpus scale the
-    // same scoring runs within LSH/IVF candidate blocks. Runs on the
+    // same scoring runs within LSH/IVF candidate blocks. Plans as the
     // fused CosineTopK operator (one pass, bounded buffers — measured
-    // ~9× over the nested-loop + rank-window form at the fixture);
-    // `Similarity.knnGraph` keeps the portable declarative twin.
+    // ~9× over the nested-loop + rank-window form at the fixture).
     QueryDef("ext_knn_graph", (s, dir) =>
-      Similarity.knnGraphFused(
+      Similarity.knnGraph(
         Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", k = 3),
       Some("""WITH v AS (SELECT vec_id,
@@ -200,15 +199,15 @@ object ExtSimilarityQueries {
       }),
 
 
-    // Fused whole-operator top-k (custom CosineTopKExec physical node):
-    // same answer as ext_sim_topk_cosine — the SAME oracle SQL — but the
-    // plan is one pass + bounded buffers, no Exchange/Window (PlanSpec
-    // pins the shape).
+    // Fused whole-operator top-k: the declarative ext_sim_topk_cosine
+    // with the SAME oracle SQL, kept as the row whose plan pins the
+    // FuseCosineTopK rewrite (CosineTopKExec: one pass + bounded
+    // buffers, no Exchange/Window — PlanSpec).
     QueryDef("ext_sim_topk_fused", (s, dir) => {
       val vecs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val probes = vecs.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      Similarity.bruteForceTopKFused(vecs, "vec_id", "embedding",
+      Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
         probes, "probe_id", "probe_vec", k = 5)
     }, Some("""WITH v AS (SELECT vec_id,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
@@ -807,7 +806,7 @@ object ExtSimilarityQueries {
     // keyed by src + one hash agg keyed by dst (SCALE.md).
     QueryDef("ext_pagerank_knn", (s, dir) => {
       val edges = graft.ext.Graphs.pageRank(
-        Similarity.knnGraphFused(
+        Similarity.knnGraph(
           Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding", k = 3).select("src_id", "dst_id"),
         iters = 2)
@@ -849,7 +848,7 @@ object ExtSimilarityQueries {
     // frequent label (min on ties) over the SYMMETRIZED edges — integer
     // counts end to end, so the oracle replays the trajectory exactly.
     QueryDef("ext_lpa_knn", (s, dir) => {
-      val edges = Similarity.knnGraphFused(
+      val edges = Similarity.knnGraph(
         Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", k = 3).select("src_id", "dst_id")
       graft.ext.Graphs.labelPropagation(edges, iters = 2)
@@ -893,7 +892,7 @@ object ExtSimilarityQueries {
     // scaladoc); the oracle replays the identical oriented 3-join.
     QueryDef("ext_graph_triangles", (s, dir) =>
       graft.ext.Graphs.triangleStats(
-        Similarity.knnGraphFused(
+        Similarity.knnGraph(
           Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding", k = 3).select("src_id", "dst_id"))
         .withColumnRenamed("id", "vec_id"),
@@ -943,7 +942,7 @@ object ExtSimilarityQueries {
     // operations — the oracle replays the trajectory exactly.
     QueryDef("ext_graph_kcore", (s, dir) =>
       graft.ext.Graphs.kCore(
-        Similarity.knnGraphFused(
+        Similarity.knnGraph(
           Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
           "vec_id", "embedding", k = 4).select("src_id", "dst_id"),
         k = 5, iters = 2)

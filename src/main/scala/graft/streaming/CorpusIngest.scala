@@ -182,8 +182,8 @@ object CorpusIngest {
         Await.result(fs, Duration.Inf)
         spark.catalog.refreshTable(bandsT)
         spark.catalog.refreshTable(shinglesT)
-        surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
-          .write.mode("append").saveAsTable(docsT)
+        Replay.appendOneFile(
+          surv.select(col(idCol)).withColumn("__last_batch", lit(batchId)), docsT)
         spark.catalog.refreshTable(docsT)
       }
     }

@@ -27,8 +27,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * as the stream does.
  *
  * What stays per ingest, in its scaladoc: which write lands LAST (and so
- * carries the guard id), and why the rows a replay re-appends before
- * that write are absorbed by the readers.
+ * carries the guard id; it goes through [[appendOneFile]]), and why the
+ * rows a replay re-appends before that write are absorbed by the
+ * readers.
  */
 object Replay {
 
@@ -38,6 +39,18 @@ object Replay {
     if (!spark.catalog.tableExists(table)) -1L
     else spark.table(table)
       .agg(coalesce(max(col(idCol)), lit(-1L))).head().getLong(0)
+
+  /** Append `df` to `table` as ONE file — the write every guard table
+    * takes. Under the v2 committer ([[graft.core.GraftSession]]) each
+    * task's file is published by its own rename at task commit, so a
+    * multi-file append that dies mid-job can leave part of a batch — and
+    * a guard table holding part of batch b reads b as applied
+    * ([[lastIn]]), so the rest is never written. One file is published
+    * by one rename: a crash leaves all of the batch or none of it. Every
+    * append through here is batch-sized or smaller (guard ids, sketch
+    * state, per-group estimates), so one task writes it. */
+  def appendOneFile(df: DataFrame, table: String): Unit =
+    df.coalesce(1).write.mode("append").format("parquet").saveAsTable(table)
 
   /** Apply batch `batchId` at most once: `step(last)` runs iff `batchId`
     * is above the watermark `last` — `known` when the caller holds it,

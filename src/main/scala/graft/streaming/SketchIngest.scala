@@ -27,7 +27,7 @@ import graft.core.Materialize.replaceTable
  *
  * Per-trigger cost: one batch-sized register aggregation (64 rows per
  * group out of the shuffle) + a collapse of the standing register
- * table. Every append is ONE file ([[appendByBatch]]), so
+ * table. Every append is ONE file ([[Replay.appendOneFile]]), so
  * standing-table reads list O(triggers) files, not O(triggers × tasks),
  * and a crash mid-append leaves all of a batch's rows or none of them.
  * For a monitor that lives beyond thousands of triggers,
@@ -56,18 +56,6 @@ import graft.core.Materialize.replaceTable
  * the OPTIMIZE/VACUUM posture.
  */
 object SketchIngest {
-
-  /** Append `df` to `table` as ONE file. Under the v2 committer
-    * ([[graft.core.GraftSession]]) each task's file is published by its
-    * own rename at task commit, so a multi-file append that dies
-    * mid-job can leave part of a batch — and a guard table holding part
-    * of batch b reads b as applied ([[Replay.lastIn]]), so the rest is
-    * never written. One file is published by one rename: a crash leaves
-    * all of the batch or none of it. Every append here is batch-sized
-    * or smaller (sketch state, per-group estimates, per-key novelty
-    * rows), so one task writes it. */
-  private def appendByBatch(df: DataFrame, table: String): Unit =
-    df.coalesce(1).write.mode("append").format("parquet").saveAsTable(table)
 
   /** The stream wrapper of every monitor here: [[Replay.stream]] over
     * the monitor's `apply`, then the in-trigger compaction cadence (see
@@ -149,7 +137,7 @@ object SketchIngest {
         val obs = org.apache.spark.sql.Observation()
         val b = graft.core.CacheRegistry.persistTracked(
           batch.observe(obs, count(lit(1)).as("n")))
-        appendByBatch(graft.functions.KmvSketch
+        Replay.appendOneFile(graft.functions.KmvSketch
           .bottomKAgg(b, keyCol, k, Seq(groupCol))
           .select(col(groupCol), col("hash")), hashT)
         spark.catalog.refreshTable(hashT)
@@ -157,7 +145,7 @@ object SketchIngest {
         if (nNew > 0) {
           val collapsed = graft.functions.KmvSketch
             .rerank(spark.table(hashT), k, Seq(groupCol))
-          appendByBatch(
+          Replay.appendOneFile(
             graft.functions.KmvSketch.estimate(collapsed, k, Seq(groupCol))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
                 lit(nNew).as("n_new")),
@@ -233,7 +221,7 @@ object SketchIngest {
         val obs = org.apache.spark.sql.Observation()
         val b = graft.core.CacheRegistry.persistTracked(
           batch.observe(obs, count(lit(1)).as("n")))
-        appendByBatch(graft.functions.QuantileSketch
+        Replay.appendOneFile(graft.functions.QuantileSketch
           .bottomKSampleAgg(b, idCol, valCol, k, Seq(groupCol))
           .select(col(groupCol), col("hash"), col("val")), sampleT)
         spark.catalog.refreshTable(sampleT)
@@ -241,7 +229,7 @@ object SketchIngest {
         if (nNew > 0) {
           val collapsed = graft.functions.QuantileSketch
             .resample(spark.table(sampleT), k, Seq(groupCol))
-          appendByBatch(
+          Replay.appendOneFile(
             graft.functions.QuantileSketch.estimateQuantiles(collapsed,
                 Seq("p50" -> 0.5, "p90" -> 0.9), Seq(groupCol))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("m"),
@@ -320,7 +308,7 @@ object SketchIngest {
         val keys = graft.core.CacheRegistry.persistTracked(
           batch.filter(col(keyCol).isNotNull).select(keyCol).distinct()
             .observe(obs, count(lit(1)).as("n")))
-        appendByBatch(
+        Replay.appendOneFile(
           graft.functions.BloomSketch.positions(keys, keyCol, k, m)
             .select(lit(batchId).as("batch_id"), col("pos")),
           posT)
@@ -328,7 +316,7 @@ object SketchIngest {
         if (obs.get("n").asInstanceOf[Long] > 0) {
           val prior = spark.table(posT).filter(col("batch_id") < batchId)
             .select("pos").distinct()
-          appendByBatch(
+          Replay.appendOneFile(
             graft.functions.BloomSketch.mightContain(keys, keyCol, prior, k, m)
               .select(lit(batchId).as("batch_id"), col(keyCol),
                 (!col("might_contain")).as("novel")),
@@ -393,7 +381,7 @@ object SketchIngest {
           batch.filter(col(keyCol).isNotNull)
             .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
             .observe(obs, count(lit(1)).as("n")))
-        appendByBatch(
+        Replay.appendOneFile(
           counts.select(posexplode(array((0 until d).map(j =>
               graft.functions.CountMinSketch.hashIdxCol(j, col(keyCol), w)): _*))
               .as(Seq("j", "pos")), col("cnt"))
@@ -402,7 +390,7 @@ object SketchIngest {
               col("cnt")),
           cntT)
         if (obs.get("n").asInstanceOf[Long] > 0) {
-          appendByBatch(
+          Replay.appendOneFile(
             counts.orderBy(desc("cnt"), col(keyCol)).limit(topN)
               .select(lit(batchId).as("batch_id"), col(keyCol).as("key")),
             candT)
@@ -413,7 +401,7 @@ object SketchIngest {
             .groupBy(col("j"), col("pos")).agg(sum(col("cnt")).as("cnt"))
           val cand = spark.table(candT).filter(col("batch_id") <= batchId)
             .select(col("key")).distinct()
-          appendByBatch(
+          Replay.appendOneFile(
             cand.select(col("key"), posexplode(array((0 until d).map(j =>
                 graft.functions.CountMinSketch.hashIdxCol(j, col("key"), w)): _*))
                 .as(Seq("j", "pos")))
@@ -446,7 +434,7 @@ object SketchIngest {
         val obs = org.apache.spark.sql.Observation()
         val b = graft.core.CacheRegistry.persistTracked(
           batch.observe(obs, count(lit(1)).as("n")))
-        appendByBatch(
+        Replay.appendOneFile(
           graft.functions.HyperLogLog.registers(b, keyCol, Seq(groupCol)), regsT)
         spark.catalog.refreshTable(regsT)
         val nNew = obs.get("n").asInstanceOf[Long]
@@ -454,7 +442,7 @@ object SketchIngest {
           val merged = spark.table(regsT)
             .groupBy(col(groupCol), col("reg"))
             .agg(max(col("rho")).as("rho"))
-          appendByBatch(
+          Replay.appendOneFile(
             graft.functions.HyperLogLog.estimate(merged, Seq(groupCol))
               .select(lit(batchId).as("batch_id"), col(groupCol), col("est"),
                 lit(nNew).as("n_new")),
@@ -606,7 +594,7 @@ object SketchIngest {
               floor(col(valCol) / width).cast("long").as("bucket"))
             .agg(count(lit(1)).as("cnt"))
             .observe(obs, count(lit(1)).as("n")))
-        appendByBatch(
+        Replay.appendOneFile(
           counts.select(lit(batchId).as("batch_id"), col(groupCol),
             col("bucket"), col("cnt")),
           cntT)
@@ -628,7 +616,7 @@ object SketchIngest {
           def qEdge(q: Int): org.apache.spark.sql.Column =
             min(when(col("cum") * 100 >= col("n") * q,
               col("bucket").cast("double") * width))
-          appendByBatch(
+          Replay.appendOneFile(
             cum.groupBy(col(groupCol))
               .agg(max(col("n")).as("n"), qEdge(50).as("p50"),
                 qEdge(90).as("p90"), qEdge(99).as("p99"))
@@ -690,7 +678,7 @@ object SketchIngest {
             .agg(sum(floor(col(valCol) * 1e6).cast("long")).as("s_micro"),
               count(lit(1)).as("c"))
             .observe(obs, count(lit(1)).as("n")))
-        appendByBatch(
+        Replay.appendOneFile(
           counts.select(lit(batchId).as("batch_id"), col(groupCol),
             col("day"), col("s_micro"), col("c")),
           dailyT)
@@ -706,7 +694,7 @@ object SketchIngest {
           val scored = graft.ops.Windows.cusum(
             daily.withColumn("mu", mu), Seq(groupCol), "day", "x",
             mean = col("mu"), slack = lit(slack))
-          appendByBatch(
+          Replay.appendOneFile(
             scored.groupBy(col(groupCol))
               .agg(count(lit(1)).as("n_days"),
                 round(max(col("cusum_up")) + lit(1e-9), 6).as("max_up"),

@@ -104,8 +104,8 @@ object VectorIngest {
           buckets = 8, bucketCols = Seq("bucket"))
         spark.catalog.refreshTable(vecsT)
         // watermark write LAST (replay-exactness argument in the scaladoc)
-        surv.select(col(idCol)).withColumn("__last_batch", lit(batchId))
-          .write.mode("append").saveAsTable(idsT)
+        Replay.appendOneFile(
+          surv.select(col(idCol)).withColumn("__last_batch", lit(batchId)), idsT)
         spark.catalog.refreshTable(idsT)
       }
     }

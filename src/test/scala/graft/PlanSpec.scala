@@ -48,8 +48,16 @@ class PlanSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1)
   }
 
+  /** The plan with the fused top-k rewrite excluded: the declarative
+    * reference plan. */
+  private def declarativePlan(name: String): String = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.FuseCosineTopK")
+    try plan(name) finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
   test("sim_topk: probes broadcast; vectors never shuffle before scoring") {
-    val p = plan("ext_sim_topk_cosine")
+    // the declarative plan, which every graft session fuses (pinned below)
+    val p = declarativePlan("ext_sim_topk_cosine")
     assert(p.contains("BroadcastNestedLoopJoin"))
     // the only hash exchange is the tiny (probe, id, score) rank input
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 1)
@@ -158,6 +166,18 @@ class PlanSpec extends SparkSpec {
       !p.contains("Exchange rangepartitioning") && !p.contains("Window"),
       "fused top-k must not shuffle scored rows or run a rank window")
   }
+
+  // the declarative top-k (plain, under a trailing score filter) and the
+  // self-excluding kNN graph: FuseCosineTopK fires in a GraftSession, so
+  // no scored pair is shuffled to a rank Window
+  for (name <- Seq("ext_sim_topk_cosine", "ext_adv_sim_topk", "ext_knn_graph"))
+    test(s"$name plans the fused CosineTopK: no scored-pair exchange, no window") {
+      val p = plan(name)
+      assert(p.contains("CosineTopK"), s"the rule must fuse $name:\n$p")
+      assert(!p.contains("Exchange hashpartitioning") &&
+        !p.contains("Exchange rangepartitioning") && !p.contains("Window"),
+        s"$name must not shuffle scored pairs or run a rank window:\n$p")
+    }
 
   test("ann-jl two-stage top-k runs the bounded aggregator, never a rank window") {
     val p = plan("ext_sim_ann_jl")

@@ -158,15 +158,20 @@ class PropertySpec extends SparkSpec {
       val k = 1 + rnd.nextInt(8)
       val n = rnd.nextInt(40)
       // duplicate scores on purpose: the id tiebreak must decide; ids
-      // distinct to mirror the exec's contract (one offer per vector)
-      val xs = Seq.fill(n)((rnd.nextInt(5).toDouble / 4d, rnd.nextInt(1000).toLong))
+      // distinct to mirror the exec's contract (one offer per vector).
+      // NaN scores rank first (Spark's double order) and NULL ids (None)
+      // before every id (ASC NULLS FIRST).
+      val xs = Seq.fill(n)((
+          if (rnd.nextInt(10) == 0) Double.NaN else rnd.nextInt(5).toDouble / 4d,
+          if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(1000).toLong)))
         .distinctBy(_._2)
       val buf = new graft.plans.TopKBuffer(k)
-      xs.foreach { case (s, id) => buf.offer(s, id) }
-      val got = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-      buf.foreach((s, id) => got += ((s, id)))
-      val want = xs.sortBy { case (s, id) => (-s, id) }.take(k)
-      assert(got.toList == want.toList, s"trial $trial k=$k")
+      xs.foreach { case (s, id) => buf.offer(s, id.isEmpty, id.getOrElse(0L)) }
+      val got = scala.collection.mutable.ArrayBuffer.empty[(Double, Option[Long])]
+      buf.foreach((s, z, id) => got += ((s, if (z) None else Some(id))))
+      val want = xs.sortBy { case (s, id) =>
+        (if (s.isNaN) Double.NegativeInfinity else -s, id.getOrElse(Long.MinValue)) }.take(k)
+      assert(got.toList.map(_.toString) == want.toList.map(_.toString), s"trial $trial k=$k")
     }
   }
 

@@ -153,23 +153,6 @@ class SimilaritySpec extends SparkSpec {
       "null element treated as 0")
   }
 
-  test("fused CosineTopKExec is bit-identical to the declarative brute force") {
-    val vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val probes = vecs.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val declarative = rows(Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
-      probes, "probe_id", "probe_vec", k = 5))
-    val fused = rows(Similarity.bruteForceTopKFused(vecs, "vec_id", "embedding",
-      probes, "probe_id", "probe_vec", k = 5))
-    assert(fused == declarative)
-    // partitioning must not change the answer (partial buffers merge exactly)
-    val fused7 = rows(Similarity.bruteForceTopKFused(vecs.repartition(7), "vec_id",
-      "embedding", probes, "probe_id", "probe_vec", k = 5))
-    assert(fused7 == declarative)
-  }
-
   test("ANN recall vs brute force across bits; hamming-1 multiprobe recovers it") {
     val vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val probes = vecs.filter(col("vec_id") % 25 === 0)
@@ -286,16 +269,6 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("d", abs(col("mean_val") - col("true_mean")))
     // fixed-point quantization (5e-7) + final 6-digit rounding (5e-7)
     assert(drift.filter(col("d") > 1.1e-6).count() == 0)
-  }
-
-  test("fused kNN graph equals the declarative window form, row for row") {
-    val vecs = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding")).limit(120)
-    val declarative = Similarity.knnGraph(vecs, "vec_id", "embedding", k = 3)
-    val fused = Similarity.knnGraphFused(vecs, "vec_id", "embedding", k = 3)
-    assert(fused.count() == declarative.count())
-    assert(fused.exceptAll(declarative).isEmpty &&
-      declarative.exceptAll(fused).isEmpty)
   }
 
   test("approximate kNN graph: recall >= 0.9 at documented setting, no broadcast needed") {
@@ -499,7 +472,7 @@ class SimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("probe_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Similarity.bruteForceTopKFused(base, "vec_id", "e",
+    val exact = pairs(Similarity.bruteForceTopK(base, "vec_id", "e",
       probes, "probe_id", "pe", k = 5))
     val plain = pairs(Similarity.ivfPqTopK(base, "vec_id", "e",
       probes, "probe_id", "pe", books, k = 5, nlist = 8, nprobe = 4))

@@ -376,10 +376,13 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.StreamingQuery
-    import graft.streaming.SketchIngest
-    /** One monitor: its tables (guard last) and how it starts. */
+    import graft.streaming.{CorpusIngest, SketchIngest, VectorIngest}
+    /** One monitor: its tables (guard last), how it starts, the guard's
+      * batch column, and whether its index tables keep the rows a replay
+      * re-appends (duplicates its readers absorb: compared as sets). */
     case class Monitor(name: String, tables: Seq[String],
-                       start: (DataFrame, String, Option[String]) => StreamingQuery)
+                       start: (DataFrame, String, Option[String]) => StreamingQuery,
+                       guardCol: String = "batch_id", replayDupes: Boolean = false)
     // compactEvery = 2 compacts every state table after batch 3 on both
     // runs, so the crashed run's replay dupes must be folded away and
     // every table must equal the twin's as a multiset
@@ -402,7 +405,15 @@ class StreamingSpec extends SparkSpec {
           compactEvery = 2)),
       Monitor("cusum", Seq("_cusum_daily", "_cusum_traj"), (st, p, cp) =>
         SketchIngest.cusumIngest(st, "value", "day", "grp", p, slack = 1d, cp,
-          compactEvery = 2)))
+          compactEvery = 2)),
+      Monitor("neardup", Seq("_bands", "_shingles", "_docs"), (st, p, cp) =>
+        CorpusIngest.nearDupIngest(st.select(col("id"), concat_ws(" ", lit("doc"),
+          col("id").cast("string"), col("key"), col("grp")).as("text")),
+          "id", "text", p, checkpoint = cp), "__last_batch", replayDupes = true),
+      Monitor("embed", Seq("_vecs", "_ids"), (st, p, cp) =>
+        VectorIngest.embedIngest(st.select(col("id"), transform(
+          sequence(lit(1), lit(64)), i => sin(col("id") * i + col("value"))).as("vec")),
+          "id", "vec", p, checkpoint = cp), "__last_batch", replayDupes = true))
     // 4 chunks of 40 rows over 6 groups and ~50 keys: every guard append
     // has rows for several groups or keys
     val chunks = (0 until 4).map(c => (c * 40L until (c + 1) * 40L)
@@ -441,7 +452,7 @@ class StreamingSpec extends SparkSpec {
         // append loses all of it, and the restart must re-run the batch
         val guard = cra + m.tables.last
         spark.catalog.refreshTable(guard)
-        val files = spark.table(guard).filter(col("batch_id") === 2L)
+        val files = spark.table(guard).filter(col(m.guardCol) === 2L)
           .select(input_file_name()).distinct().as[String].collect()
           .map(f => new java.io.File(new java.net.URI(f)))
         assert(files.nonEmpty, s"${m.name}: batch 2 wrote no guard rows")
@@ -458,7 +469,10 @@ class StreamingSpec extends SparkSpec {
           s"${m.name}: the restart must re-run the uncommitted batch")
         for (p <- Seq(cra, twn); t <- m.tables) spark.catalog.refreshTable(p + t)
         for (t <- m.tables) {
-          val (a, b) = (spark.table(cra + t), spark.table(twn + t))
+          def read(p: String) =
+            if (m.replayDupes && t != m.tables.last) spark.table(p + t).distinct()
+            else spark.table(p + t)
+          val (a, b) = (read(cra), read(twn))
           assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
             s"${m.name}: $t differs from the never-crashed twin " +
               s"(batch 2's guard append was ${files.length} file(s), one deleted)")
